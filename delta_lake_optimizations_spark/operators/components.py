@@ -7,10 +7,15 @@ e.g. the BigQuery/Spark CC literature): every vertex repeatedly adopts the
 smallest component id among itself and its neighbors until fixpoint.
 
 Scale properties: each iteration is one equi-join + one groupBy (both
-shuffle on vertex id, so AQE coalesces/skew-handles them); iteration count
-is O(log(diameter)) for typical near-dup graphs (tiny clusters → 2-3
-rounds). Frames are persisted per round and the loop stops on a
-driver-side scalar (count of changed labels), not a collect of data.
+shuffle on vertex id, so AQE coalesces/skew-handles them); a label moves
+one hop per round, so the round count is the largest distance from a
+component's min-id vertex (tiny near-dup clusters → 1-3 rounds). A
+component needing more than ``max_iter`` rounds comes back with
+unconverged labels. Each round's frame is materialized with an eager
+``localCheckpoint``, so every round plans over a short lineage instead of
+the whole upstream pair pipeline (GraphFrames cuts lineage the same way
+with its ``checkpointInterval``), and the loop stops on a driver-side
+scalar (count of changed labels), not a collect of data.
 """
 
 from __future__ import annotations
@@ -28,17 +33,26 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """Return ``(vertex, component)`` where component = min vertex id
-    reachable. Vertices are everything appearing in ``edges``."""
+    reachable. Vertices are everything appearing in ``edges``.
+
+    The symmetric edge set, the initial labels and every round's labels
+    are local checkpoints: a round reads the previous round's
+    materialized blocks, and its ``_chg`` column (neighbor min below own
+    label) is counted on the same checkpointed frame, so the convergence
+    test needs no join of new labels against old ones. The trade: local
+    checkpoints live in executor storage and are not written to reliable
+    storage, so a lost executor fails the job instead of recomputing the
+    lost blocks from lineage."""
     sym = (
         edges.select(F.col(src).alias("v"), F.col(dst).alias("w"))
         .union(edges.select(F.col(dst).alias("v"), F.col(src).alias("w")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     labels = (
         sym.groupBy("v").agg(F.min("w").alias("nbr_min"))
         .select("v", F.least("v", "nbr_min").alias("component"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     for _ in range(max_iter):
@@ -48,24 +62,19 @@ def connected_components(
             .groupBy("v")
             .agg(F.min("component").alias("nbr_comp"))
         )
-        new_labels = (
+        rnd = (
             labels.join(nbr, "v", "left")
             .select(
                 "v",
                 F.least("component", F.coalesce("nbr_comp", "component")).alias("component"),
+                F.coalesce(F.col("nbr_comp") < F.col("component"), F.lit(False)).alias("_chg"),
             )
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "v")
-            .filter(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
+        changed = rnd.filter("_chg").count()
+        labels = rnd.drop("_chg")
         if changed == 0:
             break
-    sym.unpersist()
     return labels.select(F.col("v").alias("vertex"), "component")
 
 
@@ -122,10 +131,11 @@ def pagerank(
     contribution join (rank/degree scattered along edges) + one groupBy
     sum — both shuffle on vertex id, the same key every round, so AQE
     reuses the partitioning; dangling-mass and teleport terms are scalar
-    arithmetic folded into the update. Frames persist per round and the
-    previous round is unpersisted — memory stays one frame deep, the
-    standard Spark iterative pattern (checkpoint every ~15 rounds at
-    cluster scale to cut lineage; 10 rounds here stays well under that).
+    arithmetic folded into the update. Each round's ranks are an eager
+    ``localCheckpoint``, so a round plans over the previous round's
+    materialized blocks rather than every earlier round's lineage (the
+    same trade as ``connected_components``: a lost executor fails the job
+    instead of recomputing its blocks).
 
     For near-dup graphs the ranks surface CANONICAL documents: the
     highest-rank vertex of each duplicate cluster is the best keep-one
@@ -141,7 +151,7 @@ def pagerank(
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     links = e.join(deg, "u").persist()  # (u, w, deg(u)) — reused every round
 
-    ranks = verts.select("v", F.lit(1.0 / n).alias("rank")).persist()
+    ranks = verts.select("v", F.lit(1.0 / n).alias("rank"))
     for _ in range(n_iter):
         contribs = (
             links.join(ranks, links["u"] == ranks["v"])
@@ -152,7 +162,7 @@ def pagerank(
         # undirected symmetric graphs have no dangling vertices (every
         # vertex in `verts` has degree >= 1), so the teleport term alone
         # closes the mass balance
-        new_ranks = (
+        ranks = (
             verts.join(contribs, "v", "left")
             .select(
                 "v",
@@ -161,11 +171,10 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("recv"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        new_ranks.count()  # materialize before dropping the parent
-        ranks.unpersist()
-        ranks = new_ranks
+    for f in (e, verts, links):
+        f.unpersist()
     return ranks.select(F.col("v").alias("vertex"), F.round("rank", 8).alias("rank"))
 
 

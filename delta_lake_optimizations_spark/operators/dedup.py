@@ -387,15 +387,19 @@ def minhash_lsh_pairs(
         # (min, member) edges that replaced them fall below threshold and
         # drop). The parity twin proves equality only while no bucket
         # exceeds the cap on the tested corpora; at scale the cap bounds
-        # cost and accepts that bounded recall loss. One
-        # extra hash aggregate on the same bucket key — the join below
-        # reuses its partitioning.
-        stats = banded.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("_bsz"),
-            F.min("_id").alias("_bmin"),
-            F.min_by("signature", "_id").alias("_bsig"),
+        # cost and accepts that bounded recall loss. The bucket sizes come
+        # from window aggregates over the banded rows, so the whole capped
+        # branch shares ONE bucket exchange: the self-join below and the
+        # star filter both read the window's bucket-partitioned output.
+        # A groupBy + join-back instead plans the signature subtree once
+        # per consumer.
+        bucket = Window.partitionBy("bucket")
+        sized = banded.select(
+            "*",
+            F.count(F.lit(1)).over(bucket).alias("_bsz"),
+            F.min("_id").over(bucket).alias("_bmin"),
+            F.min_by("signature", "_id").over(bucket).alias("_bsig"),
         )
-        sized = banded.join(stats, "bucket")
         small = sized.filter(F.col("_bsz") <= max_bucket_size)
         small_right = small.select(
             F.col("_id").alias("_id2"),
@@ -984,13 +988,13 @@ def drop_covered_tokens(
                     kept = tl
                 else:
                     diff = np.zeros(n + 1, dtype=np.int64)
-                    # clip starts into [0, n]: a start at n covers nothing
-                    # (the old anti-join silently ignored out-of-range
-                    # positions; current producers only emit in-range
-                    # starts, but this helper is shared)
-                    pa = np.minimum(np.asarray(ps, dtype=np.int64), n)
-                    np.add.at(diff, pa, 1)
-                    np.add.at(diff, np.minimum(pa + k, n), -1)
+                    # clip both ends of [p, p+k) into [0, n] from the raw
+                    # start: a start at n covers nothing, a negative start
+                    # covers only its in-range tail (current producers only
+                    # emit in-range starts, but this helper is shared)
+                    pa = np.asarray(ps, dtype=np.int64)
+                    np.add.at(diff, np.clip(pa, 0, n), 1)
+                    np.add.at(diff, np.clip(pa + k, 0, n), -1)
                     covered = np.cumsum(diff[:n]) > 0
                     kept = [tok for tok, c in zip(tl, covered) if not c]
                 ids.append(i)

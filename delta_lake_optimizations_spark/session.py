@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 
 def _default_driver_mem() -> str:
-    """~1 GB per local task thread, FLOORED ON THE WORKLOAD (16g), bounded
+    """~1 GB per local task thread, FLOORED ON THE WORKLOAD (24g), bounded
     by half of physical RAM.
 
     r12 (VERDICT r11 #1): the floor used to be 8g, which sized the heap to

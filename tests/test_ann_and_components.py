@@ -545,3 +545,107 @@ def test_cap_no_op_when_buckets_small(spark):
         ).collect()
     }
     assert capped == uncapped
+
+
+# minhash_lsh_pairs rows (doc_a, doc_b, est_jaccard) on the sf0.001 fixture
+# corpus (conftest's default SF_DIR) at threshold 0.5, recorded before the capped branch sized its buckets with
+# window aggregates. No fixture bucket exceeds 8 members, so every cap
+# yields these rows.
+_PINNED_FIXTURE_PAIRS = [
+    (0, 50, 0.96875),
+    (0, 82, 0.9375),
+    (5, 450, 0.9375),
+    (8, 12, 0.984375),
+    (8, 120, 1.0),
+    (8, 360, 1.0),
+    (12, 120, 0.984375),
+    (12, 360, 0.984375),
+    (16, 369, 1.0),
+    (26, 176, 0.96875),
+    (33, 436, 0.890625),
+    (45, 487, 0.953125),
+    (50, 82, 0.90625),
+    (56, 157, 0.96875),
+    (77, 459, 1.0),
+    (89, 114, 0.9375),
+    (99, 174, 0.984375),
+    (110, 467, 1.0),
+    (119, 425, 0.96875),
+    (120, 360, 1.0),
+    (144, 161, 0.984375),
+    (211, 404, 0.953125),
+    (229, 263, 0.953125),
+    (260, 391, 1.0),
+    (270, 329, 0.984375),
+    (328, 428, 0.96875),
+    (349, 411, 0.984375),
+    (474, 498, 1.0),
+]
+
+# (row count, sha256 of the sorted row list's repr) on the fixture corpus
+# plus _flood_docs, recorded with the same code as _PINNED_FIXTURE_PAIRS.
+# The flood shares band buckets larger than 8, so cap 8 takes the star path.
+_PINNED_FLOOD_PAIRS = {
+    None: (304, "9aaf997fce977cc668a3c7d4ffde3986611bd0d8b649a66ab74340c87927b601"),
+    8: (107, "0bc22530e860290892fd1f61c9e790c8eb015f961fd3506ffc7a9fe6bb1a2ddd"),
+    512: (304, "9aaf997fce977cc668a3c7d4ffde3986611bd0d8b649a66ab74340c87927b601"),
+}
+
+
+def _flood_docs(spark):
+    """24 one-word variants of one 40-word text (est. Jaccard 0.70-1.0)."""
+    base = [f"w{j}" for j in range(40)]
+    rows = []
+    for i in range(24):
+        toks = list(base)
+        toks[(7 * i) % 40] = f"v{i}"
+        rows.append((10_000 + i, " ".join(toks)))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _pair_rows(df, cap):
+    return sorted(
+        (r["doc_a"], r["doc_b"], r["est_jaccard"])
+        for r in minhash_lsh_pairs(
+            df, "doc_id", "text", threshold=0.5, max_bucket_size=cap
+        ).collect()
+    )
+
+
+def test_minhash_lsh_pairs_pinned_rows(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    for cap in (None, 8, 512):
+        assert _pair_rows(docs, cap) == _PINNED_FIXTURE_PAIRS, cap
+
+
+def test_minhash_lsh_pairs_pinned_rows_star_path(spark):
+    import hashlib
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    df = docs.unionByName(_flood_docs(spark))
+    for cap, pin in _PINNED_FLOOD_PAIRS.items():
+        rows = _pair_rows(df, cap)
+        assert (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()) == pin, cap
+
+
+def test_connected_components_multi_round_path(spark):
+    """A 32-vertex path with shuffled, non-monotone ids: min labels travel
+    one hop per round, so this runs many rounds (the near-dup corpora
+    converge on their initial labels). The returned frame must plan over
+    the last round's checkpoint, not over the edge lineage."""
+    import random
+
+    ids = [7 * i + 3 for i in range(32)]
+    random.Random(0).shuffle(ids)
+    edge_list = list(zip(ids, ids[1:]))
+    edges = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
+    want = _union_find_ground_truth(edge_list)
+
+    one_round = connected_components(edges, max_iter=1)
+    assert {r["vertex"]: r["component"] for r in one_round.collect()} != want
+
+    # a path needs up to (length - 1) propagation rounds
+    comp = connected_components(edges, max_iter=len(ids) - 1)
+    assert {r["vertex"]: r["component"] for r in comp.collect()} == want
+    analyzed = comp._jdf.queryExecution().analyzed().toString()
+    assert "Join" not in analyzed and "Aggregate" not in analyzed, analyzed

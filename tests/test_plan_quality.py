@@ -320,6 +320,17 @@ def test_minhash_scaled_no_cartesian(spark):
     df = _DEFS["dedup_minhash_scaled"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+    # the survivor plan above starts at the components' last checkpoint,
+    # so check the capped bucket join on its own plan
+    from delta_lake_optimizations_spark.catalog import load_table
+    from delta_lake_optimizations_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = load_table(spark, SF_DIR, "documents")
+    pairs = minhash_lsh_pairs(
+        docs, "doc_id", "text", threshold=0.5, max_bucket_size=512
+    )
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
 
 
 def test_partitioned_join_gets_dynamic_partition_pruning(spark, tmp_path):

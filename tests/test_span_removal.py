@@ -64,6 +64,30 @@ def test_canonical_is_min_doc_then_position(spark):
     assert rows[2]["clean_text"] == "z2"
 
 
+def test_drop_covered_tokens_clips_out_of_range_starts(spark):
+    # both ends of [p, p+k) clip from the raw start: a start of -2 with
+    # k=3 covers only token 0, and a start at n covers nothing
+    from pyspark.sql import functions as F
+
+    from delta_lake_optimizations_spark.operators.dedup import (
+        drop_covered_tokens,
+        tokenize,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "p q r s")], "doc_id int, text string"
+    )
+    starts = spark.createDataFrame([(1, -2), (2, 4)], "doc_id int, _p int")
+    rows = {
+        r["doc_id"]: r
+        for r in drop_covered_tokens(
+            docs, "doc_id", tokenize(F.col("text")), starts, 3
+        ).collect()
+    }
+    assert rows[1]["clean_text"] == "b c d e" and rows[1]["n_removed"] == 1
+    assert rows[2]["clean_text"] == "p q r s" and rows[2]["n_removed"] == 0
+
+
 def test_remove_repeated_spans_oracle_parity(spark, duck):
     qd = _DEFS["dedup_remove_repeated_spans"]
     compare_spark_duckdb(qd.fn(spark, SF_DIR), duck, qd.oracle)
