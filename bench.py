@@ -161,26 +161,18 @@ def _bench_workshop_scale(spark, n_rows: int, n_files: int) -> dict:
     return out
 
 
-def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
+def _bench_ann_index(spark, dim: int = 64) -> dict:
     """VERDICT r04 #1 acceptance: the materialized LSH index must beat
     brute force end-to-end (``speedup_vs_bruteforce > 1.0``) at a small
     candidate fraction (``< 0.1``), with the probe riding the engine's own
     file skipping.
 
-    Two sub-measurements:
-
-    - **covering** (r04-comparable: 100k uniform vectors): the single-copy
-      covering index at the registered Hamming<=1 dial. Honest finding: the
-      bit-compare filter is unpushable, so the scan still DECODES the
-      vector column for every row — the covering path cannot beat a brute
-      scan at toy scale and its numbers are reported as covering_* only.
-    - **sharded** (the headline; 400k clustered vectors — realistic
-      geometry, uniform is LSH's worst case and is covered by the
-      covering block's recall number): postings exploded per table, keyed
-      by ``tc = table<<planes | code``, range-sharded + sorted so a probe
-      reads only the files whose tc range contains a probed bucket. IO —
-      including vector decode — is O(candidates); this is the layout that
-      wins end-to-end and scales.
+    Clustered corpora (realistic geometry; uniform is LSH's worst case) at
+    800k and 3.2M vectors, one index per ANN family: the sharded LSH index
+    (postings exploded per table, keyed by ``tc = table<<planes | code``,
+    range-sharded + sorted so a probe reads only the files whose tc range
+    contains a probed bucket — IO, including vector decode, is
+    O(candidates)), IVF-Flat, and IVF-PQ with exact refine.
     """
     import shutil
     import statistics
@@ -189,9 +181,7 @@ def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
     from delta_lake_optimizations_spark.operators.lsh_index import (
         N_TABLES_SHARDED,
         PROBE_HAMMING_INDEXED,
-        ann_topk_from_index,
         ann_topk_from_sharded,
-        build_lsh_index,
         build_lsh_sharded_index,
         sharded_probe_files_scanned,
     )
@@ -199,86 +189,10 @@ def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
     from delta_lake_optimizations_spark.operators.similarity import topk_cosine
     from delta_lake_optimizations_spark.table import GraftTable
 
-    h = PROBE_HAMMING_INDEXED
     root = tempfile.mkdtemp(prefix="bench_annidx_")
-    out: dict = {"n_vectors": n_vectors, "dim": dim, "probe_hamming": h}
-
-    def warm_shape_med(fn, qvecs):
-        for qv in qvecs:
-            fn(qv)
-        times = []
-        for qv in qvecs:
-            t0 = time.perf_counter()
-            fn(qv)
-            times.append(time.perf_counter() - t0)
-        return round(statistics.median(times), 4)
+    out: dict = {"dim": dim, "probe_hamming": PROBE_HAMMING_INDEXED}
 
     try:
-        # ---- covering block (uniform corpus, r04-comparable) ----
-        generated = spark.range(n_vectors).select(
-            F.col("id").alias("vec_id"),
-            hash_embed(F.col("id").cast("string"), dim=dim).alias("embedding"),
-        )
-        base = GraftTable(spark, os.path.join(root, "base"))
-        base.write(generated)
-        corpus = base.load()
-        t0 = time.perf_counter()
-        t = build_lsh_index(spark, corpus, os.path.join(root, "idx"), dim)
-        out["index_build_sec"] = round(time.perf_counter() - t0, 4)
-        indexed = t.load()
-
-        qvecs = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.filter(F.col("vec_id") < 5).collect()
-        ]
-        out["covering_bruteforce_med_sec"] = warm_shape_med(
-            lambda qv: topk_cosine(corpus, qv, k=10).count(), qvecs
-        )
-        out["covering_query_med_sec"] = warm_shape_med(
-            lambda qv: ann_topk_from_index(indexed, qv, k=10, probe_hamming=h).count(),
-            qvecs,
-        )
-        n_cand, recalls = 0, []
-        for qv in qvecs:
-            exact_ids = {r[0] for r in topk_cosine(corpus, qv, k=10).collect()}
-            approx = ann_topk_from_index(indexed, qv, k=10, probe_hamming=h)
-            approx_ids = {r[0] for r in approx.collect()}
-            recalls.append(len(exact_ids & approx_ids) / max(1, len(exact_ids)))
-            from delta_lake_optimizations_spark.operators.lsh_index import query_codes
-
-            cond = None
-            for ti, qc in enumerate(query_codes(qv)):
-                hit = F.bit_count(F.col(f"lsh_code_{ti}").bitwiseXOR(F.lit(qc))) <= h
-                cond = hit if cond is None else (cond | hit)
-            n_cand += indexed.filter(cond).count()
-        out["covering_candidate_fraction"] = round(n_cand / (len(qvecs) * n_vectors), 4)
-        out["recall_at_10_uniform"] = round(statistics.mean(recalls), 3)
-
-        # margin-ranked multi-probe (Multi-Probe LSH, VLDB'07) at the SAME
-        # per-table probe count as the Hamming<=1 ball above (13 codes):
-        # equal candidate budget, buckets chosen by the query's hyperplane
-        # margins — the recall delta is pure bucket-choice quality.
-        from delta_lake_optimizations_spark.operators.lsh_index import (
-            ann_topk_from_index_ranked,
-            ranked_probe_lists,
-        )
-
-        n_cand_r, recalls_r = 0, []
-        for qv in qvecs:
-            exact_ids = {r[0] for r in topk_cosine(corpus, qv, k=10).collect()}
-            got = {
-                r[0]
-                for r in ann_topk_from_index_ranked(indexed, qv, k=10, budget=13).collect()
-            }
-            recalls_r.append(len(exact_ids & got) / max(1, len(exact_ids)))
-            cond = None
-            for ti, probes in enumerate(ranked_probe_lists(qv, 13, 16)):
-                hit = F.col(f"lsh_code_{ti}").isin(*probes)
-                cond = hit if cond is None else (cond | hit)
-            n_cand_r += indexed.filter(cond).count()
-        out["ranked_candidate_fraction"] = round(n_cand_r / (len(qvecs) * n_vectors), 4)
-        out["recall_at_10_uniform_ranked"] = round(statistics.mean(recalls_r), 3)
-
         # ---- clustered-corpus scale points (the headline numbers) ----
         # VERDICT r08 #1a/#2: the old protocol (1 discarded warm + 1
         # timed rep per query) let the brute baseline swing 7.8x between
@@ -421,16 +335,13 @@ def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
                 "ivfpq": lambda qv: ann_topk_from_ivfpq_index(
                     ivfpq_t, qv, k=10, nprobe=nprobe, refine_factor=pq_rf
                 ).count(),
-                "ivfpq_sq8": lambda qv: ann_topk_from_ivfpq_index(
-                    ivfpq_t, qv, k=10, nprobe=nprobe, refine_factor=pq_rf,
-                    refine="sq8").count(),
             }
             for fam, fn in families.items():
                 cold, med, spread = pinned(fn)
                 res[f"{fam}_cold_first_sec"] = cold
                 res[f"{fam}_warm_med_sec"] = med
                 res[f"{fam}_warm_spread_sec"] = spread
-            for fam in ("sharded", "ivf", "ivfpq", "ivfpq_sq8"):
+            for fam in ("sharded", "ivf", "ivfpq"):
                 res[f"{fam}_speedup_vs_bruteforce"] = round(
                     res["bruteforce_warm_med_sec"] / res[f"{fam}_warm_med_sec"], 2
                 )
@@ -468,9 +379,6 @@ def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
                     ivf_t, qv, k=10, nprobe=nprobe),
                 "ivfpq": lambda qv: ann_topk_from_ivfpq_index(
                     ivfpq_t, qv, k=10, nprobe=nprobe, refine_factor=pq_rf),
-                "ivfpq_sq8": lambda qv: ann_topk_from_ivfpq_index(
-                    ivfpq_t, qv, k=10, nprobe=nprobe, refine_factor=pq_rf,
-                    refine="sq8"),
             }
             for fam, fn in approx_fns.items():
                 recs = []
@@ -518,11 +426,9 @@ def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
             "sharded_speedup_vs_bruteforce": "speedup_vs_bruteforce",
             "ivf_warm_med_sec": "ivf_query_med_sec",
             "ivfpq_warm_med_sec": "ivfpq_query_med_sec",
-            "ivfpq_sq8_warm_med_sec": "ivfpq_sq8_query_med_sec",
             "sharded_recall_at_10": "recall_at_10_clustered",
             "ivf_recall_at_10": "ivf_recall_at_10_clustered",
             "ivfpq_recall_at_10": "ivfpq_recall_at_10_clustered",
-            "ivfpq_sq8_recall_at_10": "ivfpq_sq8_recall_at_10_clustered",
             "sharded_candidate_fraction": "candidate_fraction",
         }
         out.update({legacy.get(k2, k2): v for k2, v in p800.items()})
@@ -542,7 +448,7 @@ def _bench_ann_index(spark, n_vectors: int = 100_000, dim: int = 64) -> dict:
         # the evidence: brute grows ~4x from 800k to 3.2M while the
         # indexed families stay near-flat.
         p32, _c32, _h32 = _scale_point(3_200_000, "cbase32", 3, 1, 2, 512, 100)
-        for fam in ("bruteforce", "sharded", "ivf", "ivfpq", "ivfpq_sq8"):
+        for fam in ("bruteforce", "sharded", "ivf", "ivfpq"):
             key = f"{fam}_warm_med_sec"
             p32[f"{fam}_growth_x_vs_800k"] = round(
                 p32[key] / max(1e-9, p800[key]), 2
@@ -1638,8 +1544,7 @@ def main() -> None:
         # round's graded speedup — out of the driver's parse. The compact
         # ann block now carries ONLY the graded numbers (speedups, warm
         # medians + rep spreads, recalls, batch amortization); everything
-        # else (covering/ranked/uniform diagnostics, file fractions,
-        # build times) lives in bench_detail.json.
+        # else (file fractions, build times) lives in bench_detail.json.
         compact["ann_index"] = {
             k: ann_index[k]
             for k in (
@@ -1647,9 +1552,7 @@ def main() -> None:
                 "speedup_vs_bruteforce",
                 "ivf_speedup_vs_bruteforce",
                 "ivfpq_speedup_vs_bruteforce", "ivfpq_warm_spread_sec",
-                "ivfpq_sq8_speedup_vs_bruteforce",
                 "ivfpq_recall_at_10_clustered",
-                "ivfpq_sq8_recall_at_10_clustered",
                 "bruteforce_batch_per_query_sec",
                 "sharded_batch_speedup_vs_bruteforce",
                 "ivf_batch_speedup_vs_bruteforce",

@@ -21,12 +21,10 @@ clustered bench corpus, residual PQ 0.9+ at the same dials).
   embedding)`` where ``vnorm`` is the vector's L2 norm (one double).
   Parquet is columnar, so a scan that selects only
   ``(list_id, vec_id, pq_code, vnorm)`` never decodes the embedding
-  bytes. The EXACT-refine probe deliberately reads the float column in
-  its one pass over the probed cells (r10 single-scan form — a
-  shortlist filter is not parquet-pushable, and the earlier two-pass
-  broadcast-refine read those floats anyway, twice the scans); the
-  layout's cold-column property is what the SQ8 refine exploits, whose
-  pushed-IN final read touches float bytes for k-ish row groups only.
+  bytes. The probe's exact refine reads the float column in its one
+  pass over the probed cells: a shortlist filter is not
+  parquet-pushable, and a second pass to fetch only the shortlisted
+  floats would scan the probed cells twice.
 - **metadata**: IVF centroids AND the M per-subspace PQ codebooks ride
   the table properties (JSON, values rounded to 8 dp at one choke point
   so the stored index and any inline re-derivation score bit-identically
@@ -50,11 +48,11 @@ clustered bench corpus, residual PQ 0.9+ at the same dials).
   fit, no encode, no full scan at query time.
 
 100 TB notes: at production dials (nlist=4096, m=16, ksub=256, dim=768)
-each vector is 16 code bytes + 8 id bytes hot vs 3 KB of float32 cold —
-the ADC scan reads ~0.8 % of the table bytes even before cell pruning,
-and cell pruning cuts that by nprobe/nlist again. Codebooks are
-16x256x48 floats (~1.5 MB JSON) — fine in the commit log; past that the
-bloom-sidecar pattern applies. Appends reuse ``ivf.assign_to_centroids``
+each vector is 16 code bytes + 8 id bytes vs 3 KB of float32 — the
+batch probe's code-only ADC scan reads ~0.8 % of the table bytes even
+before cell pruning, and cell pruning cuts that by nprobe/nlist again.
+Codebooks are 16x256x48 floats (~1.5 MB JSON) — fine in the commit log;
+past that the bloom-sidecar pattern applies. Appends reuse ``ivf.assign_to_centroids``
 + residual ``pq_encode_col`` against the STORED metadata, so increments
 land in the right cells with consistent codes and probes stay pruned.
 """
@@ -83,7 +81,6 @@ from delta_lake_optimizations_spark.queries.vectors import cosine, l2_norm_sq
 from delta_lake_optimizations_spark.registry import query
 
 PQ_BOOKS_PROP = "graft.ivfpq.codebooks"
-SQ8_PROP = "graft.ivfpq.sq8"  # per-dim {"vmin": [...], "scale": [...]}
 
 
 def _round_books(books: list[list[list[float]]]) -> list[list[list[float]]]:
@@ -144,105 +141,6 @@ def _train_and_encode(
     return encoded, books
 
 
-# ---------------------------------------------------------------------------
-# SQ8 warm refine column (VERDICT r07 #8, public FAISS ScalarQuantizer
-# QT_8bit technique): the exact refine re-reads the COLD float vector
-# column across all nprobe probed files just to re-rank k*rf candidates
-# — at production dims (768 x float32 = 3 KB/row) that read dominates
-# query IO. Storing a per-row int8 vector (dim bytes, 4-12x smaller)
-# as a WARM column lets the refine re-rank on the quantized vectors and
-# touch the float column only for the FINAL k rows, via a pushed IN
-# filter (k ids = bounded metadata; parquet row-group dictionary/stats
-# pruning applies inside the probed cells).
-#
-# Quantization: per-dimension affine (vmin_d, scale_d) trained on the
-# corpus min/max; code_d in [0,255] stored as tinyint (code-128).
-# Reconstruction x~_d = vmin_d + (code_d + 0.5) * scale_d, so
-# dot(q, x~) = CONST(q) + sum_d (q_d * scale_d) * code_d — one
-# zip_with/aggregate over the k*rf survivors only (never the cell scan,
-# which stays pure-codegen ADC).
-#
-# STEER (r11, VERDICT r10 #6 — measured, not assumed): use
-# ``refine='exact'`` (the default). The SQ8 crossover was hunted at
-# 300k vectors, nlist=96, nprobe=8, rf=16 across dims 64/256/512 on
-# local[32]: warm sq8-vs-exact 0.58x at dim 256 and 0.57x at dim 512
-# (sq8 LOSES), and with the page cache dropped before every probe
-# (the "cold float column" premise made real) it loses HARDER —
-# cold medians 4.1 s exact vs 15.5 s sq8 at dim 512 (0.26x). Why the
-# premise fails here: the refine is JOB-latency-bound warm (the int8
-# stage adds a whole extra scan stage while the float bytes it avoids
-# are page-cache hits), and cold it pays TWO cold scans (int8 cells +
-# IN-filtered float row groups) against exact's one. The int8 column
-# still earns its bytes as an export surface (4-8x smaller copies for
-# external engines), but on this engine's probe path there is no
-# measured dial where sq8 >= exact — steer everything to 'exact'.
-# ---------------------------------------------------------------------------
-
-
-def _sq8_train(df: DataFrame, vec_col: str) -> tuple[list[float], list[float]]:
-    """Per-dimension (vmin, scale) over the corpus — ONE map-side-partial
-    aggregation pass, no explode.
-
-    r11 (guide §2.3/§2.4): the original posexplode form materialized
-    n_rows x dim exploded rows (204.8M at the 3.2M bench point) through
-    a groupBy(_d) exchange just to reduce them straight back down to
-    dim rows. 2*dim plain min/max aggregates over the element accessors
-    compute the identical doubles (min/max are exact — no summation
-    order to preserve) with map-side partial aggregation and a
-    dim-row-wide single-row result; the explode and its exchange are
-    gone. Dim comes from one row (driver-side metadata read)."""
-    first = df.select(vec_col).first()
-    if first is None or first[0] is None:
-        return [], []
-    dim = len(first[0])
-    aggs = []
-    for d in range(dim):
-        # F.get is null-safe (out-of-range/NULL -> NULL, which min/max
-        # skip) — keeps the old posexplode form's tolerance of ragged or
-        # null vectors in malformed corpora, where ANSI-mode [] indexing
-        # would fail the whole build with INVALID_ARRAY_INDEX
-        e = F.get(F.col(vec_col), F.lit(d)).cast("double")
-        aggs.append(F.min(e).alias(f"mn{d}"))
-        aggs.append(F.max(e).alias(f"mx{d}"))
-    row = df.agg(*aggs).first()
-    vmin = [round(row[f"mn{d}"], 8) for d in range(dim)]
-    scale = [
-        round(max(row[f"mx{d}"] - row[f"mn{d}"], 1e-12) / 256.0, 12)
-        for d in range(dim)
-    ]
-    return vmin, scale
-
-
-def _sq8_encode_col(vec_col: str, vmin: list[float], scale: list[float]):
-    """array<tinyint> codes (code-128) — literal-array zip_with, build-
-    time only."""
-    vmin_arr = F.array(*[F.lit(float(x)) for x in vmin])
-    scale_arr = F.array(*[F.lit(float(s)) for s in scale])
-    centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"), vmin_arr, lambda x, mn: x - mn
-    )
-    code = F.zip_with(
-        centered,
-        scale_arr,
-        lambda t, sc: F.least(
-            F.greatest(F.floor(t / sc).cast("int"), F.lit(0)), F.lit(255)
-        )
-        - 128,
-    )
-    return F.transform(code, lambda c: c.cast("byte"))
-
-
-def ivfpq_sq8_metadata(table) -> tuple[list[float], list[float]]:
-    props = table.snapshot().properties
-    if SQ8_PROP not in props:
-        raise ValueError(
-            "index has no SQ8 warm column (built before r8) — rebuild with "
-            "build_ivfpq_index to enable refine='sq8'"
-        )
-    d = _json.loads(props[SQ8_PROP])
-    return d["vmin"], d["scale"]
-
-
 def build_ivfpq_index(
     spark,
     df: DataFrame,
@@ -266,29 +164,17 @@ def build_ivfpq_index(
         sample_fraction=sample_fraction,
     )
     centroids = _round_centroids(raw_centroids)
-    # r12 (VERDICT r11 #8, guide §2.6): _sq8_train is one map-side-partial
-    # aggregate over the raw corpus, independent of the PQ codebook fits —
-    # submit it from a driver thread so its tasks back-fill the executor
-    # slots the barrier-synchronized KMeans rounds leave idle. Results are
-    # unchanged (the two jobs share no state; min/max are order-free).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        sq8_future = _pool.submit(_sq8_train, df, vec_col)
-        encoded, books = _train_and_encode(
-            assigned, centroids, m, ksub, vec_col, seed, sample_fraction
-        )
-        vmin, scale = sq8_future.result()
-    encoded = encoded.withColumn("sq8", _sq8_encode_col(vec_col, vmin, scale))
+    encoded, books = _train_and_encode(
+        assigned, centroids, m, ksub, vec_col, seed, sample_fraction
+    )
     t = GraftTable(spark, path)
     t.write(
-        encoded.select("list_id", id_col, "pq_code", "vnorm", "sq8", vec_col),
+        encoded.select("list_id", id_col, "pq_code", "vnorm", vec_col),
         mode="overwrite",
         partition_by=["list_id"],
         properties={
             CENTROIDS_PROP: _json.dumps(centroids),
             PQ_BOOKS_PROP: _json.dumps(books),
-            SQ8_PROP: _json.dumps({"vmin": vmin, "scale": scale}),
             "graft.ivf.nlist": str(nlist),
             "graft.pq.m": str(m),
             "graft.pq.ksub": str(ksub),
@@ -460,8 +346,7 @@ def _adc_refine_topk(
     the single probe lose to an 0.64 s brute scan at the 800k bench
     point (VERDICT r09 #1). Note the scan itself still reads the float
     column for every probed row either way (the shortlist filter is not
-    parquet-pushable); the layout that avoids that read is the SQ8
-    refine (``refine='sq8'``). When ``cand`` carries the broadcast
+    parquet-pushable). When ``cand`` carries the broadcast
     ``_qv`` parameter column (``_with_adc_score``) the exact cosine
     uses it — keeping the generated code query-independent; otherwise
     the query rides as a literal array (the inline/backcompat path)."""
@@ -494,84 +379,15 @@ def ann_topk_from_ivfpq_index(
     refine_factor: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    refine: str = "exact",
 ) -> DataFrame:
-    """Top-k from the materialized IVF-PQ index (see module docstring).
-
-    ``refine='exact'`` (default): ADC top k*rf -> exact cosine re-rank
-    from the cold float column (reads the float bytes of every probed
-    cell). ``refine='sq8'``: ADC top k*rf -> re-rank on the WARM int8
-    column (dim bytes/row instead of 4-8x that) -> exact cosine only for
-    the FINAL k rows via a pushed IN filter — the float column is read
-    for k ids' row groups, not nprobe cells (the SQ8 section comment)."""
+    """Top-k from the materialized IVF-PQ index (see module docstring):
+    ADC top k*rf over the probed cells -> exact cosine re-rank from the
+    float column, in one scan."""
     centroids, books = ivfpq_metadata(table)
     probes = _probe_cells(centroids, query_vec, nprobe)
     cand = table.load(skip_where=[("list_id", "in", probes)])
     cand, score = _with_adc_score(cand, books, centroids, probes, query_vec)
-    if refine == "exact":
-        return _adc_refine_topk(
-            cand, score, query_vec, k, refine_factor, id_col, vec_col
-        )
-    if refine != "sq8":
-        raise ValueError(f"unknown refine mode {refine!r}")
-    vmin, scale = ivfpq_sq8_metadata(table)
-    qscale = [q * s for q, s in zip(query_vec, scale)]
-    # dot(q, x~) = dot(q, vmin) + (128 + 0.5) * sum(q*s) + sum_d (q_d*s_d)*c8_d
-    const = _math.fsum(q * v for q, v in zip(query_vec, vmin)) + 128.5 * _math.fsum(
-        qscale
-    )
-    qscale_arr = _const_darray([float(x) for x in qscale])
-    sq8_dot = F.aggregate(
-        F.zip_with(F.col("sq8"), qscale_arr, lambda c, s: c * s),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sq8_score = (F.lit(const) + sq8_dot) / F.greatest(
-        F.col("vnorm"), F.lit(1e-30)
-    )
-    # sq8 narrows the ADC's k*rf shortlist to k*4 (slack for quantization
-    # swaps near the boundary — k alone measured recall 0.94 vs exact's
-    # 1.0 at the 800k bench; the exact tail below re-ranks the slack
-    # away). The int8 column rides the per-partition ADC top-k heap
-    # (k*rf rows of dim bytes) so the whole shortlist is ONE scan of the
-    # warm columns — the earlier form re-scanned the probed cells and
-    # broadcast-joined the ADC shortlist back, a second pass + broadcast
-    # build whose fixed latency dominated the probe at the 800k bench
-    # (VERDICT r09 #1); the float column stays untouched either way.
-    warm = (
-        cand.select(id_col, "sq8", "vnorm", score.alias("adc_score"))
-        .orderBy(F.col("adc_score").desc(), F.col(id_col).asc())
-        .limit(k * refine_factor)
-        .select(id_col, sq8_score.alias("_sq8"))
-        .orderBy(F.col("_sq8").desc(), F.col(id_col).asc())
-        .limit(k * 4)
-    )
-    # bounded metadata collect (k*4 ids) so the final exact pass can push
-    # an IN filter into the parquet scan instead of decoding the float
-    # column for every probed row
-    final_ids = [r[0] for r in warm.collect()]
-    qlit = _const_darray([float(x) for x in query_vec])
-    if not final_ids:
-        # empty shortlist (empty/tiny index, all-null cells): isin([]) is
-        # version-dependent edge-case territory — return a typed empty
-        # frame explicitly instead
-        return (
-            table.load()
-            .select(
-                id_col,
-                F.round(cosine(F.col(vec_col), qlit), 6).alias("cos_sim"),
-            )
-            .limit(0)
-        )
-    return (
-        table.load(skip_where=[("list_id", "in", probes)])
-        .filter(F.col(id_col).isin(final_ids))
-        .select(
-            id_col, F.round(cosine(F.col(vec_col), qlit), 6).alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _adc_refine_topk(cand, score, query_vec, k, refine_factor, id_col, vec_col)
 
 
 def ann_topk_batch_from_ivfpq(
@@ -600,7 +416,7 @@ def ann_topk_batch_from_ivfpq(
     shortlist back to the float column before the final per-query top-k.
     ADC scores are bit-identical to the single-query probe (same fsum
     LUT entries, same summation order), so results match
-    ``ann_topk_from_ivfpq_index(refine='exact')`` row-for-row at the
+    ``ann_topk_from_ivfpq_index`` row-for-row at the
     same dials (pinned by pytest)."""
     from delta_lake_optimizations_spark.operators.similarity import (
         topk_per_query,
@@ -721,18 +537,8 @@ def append_to_ivfpq_index(
             "vnorm", F.sqrt(l2_norm_sq(F.col(vec_col).cast("array<double>")))
         )
     )
-    cols = ["list_id", id_col, "pq_code", "vnorm", vec_col]
-    props = table.snapshot().properties
-    if SQ8_PROP in props:
-        # encode against the STORED quantizer (no retrain — appends must
-        # stay comparable to the original build's codes)
-        d = _json.loads(props[SQ8_PROP])
-        encoded = encoded.withColumn(
-            "sq8", _sq8_encode_col(vec_col, d["vmin"], d["scale"])
-        )
-        cols = ["list_id", id_col, "pq_code", "vnorm", "sq8", vec_col]
     table.write(
-        encoded.select(*cols),
+        encoded.select("list_id", id_col, "pq_code", "vnorm", vec_col),
         mode="append",
         partition_by=["list_id"],
         extra_parameters=extra_parameters,
@@ -747,7 +553,7 @@ def _cached_ivfpq_index(spark, sf_dir: str, nlist: int = 8, m: int = 4, ksub: in
     from delta_lake_optimizations_spark.table import GraftTable
 
     key = _hashlib.sha256(
-        f"{_os.path.abspath(sf_dir)}|ivfpq-ip-sq8|{nlist}|{m}|{ksub}|"
+        f"{_os.path.abspath(sf_dir)}|ivfpq-ip|{nlist}|{m}|{ksub}|"
         f"{_corpus_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:16]
     path = _os.path.join(_tempfile.gettempdir(), "spark_graft_ivfpq_index", key)
@@ -762,7 +568,7 @@ def _cached_ivfpq_index(spark, sf_dir: str, nlist: int = 8, m: int = 4, ksub: in
 def ann_ivfpq_topk_indexed(spark, sf_dir: str) -> DataFrame:
     """IVF-PQ approximate top-10 for vec_id=0 served from the MATERIALIZED
     index: file-pruned nprobe cells -> per-cell literal-LUT ADC over the
-    stored residual codes -> exact refine from the cold vector column. No
+    stored residual codes -> exact refine from the float vector column. No
     KMeans fit, no encode, at query time. (Rows-only driver check;
     ``ann_ivfpq_matches_inline`` is the oracle-backed equivalence
     metric.)"""

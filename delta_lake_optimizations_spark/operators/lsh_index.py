@@ -6,37 +6,24 @@ columns it filters on — for a single query that candidate stage costs more
 multiplies than the exact scan it is meant to avoid. The scale answer is to
 make the codes an INDEX: compute them ONCE (one narrow pass over the
 corpus), persist them next to the vectors, and answer every subsequent
-query with a pure bit-compare filter (``bit_count(code ^ qcode) <= h`` —
-cheap JVM integer ops, zero per-row floating point) followed by an exact
-re-rank of the surviving candidate fraction.
+query by reading only the buckets it probes, followed by an exact re-rank
+of the surviving candidates.
 
-Layout: a covering index — ``(id, embedding, code_0..code_{T-1})`` — so the
-re-rank needs no join back to the base table; at 100 TB this duplicates the
-vector column, the standard covering-index trade (the alternative, join on
-id, costs a shuffle per query). The index is written through the GraftTable
-layer: one commit-logged narrow write, time-travelable and vacuumable like
-any other table.
+Layout (``build_lsh_sharded_index``): postings exploded per table, keyed
+by ``tc = table<<planes | code``, range-sharded + sorted, small parquet row
+groups, written through the GraftTable layer (one commit-logged write,
+time-travelable and vacuumable like any other table). The probe is ONE
+``tc IN (multiprobe buckets)`` load riding the engine's min/max file
+skipping plus the pushed In predicate's row-group pruning, so IO and
+decode are O(candidates). At 800k clustered vectors: speedup 2.0x over
+brute force end-to-end, 3.2% candidates, recall@10 0.96, probe touches 11%
+of index files — and the gap WIDENS with corpus size (brute is O(corpus),
+the probe is O(buckets)).
 
-Recall is identical BY CONSTRUCTION to the inline multi-probe path: the
-planes come from the same deterministic ``_hyperplane`` sequence, so code
-bits — and therefore the candidate set for a given (query, h) — are
-bit-for-bit the same. The pinned recall floors carry over.
-
-Measured honestly (bench ``ann_index`` block, local[32]):
-
-- **covering** (single copy, bit-compare probe): at 100k x dim-64 the
-  Hamming<=1 dial keeps ~6.5% of rows but the filter is unpushable, so
-  the scan still decodes the vector column for every row — it cannot
-  beat a brute scan at toy scale (covering_* bench keys record this).
-- **sharded** (``build_lsh_sharded_index`` below — postings exploded per
-  table, keyed by ``tc = table<<planes | code``, range-sharded + sorted,
-  small parquet row groups): the probe is ONE ``tc IN (multiprobe
-  buckets)`` load riding the engine's min/max file skipping plus the
-  pushed In predicate's row-group pruning, so IO and decode are
-  O(candidates). At 800k clustered vectors: speedup 2.0x over brute
-  force end-to-end, 3.2% candidates, recall@10 0.96, probe touches 11%
-  of index files — and the gap WIDENS with corpus size (brute is
-  O(corpus), the probe is O(buckets)).
+Recall is identical BY CONSTRUCTION to the inline multi-probe path at the
+same (n_tables, n_planes, Hamming radius): the planes come from the same
+deterministic ``_hyperplane`` sequence, so code bits — and therefore the
+candidate set — are bit-for-bit the same.
 """
 
 from __future__ import annotations
@@ -64,10 +51,8 @@ from delta_lake_optimizations_spark.registry import query
 
 N_TABLES = 16
 N_PLANES = 12
-PROBE_HAMMING = 2  # same dial as the registered inline ann_lsh_topk
-# The INDEXED dial: Hamming<=1 keeps ~16*13/4096 = 5% of a uniform corpus
-# (vs ~30% at h<=2), which is what lets the indexed query beat brute force
-# end-to-end. On clustered (realistic) geometry h<=1 recall is >=0.8
+# The INDEXED dial: Hamming<=1 keeps ~13 buckets per table (vs 79 at h<=2).
+# On clustered (realistic) geometry h<=1 recall is >=0.8
 # (tests/test_ann_and_components.py::test_lsh_multiprobe_recall_on_
 # clustered_vectors measured 0.965); on the adversarially-uniform synthetic
 # corpus recall degrades (documented LSH worst case) — the inline
@@ -103,10 +88,11 @@ def lsh_index_frame_expr(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Expression-only build path (the original spec): one interpreted fold
-    dot per plane. Kept as the semantic reference — ``lsh_index_frame``'s
-    vectorized codes are asserted bit-identical to these in
-    tests/test_lsh_index.py — and as the fallback if Arrow is unavailable."""
+    """Expression-only code path (the original spec): one interpreted fold
+    dot per plane, one ``lsh_code_{t}`` column per table. Kept as the
+    semantic reference — the vectorized codes behind
+    ``lsh_exploded_index_frame`` are asserted bit-identical to these in
+    tests/test_lsh_index.py."""
     return df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -161,33 +147,6 @@ def _codes_pandas_udf(dim: int, n_tables: int, n_planes: int):
     return pandas_udf("array<long>")(codes)
 
 
-def lsh_index_frame(
-    df: DataFrame,
-    dim: int,
-    n_tables: int = N_TABLES,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The covering-index frame: id + vector + one code column per table.
-    Narrow (no shuffle) — at 100 TB this runs at scan speed. Codes come
-    from one Arrow-batched numpy pass (``_codes_pandas_udf``), bit-identical
-    to the expression fold (``lsh_index_frame_expr``) by construction."""
-    codes = _codes_pandas_udf(dim, n_tables, n_planes)
-    return df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        codes(F.col(vec_col)).alias("_codes"),
-    ).select(
-        id_col,
-        vec_col,
-        *[
-            F.element_at("_codes", t + 1).alias(f"lsh_code_{t}")
-            for t in range(n_tables)
-        ],
-    )
-
-
 def query_codes(
     query_vec: list[float], n_tables: int = N_TABLES, n_planes: int = N_PLANES
 ) -> list[int]:
@@ -202,60 +161,6 @@ def query_codes(
                 code |= 1 << i
         out.append(code)
     return out
-
-
-def ann_topk_from_index(
-    indexed: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_tables: int = N_TABLES,
-    n_planes: int = N_PLANES,
-    probe_hamming: int = PROBE_HAMMING,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k against a materialized index: the candidate stage is
-    ``bit_count(stored_code XOR query_code) <= h`` OR-ed across tables —
-    integer ops on stored columns, no per-row dot products — then an exact
-    cosine re-rank (TakeOrderedAndProject) over the candidate fraction."""
-    qcodes = query_codes(query_vec, n_tables, n_planes)
-    cond = None
-    for t, qc in enumerate(qcodes):
-        hit = (
-            F.bit_count(F.col(f"lsh_code_{t}").bitwiseXOR(F.lit(qc)))
-            <= probe_hamming
-        )
-        cond = hit if cond is None else (cond | hit)
-    # project the code columns away between the filter and the re-rank so
-    # only (id, vector) flows into the cosine stage
-    candidates = indexed.filter(cond).select(id_col, vec_col)
-    return topk_cosine(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def build_lsh_index(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    dim: int,
-    n_tables: int = N_TABLES,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Materialize the covering index as a GraftTable at ``path`` (one
-    commit-logged write). Returns the table handle."""
-    from delta_lake_optimizations_spark.table import GraftTable
-
-    t = GraftTable(spark, path)
-    t.write(
-        lsh_index_frame(df, dim, n_tables, n_planes, id_col, vec_col),
-        mode="overwrite",
-        properties={
-            "graft.lsh.nTables": str(n_tables),
-            "graft.lsh.nPlanes": str(n_planes),
-        },
-    )
-    return t
 
 
 def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
@@ -276,60 +181,19 @@ def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
     return "|".join(parts)
 
 
-def _cached_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build-once-per-corpus index under the system temp dir, keyed by
-    corpus path + config + corpus CONTENT fingerprint (a regenerated
-    corpus changes the key and triggers a rebuild); later calls read the
-    committed table."""
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{N_TABLES}x{N_PLANES}|"
-        f"{_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_lsh_index", key)
-    from delta_lake_optimizations_spark.table import GraftTable
-
-    t = GraftTable(spark, path)
-    if not t.exists():
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = embedding_dim(sf_dir)
-        t = build_lsh_index(spark, emb, path, dim)
-    return t.load()
-
-
-@query("ann_lsh_topk_indexed", tags=("similarity", "approx", "index"))
-def ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 for vec_id=0 answered from the MATERIALIZED LSH
-    index at the INDEXED dial (Hamming<=1 — ~5% candidates, the fraction
-    that lets the index beat brute force; see PROBE_HAMMING_INDEXED note):
-    per-query cost is a bit-compare filter over stored codes instead of
-    192 per-row dot products. (Rows-only driver check;
-    ``ann_lsh_indexed_matches_inline`` is the oracle-backed equivalence
-    metric at the same dial.)"""
-    indexed = _cached_index(spark, sf_dir)
-    qv = query_vector(spark, sf_dir, 0)
-    return ann_topk_from_index(indexed, qv, k=10, probe_hamming=PROBE_HAMMING_INDEXED)
-
-
 # ---------------------------------------------------------------------------
 # Sharded LSH index: the probe becomes FILE SKIPPING
 # ---------------------------------------------------------------------------
 #
-# The covering index above still SCANS every index file per query — the
-# bit_count(...) filter is cheap but unpushable, so IO (in particular the
-# vector-column decode, which dominates the scan) is O(corpus) at any
-# scale. The classic LSH layout fixes that: explode the index into one row
-# per (table, code) posting keyed by a single combined bucket id
-# ``tc = table_id << n_planes | code``, range-partitioned and sorted by
-# ``tc`` so every parquet file covers a narrow contiguous bucket range
-# with tight min/max footer stats. A probe enumerates its multiprobe
+# One row per (table, code) posting keyed by a single combined bucket id
+# ``tc = table_id << n_planes | code``, partitioned into contiguous ``tc``
+# ranges and sorted by ``tc`` so every parquet file covers a narrow bucket
+# range with tight min/max footer stats. A probe enumerates its multiprobe
 # buckets driver-side (13/table at Hamming<=1) and issues ONE load with
 # ``tc IN (probe buckets)`` through the engine's own file skipping
 # (GraftTable.load(skip_where=...)): only files whose range contains a
 # probed bucket are read, so query IO — including vector decode — is
-# O(candidates), not O(corpus). That is the defining property of an
-# index, and it is why this layout beats brute force end-to-end (bench
-# ``ann_index`` block) while the unpushable-filter covering layout cannot
-# at toy scale.
+# O(candidates), not O(corpus).
 #
 # The trade is storage: n_tables copies of the vector column (the classic
 # LSH table-per-hash replication, covering variant — vectors ride along so
@@ -339,10 +203,10 @@ def ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the inline multi-probe path at the same (n_tables, n_planes, h) —
 # {id : exists t, code_t in probes_t} — pinned by an equality test.
 
-#: sharded-index dial: fewer tables than the inline/covering path because
-#: every extra table multiplies storage AND probe IO; 8 tables at
-#: Hamming<=1 measure ~0.95 recall on clustered geometry (pytest) at a
-#: ~2.5% uniform-corpus candidate fraction.
+#: sharded-index dial: fewer tables than the inline path because every
+#: extra table multiplies storage AND probe IO; 8 tables at Hamming<=1
+#: measure ~0.95 recall on clustered geometry (pytest) at a ~2.5%
+#: uniform-corpus candidate fraction.
 N_TABLES_SHARDED = 8
 
 
@@ -478,24 +342,20 @@ def build_lsh_sharded_index(
     target-size parquet file."""
     from delta_lake_optimizations_spark.table import GraftTable
 
-    # r11 history (measured, OPTIMIZATION_r11.md): with repartitionByRange
-    # the build's dominant cost was the Arrow codes UDF evaluated TWICE —
-    # once by the range-boundary reservoir-sampling pass (which evaluates
-    # the ENTIRE child plan), once by the real shuffle (6.2 s of 13.3 s
-    # each at the 800k point). Persisting the exploded frame to dodge the
-    # second pass measured SLOWER (14.8 vs 13.3 s — cache materialization
-    # of ~3.7 GB of postings costs more than the UDF pass it saves).
-    # r12 (VERDICT r11 #3, guide §2): derive the contiguous tc ranges from
-    # a SAMPLED histogram (UDF over ~20k rows) + a deterministic
-    # tc -> partition-token lookup, and hash-repartition on the token —
-    # the full-corpus codes UDF now runs exactly once, feeding the write's
-    # exchange directly. Same contiguous-range file layout (probe file
-    # skipping unchanged), same per-shard sort via graft.cluster.by.
+    # The contiguous tc ranges come from a SAMPLED histogram (codes UDF over
+    # ~20k rows) plus a deterministic tc -> partition-token lookup, and the
+    # frame is hash-repartitioned on the token: the full-corpus codes UDF
+    # runs exactly once, feeding the write's exchange directly.
+    # repartitionByRange gives the same layout, but its boundary sampling
+    # evaluates the whole child plan (the UDF) a second time — it is only
+    # the fallback when no histogram could be drawn.
     frame = lsh_exploded_index_frame(df, dim, n_tables, n_planes, id_col, vec_col)
     mapping = _tc_shard_token_map(
         spark, df, dim, n_tables, n_planes, n_shards, id_col, vec_col
     )
-    if mapping is not None:
+    if mapping is None:
+        frame = frame.repartitionByRange(n_shards, "tc")
+    else:
         token_by_tc, n_parts = mapping
         # Build the tc -> token lookup as ONE foldable expression:
         # split of a single string literal, constant-folded by Catalyst
@@ -614,11 +474,15 @@ def sharded_probe_files_scanned(
     return table.files_scanned(skip_where=[("tc", "in", buckets)])
 
 
-def _cached_sharded_index(spark: SparkSession, sf_dir: str):
-    """Build-once-per-corpus sharded index (content-fingerprinted cache
-    key, same scheme as ``_cached_index``)."""
+def _cached_sharded_index(
+    spark: SparkSession, sf_dir: str, n_tables: int = N_TABLES_SHARDED
+):
+    """Build-once-per-corpus sharded index under the system temp dir, keyed
+    by corpus path + config + corpus CONTENT fingerprint (a regenerated
+    corpus changes the key and triggers a rebuild); later calls reuse the
+    committed table."""
     key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|sharded|{N_TABLES_SHARDED}x{N_PLANES}|"
+        f"{os.path.abspath(sf_dir)}|sharded|{n_tables}x{N_PLANES}|"
         f"{_corpus_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "spark_graft_lsh_sharded", key)
@@ -628,7 +492,9 @@ def _cached_sharded_index(spark: SparkSession, sf_dir: str):
     if not t.exists():
         emb = load_table(spark, sf_dir, "embeddings")
         dim = embedding_dim(sf_dir)
-        t = build_lsh_sharded_index(spark, emb, path, dim, n_shards=32)
+        t = build_lsh_sharded_index(
+            spark, emb, path, dim, n_tables=n_tables, n_shards=32
+        )
     return t
 
 
@@ -763,37 +629,16 @@ def ann_topk_from_sharded_ranked(
     )
 
 
-def ann_topk_from_index_ranked(
-    indexed: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    budget: int = RANKED_BUDGET,
-    n_tables: int = N_TABLES,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Margin-ranked probe against the COVERING index layout: per-table
-    ``lsh_code_t IN (ranked codes)`` OR-ed across tables, then the exact
-    re-rank. Used by the bench to compare recall against the blind
-    Hamming ball at the SAME per-table probe count."""
-    lists = ranked_probe_lists(query_vec, budget, n_tables, n_planes)
-    cond = None
-    for t, probes in enumerate(lists):
-        hit = F.col(f"lsh_code_{t}").isin(*probes)
-        cond = hit if cond is None else (cond | hit)
-    candidates = indexed.filter(cond).select(id_col, vec_col)
-    return topk_cosine(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
 @query("ann_lsh_topk_sharded_ranked", tags=("similarity", "approx", "index"))
 def ann_lsh_topk_sharded_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 for vec_id=0 from the sharded LSH index with
-    MARGIN-RANKED multi-probe at the Hamming<=1-equivalent budget (13
-    codes/table): same probe cost, buckets chosen by the query's
-    hyperplane margins (Multi-Probe LSH, VLDB'07). (Rows-only driver
-    check; ``ann_lsh_ranked_recall`` in operators/metrics.py is the
-    oracle-backed metric twin.)"""
+    MARGIN-RANKED multi-probe at the Hamming<=1-equivalent budget (8
+    tables, 13 codes/table): same probe cost, buckets chosen by the
+    query's hyperplane margins (Multi-Probe LSH, VLDB'07). At this dial
+    recall@10 on the uniform fixture corpus is only 0.1-0.5 (LSH's worst
+    case), so this query is checked for rows only. Its oracle-backed metric,
+    ``ann_lsh_ranked_recall`` in operators/metrics.py, measures the same
+    ranked probe on a 16-table sharded index at budget 79."""
     t = _cached_sharded_index(spark, sf_dir)
     qv = query_vector(spark, sf_dir, 0)
     return ann_topk_from_sharded_ranked(t, qv, k=10)

@@ -466,57 +466,6 @@ def multimodal_decode_consistency(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Materialized-LSH-index equivalence
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "ann_lsh_indexed_matches_inline",
-    tags=("similarity", "approx", "index", "metric"),
-    oracle="""
-        SELECT CAST(10 AS BIGINT) AS k, CAST(0 AS BIGINT) AS n_mismatch
-    """,
-)
-def ann_lsh_indexed_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materialized-index ANN path must return EXACTLY the inline
-    multi-probe result AT THE SAME DIAL (same planes -> same codes -> same
-    candidate set by construction; both sides here run the registered
-    indexed dial, Hamming<=1). A stale or mis-coded index makes
-    n_mismatch > 0."""
-    from delta_lake_optimizations_spark.operators.lsh_index import (
-        PROBE_HAMMING_INDEXED,
-        _cached_index,
-        ann_topk_from_index,
-    )
-    from delta_lake_optimizations_spark.operators.similarity import (
-        ann_topk_multiprobe,
-        query_vector,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = query_vector(spark, sf_dir, 0)
-    inline = ann_topk_multiprobe(
-        emb, qv, k=10, probe_hamming=PROBE_HAMMING_INDEXED
-    ).select("vec_id", "cos_sim")
-    indexed = ann_topk_from_index(
-        _cached_index(spark, sf_dir), qv, k=10, probe_hamming=PROBE_HAMMING_INDEXED
-    ).select(
-        F.col("vec_id").alias("_v2"), F.col("cos_sim").alias("_c2")
-    )
-    both = inline.join(
-        indexed, (F.col("vec_id") == F.col("_v2")) & (F.col("cos_sim") == F.col("_c2")), "full"
-    )
-    return both.agg(
-        F.lit(10).cast("long").alias("k"),
-        F.sum(
-            F.when(F.col("vec_id").isNull() | F.col("_v2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # ANN recall metrics (floors measured at sf0.001 AND sf0.01; both corpora
 # are 500 uniform vectors, the LSH worst case, so the margins are real)
 # ---------------------------------------------------------------------------
@@ -634,23 +583,26 @@ def knn_join_sharded_matches_inline(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def ann_lsh_ranked_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-verifiable recall for margin-ranked Multi-Probe LSH at the
-    SAME probe budget as the blind Hamming<=2 ball (79 codes/table, 16
-    tables, covering index): >= 0.6 of the exact top-10 per probe vector
+    SAME probe budget as the blind Hamming<=2 ball (79 codes/table, on a
+    16-table sharded index): >= 0.6 of the exact top-10 per probe vector
     on the uniform corpus. Measured 0.7-1.0 per probe at sf0.001/sf0.01 —
     ranked probing beat or tied the blind ball on every probe vector at
     equal cost (blind measured 0.7-0.9), because it spends the budget on
     the buckets the query's hyperplane margins say are most likely to
     hide true neighbors."""
     from delta_lake_optimizations_spark.operators.lsh_index import (
-        _cached_index,
-        ann_topk_from_index_ranked,
+        N_TABLES,
+        _cached_sharded_index,
+        ann_topk_from_sharded_ranked,
     )
 
-    idx = _cached_index(spark, sf_dir)
+    t = _cached_sharded_index(spark, sf_dir, n_tables=N_TABLES)
     return _ann_recall_frame(
         spark,
         sf_dir,
-        lambda emb, qv: ann_topk_from_index_ranked(idx, qv, k=10, budget=79),
+        lambda emb, qv: ann_topk_from_sharded_ranked(
+            t, qv, k=10, budget=79, n_tables=N_TABLES
+        ),
         0.6,
     )
 

@@ -72,215 +72,57 @@ _QUERY_MODULES = (
 )
 
 
-# The driver's correctness gate checks exactly the FIRST 50 registry entries
-# (registration order) each round. Window history: r01 relational/TPC-H/
-# window/setops; r02 scalar/events/vector/dedup/similarity/text/sampling;
-# r03 reshape + remaining unchecked; r04 the 17 new metric queries; r05
-# the four materialized-index queries + the r04 rotation-hygiene list
-# (zero failures every round); r06 the URL/incremental-dedup/LM/VARIANT/
-# paragraph debutantes (48/50 green, 2 by-design rows-only); r07 the
-# IVF-PQ family, BPE trio, trigram backoff LM, IVF k-NN join pair
-# (46/50 green, 4 by-design rows-only with adjacent oracle twins).
-# Round 10 (this window): no brand-new query names — the round's work
-# REWORKED existing paths, so the window re-verifies them on their
-# changed code: the IVF-PQ single-probe refactor (single-scan refine,
-# constant-folded array-literal parameters) re-verifies through the
-# in-window ann_ivfpq trio + ann_batch_matches_singles; the sharded
-# batch k-NN slim-shuffle rework through knn_join_sharded_matches_inline
-# + ann_lsh_sharded_matches_inline; the progressive-JPEG decoder through
-# the EXTENDED image_cross_format_near_dup (now 15 assets / 30
-# ground-truth pairs incl. SOF2) and multimodal_real_media_decode (new
-# tiny_prog.jpg fixture row); the LogStore commit seam through every
-# query that reads a GraftTable. Promoted in: multimodal_decode_consistency
-# (decode-cascade equivalence metric — the cascade gained a jpeg tier
-# across r9/r10) and simhash_jaccard_recall (oracle-backed metric twin
-# riding the SHARED banded_candidates machinery whose recall bound was
-# rewidened in the r9 ADVICE fix).
-# Rotated out for them: ann_lsh_ranked_recall (r6 debut, four green
-# rows; the sharded family keeps two in-window equality twins) and
-# dedup_url_normalized (r6 family, r6+r9 greens; url_normalize_docs
-# keeps the URL family in-window).
-# Round 9: the THREE r9 debutantes get their first driver
-# rows — the perceptual-hash image near-dup over the PNG fixture corpus
-# (ground-truth duplicate-map oracle), the TRAINED quality classifier
-# (oracle restates the full scoring pass from the stored weights
-# sidecar), the batched-ANN equality twin (batch probes must match
-# the single-query probes per family), and the audio-fingerprint
-# near-dup (stdlib WAV PCM decode + energy-envelope signature,
-# ground-truth duplicate-map oracle). The seven r8 debutantes
-# re-verify on their second row; the byte-level BPE rework re-verifies
-# through the in-window BPE trio. Rotated out for the three:
-# url_domain_profile + url_blocklist_filter (r06 family reps with r7+r8
-# green rows; url_normalize_docs + dedup_url_normalized keep the family
-# in-window), approx_percentile_error_by_flag (sketch-error metric,
-# green r8 + earlier; the percentile family keeps group_percentiles),
-# and pagerank_mass_conservation (green r8; the graph family keeps
-# dedup_components_scaled, the stronger vertex-parity form).
-# Round 8: the SEVEN r8 debutantes got their first driver
-# rows — the replication-proof dedup scale path + its survivor-set
-# equality twin, the 4-gram backoff LM, the Unicode-normalization
-# parity probe + mixed-form dedup story, and the indexed embedding
-# decontamination + its unthresholded equality twin; the nine r7
-# debutantes re-verified on their second row (established pattern).
-# Rotated out for the seven: ann_lsh_topk_sharded_ranked +
-# knn_join_sharded_indexed (rows-only entries that got their r7 row;
-# their oracle twins knn_join_sharded_matches_inline +
-# ann_lsh_ranked_recall stay in-window), ann_lsh_indexed_matches_inline
-# (covering-index twin; the sharded + IVF + IVF-PQ twins stay),
-# minhash_lsh_recall (the minhash family now carries the STRONGER
-# survivor-set equality twin + dedup_ngram_jaccard +
-# dedup_components_ngram), hard_negatives_lsh_overlap (similarity
-# family keeps 6 in-window reps), lm_perplexity_scores (LM family now
-# has both backoff orders in-window), chunk_embed_consistency
-# (pipeline family keeps pipeline_curate_documents).
-# Everything demoted out of the window stays covered by the identical
-# local gate in ``tests/test_oracle_parity.py``;
-# tests/test_registry_window.py asserts every registry name has had a
-# driver row across all recorded rounds.
+# The oracle gate checks exactly the first DRIVER_WINDOW registry entries
+# (registration order); ``_DRIVER_PRIORITY`` pins them to the front. A
+# rows-only (no-oracle) entry needs an oracle-backed equality or metric twin
+# inside the window. Queries rotated out of the window stay covered by the
+# same local gate in ``tests/test_oracle_parity.py``, and
+# tests/test_registry_window.py asserts every registry name has been
+# checked in some recorded window.
 DRIVER_WINDOW = 50
-# Round 11 rotation: three promotions riding this round's rebuilt
-# machinery —
-#   table_checkpoint_pruned_scan (columnar parquet checkpoints +
-#     vectorized stats prune, table/checkpoint_arrow.py: a fresh handle
-#     range-scan through the arrow prune, oracle = the raw range),
-#   delta_dv_import_ids (deletion-vector import: a protocol-conformant
-#     Delta log with a roaring-encoded 'u' sidecar built in-query,
-#     imported, post-delete contents oracle-checked),
-#   skew_salted_join_brand_revenue (salted-join equivalence, in-window
-#     while the new skew bench block + AQE plan guard are fresh).
-# Rotated out for them (all multi-round greens whose families keep
-# stronger in-window representatives):
-#   corpus_datacard (r6-r10 greens; profile family keeps
-#     variant_props_rollup + group_percentiles in-window),
-#   dedup_repeated_spans (r5-r10 greens; the REMOVAL form
-#     dedup_remove_repeated_spans — the full cascade — stays in-window),
-#   bpe_roundtrip_consistency (r7-r10 greens; the BPE family keeps
-#     bpe_pack_documents + bpe_pack_sizes in-window).
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # Round 12 rotation (established pattern): three promotions riding
-    # this round's doc-local gram/segment rewrite, so the driver
-    # re-verifies the rewritten enumeration against DuckDB from three
-    # more angles —
-    #   lm_perplexity_scores (bigram LM over the rewritten _gram_rows;
-    #     rotated out in r10, back while the gram path is fresh),
-    #   dedup_ngram_jaccard (exact n-gram Jaccard pairs: gram rewrite +
-    #     the reused-distinct exchange),
-    #   decontam_ngram_overlap (_word_gram_rows rewrite, doc-level
-    #     decontamination form).
-    # Rotated out for them (all r9-r11 multi-round greens; the media
-    # family — untouched this round — keeps multimodal_decode_consistency,
-    # image_phash_near_dup, audio_fingerprint_near_dup and
-    # multimodal_real_media_decode in-window):
-    #   image_cross_format_near_dup, video_gif_near_dup,
-    #   audio_spectral_near_dup.
     "lm_perplexity_scores",
     "dedup_ngram_jaccard",
     "decontam_ngram_overlap",
-    # NEW round 11 (oracle-backed, see rotation note above)
     "table_checkpoint_pruned_scan",
     "delta_dv_import_ids",
     "skew_salted_join_brand_revenue",
-    # NEW round 9: image near-dup (stdlib PNG pixel decode -> aHash ->
-    # Hamming banding; oracle = the fixture corpus's ground-truth
-    # duplicate map), trained quality classifier (GD-as-aggregates fit;
-    # oracle restates scoring from the stored weights), and the batch-
-    # probe equality twin (brute/IVF/IVF-PQ batch == singles)
-    # NEW in the r10 window (promotions — see rotation note above)
     "multimodal_decode_consistency",
     "simhash_jaccard_recall",
     "image_phash_near_dup",
     "audio_fingerprint_near_dup",
     "quality_classifier_trained",
     "ann_batch_matches_singles",
-    # NEW round 9 (mid-round additions, oracle-backed): HTML -> text
-    # extraction (synthetic page built identically in the oracle, full
-    # strip/decode/collapse cascade value-checked) and the Lee et al.
-    # repeated-span REMOVAL rewrite (first-occurrence-wins coverage
-    # union, full cascade restated in DuckDB). Rotated out for them:
-    # dedup_ngram_jaccard (r1/r2 + sf1 greens; the dedup family keeps
-    # seven stronger in-window reps incl. the new span removal) and
-    # column_stats_summary (r2+r8 greens; stats family pytest-covered).
     "html_extract_text",
     "dedup_remove_repeated_spans",
-    # NEW round 9 (mid-round, oracle-backed): cross-CONTAINER image
-    # near-dup — the same pixels saved as PNG/BMP/GIF must collapse,
-    # proving the hashes ride decoded pixels (stdlib BMP + GIF-LZW
-    # codecs new this round), not payload bytes. Rotated out for it:
-    # boilerplate_segments_profile (r6-r8 greens; the paragraph family
-    # keeps paragraph_dedup_docs + strip_boilerplate_docs in-window).
-    # [r12: image_cross_format_near_dup rotated out after r9-r11 greens
-    #  — see the round-12 rotation note at the top]
-    # [r12: video_gif_near_dup rotated out after r9-r11 greens — see the
-    #  round-12 rotation note at the top]
-    # NEW round 9 (mid-round, oracle-backed): SURGICAL span-level
-    # decontamination — contaminated spans are cut, not whole docs
-    # (broadcast benchmark grams -> coverage union -> reassembly via
-    # the shared drop_covered_tokens tail). Rotated out:
-    # knn_join_ivf_recall (r7/r8 greens; the k-NN join family keeps
-    # its equality twin knn_join_ivf_matches_inline in-window and the
-    # recall family keeps ann_ivfpq_recall).
     "decontam_remove_spans",
-    # NEW round 9 (mid-round, oracle-backed): SPECTRAL audio near-dup —
-    # FFT band-activity fingerprint (frequency content) beside the
-    # envelope form (amplitude rhythm); ground-truth oracle over a
-    # spectrally-rich non-stationary fixture corpus. Rotated out:
-    # quality_classifier_scores (r5-r8 greens; the quality family keeps
-    # the strictly-stronger TRAINED variant in-window).
-    # [r12: audio_spectral_near_dup rotated out after r9-r11 greens —
-    #  see the round-12 rotation note at the top]
-    # r8 debutantes re-verified (second driver row): the replication-
-    # proof near-dup SCALE path (rows-only) + its oracle-backed
-    # survivor-set equality twin
     "dedup_minhash_scaled",
     "minhash_scaled_matches_pairwise",
-    # NEW round 8: 4-gram stupid-backoff LM (full cascade restated in the
-    # oracle; the trigram form lm_backoff_scores re-verifies below)
     "lm_backoff4_scores",
-    # NEW round 8: Unicode normalization choke point — full-tier NFC
-    # parity probe + the mixed-form dedup user story, both oracle-backed
     "normalize_text_docs",
     "dedup_normalized_forms",
-    # NEW round 8: indexed embedding decontamination (rows-only) + its
-    # oracle-backed unthresholded equality twin vs the broadcast form
     "decontam_embedding_indexed",
     "decontam_embedding_matches_broadcast",
-    # r7 debutantes re-verified (second driver row): IVF-PQ family
     "ann_ivfpq_topk_indexed",
     "ann_ivfpq_matches_inline",
     "ann_ivfpq_recall",
-    # NEW this round: batch k-NN join from the materialized IVF index
-    # (rows-only) + its oracle-backed equality twin
     "knn_join_ivf_indexed",
     "knn_join_ivf_matches_inline",
-    # NEW this round (oracle-backed): trigram stupid-backoff LM + BPE
-    # token packing + the BPE roundtrip/count-consistency metric
     "lm_backoff_scores",
     "bpe_pack_documents",
     "bpe_pack_sizes",
-    # r06 debutantes re-verified (second driver row)
     "url_normalize_docs",
     "incremental_dedup_two_batches",
-    # rows-only entries (metric twins adjacent, established pattern)
     "knn_join_sharded_matches_inline",
-    # touched module re-verification: the index equivalence metrics
     "ann_lsh_sharded_matches_inline",
     "ann_ivf_indexed_matches_inline",
-    # metric-family greens held in the window (oracle-backed twins of the
-    # approximate operators)
     "multimodal_real_media_decode",
-    # r06 debutantes re-verified: VARIANT rollup; graph family now led
-    # by the r8 SCALE path (exact collapse -> gram edges over reps -> CC,
-    # full vertex parity); the uncomposed dedup_components_ngram stays in
-    # the local oracle gate (r6+r7 driver rows)
     "variant_props_rollup",
     "dedup_components_scaled",
-    # regression watches (bench medians under observation this round)
     "pipeline_curate_documents",
     "events_tumbling_window",
     "q21_suppliers_kept_orders_waiting",
-    # r05 gram-path rework re-verification (shared token_ngrams fast path)
     "bm25_keyword_search",
-    # r06 debutantes re-verified: dataset card + the paragraph family
     "paragraph_dedup_docs",
     "strip_boilerplate_docs",
     "group_percentiles",

@@ -63,6 +63,9 @@ def test_ivfpq_build_layout_and_metadata(spark, tmp_path):
     # optimizeWrite: one file per populated cell
     n_cells = loaded.select("list_id").distinct().count()
     assert len(t.snapshot().files) == n_cells
+    # one layout: exact refine only — no int8 refine column or quantizer
+    assert "sq8" not in loaded.columns
+    assert "graft.ivfpq.sq8" not in t.snapshot().properties
 
 
 def test_ivfpq_probe_prunes_files_and_matches_inline(spark, tmp_path):
@@ -215,87 +218,6 @@ def test_ivfpq_optimize_compacts_fragmented_cells_probe_unchanged(spark, tmp_pat
     assert [(r["vec_id"], r["cos_sim"]) for r in after] == [
         (r["vec_id"], r["cos_sim"]) for r in before
     ]
-
-
-# --- SQ8 warm refine column (VERDICT r07 #8) ---
-
-
-def test_sq8_column_and_metadata_written(spark, tmp_path):
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.ivfpq import (
-        SQ8_PROP,
-        ivfpq_sq8_metadata,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    t = build_ivfpq_index(spark, emb, str(tmp_path / "idx"), nlist=4, m=4, ksub=16)
-    assert SQ8_PROP in t.snapshot().properties
-    vmin, scale = ivfpq_sq8_metadata(t)
-    dim = len(emb.first()["embedding"])
-    assert len(vmin) == dim and len(scale) == dim
-    assert all(s > 0 for s in scale)
-    row = t.load().select("sq8").first()
-    assert len(row["sq8"]) == dim
-    assert all(-128 <= c <= 127 for c in row["sq8"])
-
-
-def test_sq8_reconstruction_error_bounded(spark, tmp_path):
-    """|x~ - x| <= scale per dim (half-step quantization bound, plus the
-    clip at the corpus min/max which is exact by construction)."""
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.ivfpq import ivfpq_sq8_metadata
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    t = build_ivfpq_index(spark, emb, str(tmp_path / "idx"), nlist=4, m=4, ksub=16)
-    vmin, scale = ivfpq_sq8_metadata(t)
-    rows = t.load().select("embedding", "sq8").limit(50).collect()
-    for r in rows:
-        for d, (x, c) in enumerate(zip(r["embedding"], r["sq8"])):
-            recon = vmin[d] + (c + 128 + 0.5) * scale[d]
-            assert abs(recon - float(x)) <= scale[d] + 1e-9
-
-
-def test_sq8_refine_matches_exact_refine(spark, tmp_path):
-    """At the registered dials on the corpus, the SQ8-refined top-10 ids
-    equal the exact-refined top-10 (and the returned cos_sim values are
-    EXACT in both modes — sq8 only re-ranks the shortlist)."""
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.similarity import query_vector
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    t = build_ivfpq_index(spark, emb, str(tmp_path / "idx"), nlist=8, m=4, ksub=16)
-    for probe_vec in (0, 7):
-        qv = query_vector(spark, SF_DIR, probe_vec)
-        exact = ann_topk_from_ivfpq_index(
-            t, qv, k=10, nprobe=4, refine_factor=6, refine="exact"
-        ).collect()
-        sq8 = ann_topk_from_ivfpq_index(
-            t, qv, k=10, nprobe=4, refine_factor=6, refine="sq8"
-        ).collect()
-        assert [(r["vec_id"], r["cos_sim"]) for r in exact] == [
-            (r["vec_id"], r["cos_sim"]) for r in sq8
-        ]
-
-
-def test_sq8_append_uses_stored_quantizer(spark, tmp_path):
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.ivfpq import (
-        append_to_ivfpq_index,
-        ivfpq_sq8_metadata,
-    )
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    head = emb.filter(F.col("vec_id") < 400)
-    tail = emb.filter(F.col("vec_id") >= 400).withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    t = build_ivfpq_index(spark, head, str(tmp_path / "idx"), nlist=4, m=4, ksub=16)
-    before = ivfpq_sq8_metadata(t)
-    append_to_ivfpq_index(t, tail)
-    assert ivfpq_sq8_metadata(t) == before  # quantizer not retrained
-    appended = t.load().filter(F.col("vec_id") >= 100000)
-    assert appended.filter(F.col("sq8").isNull()).count() == 0
 
 
 def test_const_darray_rejects_non_finite():

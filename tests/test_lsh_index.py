@@ -1,6 +1,6 @@
-"""Materialized LSH index (operators/lsh_index.py): build-once code
-columns, bit-compare query path, equivalence with the inline multi-probe
-ANN, and the cost shape (no dot products at query time)."""
+"""Materialized (sharded) LSH index (operators/lsh_index.py): build-once
+code postings, file-skipping probe, equivalence with the inline
+multi-probe ANN, and the cost shape (no dot products at query time)."""
 
 from __future__ import annotations
 
@@ -14,9 +14,9 @@ from delta_lake_optimizations_spark.catalog import load_table
 from delta_lake_optimizations_spark.operators.lsh_index import (
     N_PLANES,
     N_TABLES,
-    ann_topk_from_index,
-    build_lsh_index,
-    lsh_index_frame,
+    ann_topk_from_sharded,
+    build_lsh_sharded_index,
+    lsh_exploded_index_frame,
     query_codes,
 )
 from delta_lake_optimizations_spark.operators.similarity import (
@@ -28,54 +28,39 @@ from delta_lake_optimizations_spark.operators.similarity import (
 from .conftest import SF_DIR
 
 
-@pytest.mark.slow  # equality twins also driver-checked in-window
-def test_indexed_ann_equals_inline_multiprobe(spark, tmp_path):
-    """Same planes -> same codes -> identical candidate set and result."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
-    t = build_lsh_index(spark, emb, os.path.join(tmp_path, "idx"), dim)
-    indexed = t.load()
-    for vid in (0, 3, 7):
-        qv = query_vector(spark, SF_DIR, vid)
-        inline = [(r[0], r[1]) for r in ann_topk_multiprobe(emb, qv, k=10).collect()]
-        from_idx = [(r[0], r[1]) for r in ann_topk_from_index(indexed, qv, k=10).collect()]
-        assert inline == from_idx, f"vec {vid}: index diverges from inline"
-
-
-def test_index_is_commit_logged_and_narrow(spark, tmp_path):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
-    t = build_lsh_index(spark, emb, os.path.join(tmp_path, "idx"), dim)
-    snap = t.snapshot()
-    assert snap.version == 0
-    assert snap.properties["graft.lsh.nTables"] == str(N_TABLES)
-    cols = set(t.load().columns)
-    assert {"vec_id", "embedding"} <= cols
-    assert {f"lsh_code_{i}" for i in range(N_TABLES)} <= cols
+def _codes_by_table(rows) -> dict[int, dict[int, int]]:
+    """``{vec_id: {table_id: code}}`` decoded from exploded ``tc`` postings."""
+    out: dict[int, dict[int, int]] = {}
+    for r in rows:
+        out.setdefault(r["vec_id"], {})[r["tc"] >> N_PLANES] = r["tc"] & (
+            (1 << N_PLANES) - 1
+        )
+    return out
 
 
 def test_query_codes_match_stored_codes(spark):
-    """The driver-side query-code arithmetic must agree with the JVM
-    expression codes for the same vector (else candidates are garbage)."""
+    """The driver-side query-code arithmetic must agree with the stored
+    posting codes for the same vector, table by table (else candidates
+    are garbage)."""
     emb = load_table(spark, SF_DIR, "embeddings")
     dim = embedding_dim(SF_DIR)
-    frame = lsh_index_frame(emb, dim)
-    row = frame.filter(F.col("vec_id") == 5).first()
-    qc = query_codes([float(x) for x in row["embedding"]])
-    stored = [row[f"lsh_code_{t}"] for t in range(N_TABLES)]
-    assert qc == stored
+    frame = lsh_exploded_index_frame(emb, dim, n_tables=N_TABLES)
+    rows = frame.filter(F.col("vec_id") == 5).collect()
+    stored = _codes_by_table(rows)[5]
+    qc = query_codes([float(x) for x in rows[0]["embedding"]])
+    assert qc == [stored[t] for t in range(N_TABLES)]
 
 
 def test_query_plan_has_no_dot_products(spark, tmp_path):
-    """The scale claim: at query time the candidate filter is pure integer
-    bit math on stored columns — the plan must not contain the aggregate-
-    based dot-product expression the inline path uses."""
+    """The scale claim: at query time the candidate filter is a pushed
+    ``tc IN (buckets)`` over stored postings — the plan must not contain
+    the aggregate-based dot-product expression the inline path uses."""
     emb = load_table(spark, SF_DIR, "embeddings")
     dim = embedding_dim(SF_DIR)
-    t = build_lsh_index(spark, emb, os.path.join(tmp_path, "idx"), dim)
+    t = build_lsh_sharded_index(spark, emb, os.path.join(tmp_path, "sidx"), dim)
     qv = query_vector(spark, SF_DIR, 0)
     plan = (
-        ann_topk_from_index(t.load(), qv, k=10)
+        ann_topk_from_sharded(t, qv, k=10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -88,10 +73,9 @@ def test_query_plan_has_no_dot_products(spark, tmp_path):
     )
     # the inline path folds a dot product per plane via aggregate() (16
     # tables x 12 planes = 192 of them); the indexed path may only carry
-    # the re-rank cosine (dot + two norms) and must bit-compare stored codes
+    # the re-rank cosine (dot + two norms)
     assert plan.count("aggregate(") <= 4, "re-rank cosine only, no per-plane dots"
     assert inline_plan.count("aggregate(") > 100, "inline path shape changed?"
-    assert "bit_count" in plan
 
 
 def test_vectorized_codes_bit_identical_to_expression_fold(spark):
@@ -104,11 +88,13 @@ def test_vectorized_codes_bit_identical_to_expression_fold(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     dim = embedding_dim(SF_DIR)
-    fast = {r["vec_id"]: r for r in lsh_index_frame(emb, dim).collect()}
+    fast = _codes_by_table(
+        lsh_exploded_index_frame(emb, dim, n_tables=N_TABLES).collect()
+    )
     ref = {r["vec_id"]: r for r in lsh_index_frame_expr(emb, dim).collect()}
     assert fast.keys() == ref.keys()
     for vid in ref:
-        got = [fast[vid][f"lsh_code_{t}"] for t in range(N_TABLES)]
+        got = [fast[vid][t] for t in range(N_TABLES)]
         want = [ref[vid][f"lsh_code_{t}"] for t in range(N_TABLES)]
         assert got == want, f"vec {vid}: vectorized codes diverge"
 
@@ -261,26 +247,34 @@ def test_ranked_probe_not_worse_than_blind_at_equal_budget(spark, tmp_path):
     margin-ranked probing must recall at least as much of the exact
     top-10, averaged over probe vectors, as the blind ball — it spends
     the identical budget on better-chosen buckets (measured: beats or
-    ties the ball on every probe vector at sf0.001/sf0.01)."""
+    ties the ball on every probe vector at sf0.001/sf0.01). 16 tables,
+    the dial of the ``ann_lsh_ranked_recall`` metric."""
     from delta_lake_optimizations_spark.operators.lsh_index import (
-        ann_topk_from_index,
-        ann_topk_from_index_ranked,
-        build_lsh_index,
+        ann_topk_from_sharded_ranked,
     )
     from delta_lake_optimizations_spark.operators.similarity import topk_cosine
 
     emb = load_table(spark, SF_DIR, "embeddings")
     dim = embedding_dim(SF_DIR)
-    idx = build_lsh_index(spark, emb, os.path.join(tmp_path, "idx"), dim).load()
+    t = build_lsh_sharded_index(
+        spark, emb, os.path.join(tmp_path, "sidx"), dim, n_tables=N_TABLES,
+        n_shards=32,
+    )
     ranked_mean, blind_mean = 0.0, 0.0
     for vid in (0, 1, 2):
         qv = query_vector(spark, SF_DIR, vid)
         exact = {r[0] for r in topk_cosine(emb, qv, k=10).collect()}
         ranked = {
-            r[0] for r in ann_topk_from_index_ranked(idx, qv, k=10, budget=79).collect()
+            r[0]
+            for r in ann_topk_from_sharded_ranked(
+                t, qv, k=10, budget=79, n_tables=N_TABLES
+            ).collect()
         }
         blind = {
-            r[0] for r in ann_topk_from_index(idx, qv, k=10, probe_hamming=2).collect()
+            r[0]
+            for r in ann_topk_from_sharded(
+                t, qv, k=10, probe_hamming=2, n_tables=N_TABLES
+            ).collect()
         }
         ranked_mean += len(exact & ranked) / max(1, len(exact))
         blind_mean += len(exact & blind) / max(1, len(exact))
@@ -459,3 +453,25 @@ def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower(), plan
     assert "hashpartitioning" in plan.lower(), plan
+
+
+def test_sharded_build_falls_back_to_range_partitioning(spark, tmp_path, monkeypatch):
+    """When no shard mapping can be drawn from the sampled histogram, the
+    build must still write contiguous, non-overlapping per-file tc ranges
+    (range partitioning), not the input's partition layout — probe file
+    skipping depends on it."""
+    from delta_lake_optimizations_spark.operators import lsh_index
+
+    monkeypatch.setattr(lsh_index, "_tc_shard_token_map", lambda *a, **k: None)
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    t = build_lsh_sharded_index(
+        spark, emb, os.path.join(tmp_path, "sidx"), embedding_dim(SF_DIR),
+        n_shards=16,
+    )
+    ranges = sorted(
+        (int(f.stats["minValues"]["tc"]), int(f.stats["maxValues"]["tc"]))
+        for f in t.snapshot().files
+    )
+    assert len(ranges) >= 8, ranges
+    for (_, hi_a), (lo_b, _) in zip(ranges, ranges[1:]):
+        assert hi_a < lo_b, ranges
