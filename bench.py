@@ -280,13 +280,13 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
             t0 = time.perf_counter()
             ivf_t = build_ivf_index(
                 spark, corpus, os.path.join(root, sub + "_ivfidx"),
-                nlist=nlist, seed=7, sample_fraction=0.1,
+                nlist=nlist, seed=7,
             )
             res["ivf_build_sec"] = round(time.perf_counter() - t0, 4)
             t0 = time.perf_counter()
             ivfpq_t = build_ivfpq_index(
                 spark, corpus, os.path.join(root, sub + "_ivfpqidx"),
-                nlist=nlist, m=pq_m, ksub=pq_ksub, seed=7, sample_fraction=0.1,
+                nlist=nlist, m=pq_m, ksub=pq_ksub, seed=7,
             )
             res["ivfpq_build_sec"] = round(time.perf_counter() - t0, 4)
 
@@ -481,7 +481,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
         t0 = time.perf_counter()
         dt = _build_ivf(
             spark, bench_side, os.path.join(root, "decontamidx"),
-            nlist=64, seed=7, sample_fraction=0.1,
+            nlist=64, seed=7,
         )
         out["decontam_index_build_sec"] = round(time.perf_counter() - t0, 4)
         t0 = time.perf_counter()

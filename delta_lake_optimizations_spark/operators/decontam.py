@@ -349,7 +349,7 @@ def decontam_embedding_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
 # the benchmark never broadcast, the corpus shuffled once by cell id.
 # Same crossover logic as every ANN family here: build once, probe
 # cheap. ``decontam_embedding_matches_broadcast`` is the oracle-backed
-# equality twin (deterministic: seeded KMeans, fixed probe ranking).
+# equality twin (deterministic: seeded k-means, fixed probe ranking).
 # ---------------------------------------------------------------------------
 
 
@@ -449,7 +449,7 @@ def _cached_bench_ivf_index(spark, sf_dir: str, nlist: int = 8):
     from delta_lake_optimizations_spark.table import GraftTable
 
     key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|bench-ivf|{nlist}|"
+        f"{os.path.abspath(sf_dir)}|bench-ivf-np|{nlist}|"
         f"{_ivf_corpus_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "spark_graft_bench_ivf", key)

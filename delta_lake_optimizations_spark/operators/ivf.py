@@ -6,8 +6,10 @@ cell's posting list, and at query time probe only the ``nprobe`` nearest
 cells — the classic IVF-Flat design from the FAISS / Jegou et al. lineage,
 expressed in Spark primitives:
 
-- **build**: ``pyspark.ml`` KMeans (seeded, deterministic) fits on a
-  sample; assignment is one ``transform`` pass — both distributed.
+- **build**: seeded NumPy k-means (``operators/kmeans.py``) on a bounded
+  hash-ordered sample, driver-side; assignment is one Arrow-batched
+  argmin pass over the corpus (``assign_to_centroids``), shared with the
+  append path.
 - **search**: centroid scan is driver-side (``nlist`` is small by design,
   e.g. 4096 at 1e9 vectors); candidates come from a partition-pruned
   filter ``list_id IN (probes)``, then exact cosine re-rank with
@@ -22,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from delta_lake_optimizations_spark.operators.kmeans import (
+    kmeans,
+    nearest,
+    probe_cells,
+    training_sample,
+)
 from delta_lake_optimizations_spark.operators.similarity import topk_cosine
 from delta_lake_optimizations_spark.queries.vectors import (
     cosine_with_norms,
@@ -37,7 +45,6 @@ def ivf_build(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Fit centroids and assign every vector to its nearest cell.
 
@@ -45,19 +52,15 @@ def ivf_build(
     plus a ``list_id`` int column, and ``centroids`` is the nlist x dim
     list (small, driver-side — it IS the index metadata).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    centroids = fit_centroids(training_sample(df, vec_col, nlist, seed), nlist, seed)
+    return assign_to_centroids(df, centroids, vec_col=vec_col), centroids
 
-    featured = df.withColumn("__features", array_to_vector(F.col(vec_col).cast("array<double>")))
-    fit_input = featured
-    if sample_fraction is not None:
-        fit_input = featured.sample(fraction=sample_fraction, seed=seed)
-    model = KMeans(k=nlist, seed=seed, featuresCol="__features", predictionCol="list_id").fit(
-        fit_input
-    )
-    assigned = model.transform(featured).drop("__features")
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-    return assigned, centroids
+
+def fit_centroids(X, nlist: int, seed: int) -> list[list[float]]:
+    """k-means centroids of the sample matrix ``X``, rounded to 8 dp (the
+    JSON-exact values the index stores), so inline and materialized paths
+    assign and probe with identical numbers."""
+    return [[round(x, 8) for x in c] for c in kmeans(X, nlist, seed).tolist()]
 
 
 def ivf_search(
@@ -70,14 +73,7 @@ def ivf_search(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe the ``nprobe`` cells nearest the query, exact-rerank to top-k."""
-    import math
-
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return math.fsum((x - y) ** 2 for x, y in zip(a, b))
-
-    order = sorted(range(len(centroids)), key=lambda i: sqdist(centroids[i], query_vec))
-    probes = order[:nprobe]
-    cand = assigned.filter(F.col("list_id").isin(probes))
+    cand = assigned.filter(F.col("list_id").isin(probe_cells(centroids, query_vec, nprobe)))
     return topk_cosine(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -94,18 +90,11 @@ def _knn_join_cells(
     broadcast against the assigned frame, candidates equi-joined on the
     cell id — shuffle on ``list_id``, quadratic only WITHIN a cell,
     never across the corpus — exact cosine + per-src top-k window."""
-    import math
-
     from pyspark.sql import Window
 
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return math.fsum((x - y) ** 2 for x, y in zip(a, b))
-
-    probe_rows = []
-    for i, ci in enumerate(centroids):
-        order = sorted(range(len(centroids)), key=lambda j: sqdist(ci, centroids[j]))
-        for j in order[:nprobe]:
-            probe_rows.append((i, j))
+    probe_rows = [
+        (i, j) for i, ci in enumerate(centroids) for j in probe_cells(centroids, ci, nprobe)
+    ]
     probes = assigned.sparkSession.createDataFrame(
         probe_rows, "list_id int, probe_id int"
     )
@@ -156,23 +145,19 @@ def ivf_knn_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """Approximate k-NN JOIN (every row, not one query) blocked by IVF
     cells: each vector's candidates are the vectors assigned to its own
     cell plus its ``nprobe - 1`` next-nearest cells.
 
-    This is the INLINE form (fits KMeans per call — right for one-off
+    This is the INLINE form (fits k-means per call — right for one-off
     exploration); ``knn_join_from_ivf_index`` answers the same join from
     a materialized index with no refit. On clustered embeddings (the
     realistic case) recall is high because true neighbours share a
     Voronoi cell; see tests/test_ann_and_components.py for the pinned
     recall bound.
     """
-    assigned, centroids = ivf_build(
-        df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed,
-        sample_fraction=sample_fraction,
-    )
+    assigned, centroids = ivf_build(df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed)
     return _knn_join_cells(assigned, centroids, nprobe, k, id_col, vec_col)
 
 
@@ -185,7 +170,7 @@ def knn_join_from_ivf_index(
 ) -> DataFrame:
     """Batch k-NN JOIN answered from the MATERIALIZED IVF index: cell
     assignments come off the stored table (one pruned columnar scan) and
-    the probe map from the stored centroids — no KMeans fit at query
+    the probe map from the stored centroids — no k-means fit at query
     time, the batch sibling of ``ann_topk_from_ivf_index``. The same
     works against an IVF-PQ table (its layout is a superset: the raw
     vector column rides along for exactly this kind of exact-math
@@ -224,8 +209,8 @@ def ann_ivf_topk(spark, sf_dir: str) -> DataFrame:
 # GraftTable PARTITIONED BY list_id, centroids carried in table properties.
 # A probe loads only the nprobe partitions nearest the query — hive-dir +
 # stats pruning through the engine's own skip_where machinery — so query
-# IO is nprobe/nlist of the index at any scale. Build is one distributed
-# KMeans fit + assignment pass, paid once per corpus.
+# IO is nprobe/nlist of the index at any scale. Build is one sampled
+# k-means fit + one distributed assignment pass, paid once per corpus.
 # ---------------------------------------------------------------------------
 
 import hashlib as _hashlib
@@ -244,7 +229,6 @@ def build_ivf_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ):
     """Materialize the IVF index: ``(list_id, id, vector)`` partitioned by
     ``list_id`` (one hive dir per Voronoi cell), centroids JSON in the
@@ -254,19 +238,14 @@ def build_ivf_index(
     pattern as the bloom sidecars). Returns the table handle."""
     from delta_lake_optimizations_spark.table import GraftTable
 
-    assigned, centroids = ivf_build(
-        df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed,
-        sample_fraction=sample_fraction,
-    )
+    assigned, centroids = ivf_build(df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed)
     t = GraftTable(spark, path)
     t.write(
         assigned.select("list_id", id_col, vec_col),
         mode="overwrite",
         partition_by=["list_id"],
         properties={
-            CENTROIDS_PROP: _json.dumps(
-                [[round(x, 8) for x in c] for c in centroids]
-            ),
+            CENTROIDS_PROP: _json.dumps(centroids),
             "graft.ivf.nlist": str(nlist),
             # one writer task per cell -> one file per hive partition
             # (instead of tasks x cells small files); the probe then reads
@@ -293,16 +272,8 @@ def ann_topk_from_ivf_index(
     """Top-k from the materialized IVF index: rank centroids driver-side
     (nlist is small by design), load ONLY the nprobe nearest cells'
     partitions (``list_id IN probes`` -> hive-partition pruning), exact
-    cosine re-rank. No KMeans fit, no full scan, at query time."""
-    import math
-
-    centroids = ivf_index_centroids(table)
-
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return math.fsum((x - y) ** 2 for x, y in zip(a, b))
-
-    order = sorted(range(len(centroids)), key=lambda i: sqdist(centroids[i], query_vec))
-    probes = order[:nprobe]
+    cosine re-rank. No k-means fit, no full scan, at query time."""
+    probes = probe_cells(ivf_index_centroids(table), query_vec, nprobe)
     cand = table.load(skip_where=[("list_id", "in", probes)]).select(id_col, vec_col)
     return topk_cosine(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -325,22 +296,15 @@ def ann_topk_batch_from_ivf(
     results match the single-query probe row-for-row (pinned by pytest) —
     what batching buys is amortization: one scan setup, one plan compile,
     one job for Q queries instead of Q of each."""
-    import math
-
     from delta_lake_optimizations_spark.operators.similarity import (
         topk_per_query,
     )
 
     centroids = ivf_index_centroids(table)
-
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return math.fsum((x - y) ** 2 for x, y in zip(a, b))
-
     probe_rows: list[tuple[int, int]] = []
     cells: set[int] = set()
     for qid, qv in queries:
-        order = sorted(range(len(centroids)), key=lambda i: sqdist(centroids[i], qv))
-        for c in order[:nprobe]:
+        for c in probe_cells(centroids, qv, nprobe):
             probe_rows.append((int(qid), int(c)))
             cells.add(int(c))
     spark = table.spark
@@ -375,15 +339,8 @@ def ann_topk_batch_from_ivf(
 
 def ivf_probe_files_scanned(table, query_vec: list[float], nprobe: int = 4) -> int:
     """Index files the probe reads (partition pruning, driver-side)."""
-    import math
-
-    centroids = ivf_index_centroids(table)
-
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return math.fsum((x - y) ** 2 for x, y in zip(a, b))
-
-    order = sorted(range(len(centroids)), key=lambda i: sqdist(centroids[i], query_vec))
-    return table.files_scanned(skip_where=[("list_id", "in", order[:nprobe])])
+    probes = probe_cells(ivf_index_centroids(table), query_vec, nprobe)
+    return table.files_scanned(skip_where=[("list_id", "in", probes)])
 
 
 def _ivf_corpus_fingerprint(sf_dir: str) -> str:
@@ -399,7 +356,7 @@ def _cached_ivf_index(spark, sf_dir: str, nlist: int = 8):
     from delta_lake_optimizations_spark.table import GraftTable
 
     key = _hashlib.sha256(
-        f"{_os.path.abspath(sf_dir)}|ivf|{nlist}|"
+        f"{_os.path.abspath(sf_dir)}|ivf-np|{nlist}|"
         f"{_ivf_corpus_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:16]
     path = _os.path.join(_tempfile.gettempdir(), "spark_graft_ivf_index", key)
@@ -414,7 +371,7 @@ def _cached_ivf_index(spark, sf_dir: str, nlist: int = 8):
 def ann_ivf_topk_indexed(spark, sf_dir: str) -> DataFrame:
     """IVF-Flat approximate top-10 for vec_id=0 served from the
     MATERIALIZED index (list_id-partitioned GraftTable, centroids from
-    table properties): no per-query KMeans fit, and the probe reads only
+    table properties): no per-query k-means fit, and the probe reads only
     nprobe/nlist of the index via partition pruning. (Rows-only driver
     check; ``ann_ivf_indexed_matches_inline`` is the oracle-backed
     equivalence metric.)"""
@@ -441,23 +398,20 @@ def assign_to_centroids(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Nearest-centroid assignment against FIXED centroids (no refit) —
-    one Arrow-batched numpy argmin pass; used by the index append path so
-    increments join the same Voronoi cells as the original build."""
+    one Arrow-batched numpy argmin pass; the build and the index append
+    path share it, so increments join the same Voronoi cells."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     C = np.array(centroids, dtype=np.float64)  # (nlist, dim)
-    Cn = (C * C).sum(axis=1)  # |c|^2, reused per batch
 
-    def nearest(emb):
+    def assign(emb):
         X = np.vstack([np.asarray(v, dtype=np.float64) for v in emb])
-        # argmin over |x-c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 constant per row
-        d = Cn[None, :] - 2.0 * (X @ C.T)
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
+        return pd.Series(nearest(X, C).astype("int32"))
 
-    nearest.__annotations__ = {"emb": pd.Series, "return": pd.Series}
-    udf = pandas_udf("int")(nearest)
+    assign.__annotations__ = {"emb": pd.Series, "return": pd.Series}
+    udf = pandas_udf("int")(assign)
     return df.withColumn("list_id", udf(F.col(vec_col)))
 
 

@@ -44,7 +44,7 @@ clustered bench corpus, residual PQ 0.9+ at the same dials).
   ``k * refine_factor`` are exact-cosine re-ranked in the SAME
   single-scan plan (the float vector rides the per-partition ADC top-k
   heap — no second pass, no broadcast-build job; VERDICT r09 #1).
-  Per-query IO = nprobe/nlist of the probed cells' columns; no KMeans
+  Per-query IO = nprobe/nlist of the probed cells' columns; no k-means
   fit, no encode, no full scan at query time.
 
 100 TB notes: at production dials (nlist=4096, m=16, ksub=256, dim=768)
@@ -65,18 +65,22 @@ import math as _math
 import os as _os
 import tempfile as _tempfile
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from delta_lake_optimizations_spark.operators.ivf import (
     CENTROIDS_PROP,
     assign_to_centroids,
-    ivf_build,
+    fit_centroids,
 )
-from delta_lake_optimizations_spark.operators.pq import (
-    pq_encode_col,
-    pq_train,
+from delta_lake_optimizations_spark.operators.kmeans import (
+    PER_CENTROID,
+    nearest,
+    probe_cells,
+    training_sample,
 )
+from delta_lake_optimizations_spark.operators.pq import fit_codebooks, pq_encode_col
 from delta_lake_optimizations_spark.queries.vectors import cosine, l2_norm_sq
 from delta_lake_optimizations_spark.registry import query
 
@@ -84,14 +88,10 @@ PQ_BOOKS_PROP = "graft.ivfpq.codebooks"
 
 
 def _round_books(books: list[list[list[float]]]) -> list[list[list[float]]]:
-    """The single rounding choke point (8 dp, JSON round-trip exact):
-    both the stored index and the inline twin encode and score with
-    THESE values."""
+    """The single codebook rounding choke point (8 dp, JSON round-trip
+    exact; centroids round in ``ivf.fit_centroids``): both the stored
+    index and the inline twin encode and score with THESE values."""
     return [[[round(x, 8) for x in c] for c in cb] for cb in books]
-
-
-def _round_centroids(cents: list[list[float]]) -> list[list[float]]:
-    return [[round(x, 8) for x in c] for c in cents]
 
 
 def _with_residuals(
@@ -114,31 +114,36 @@ def _with_residuals(
     ).drop("_cent")
 
 
-def _train_and_encode(
+def _fit(
+    df: DataFrame, nlist: int, m: int, ksub: int, vec_col: str, seed: int
+) -> tuple[list[list[float]], list[list[list[float]]]]:
+    """IVF centroids + residual-PQ codebooks from ONE collected sample.
+    The sample is hash-ordered, so its first ``PER_CENTROID * nlist``
+    rows are exactly ``ivf_build``'s sample: the cells match a plain IVF
+    index built at the same seed."""
+    X = training_sample(df, vec_col, max(nlist, ksub), seed)
+    centroids = fit_centroids(X[: PER_CENTROID * nlist], nlist, seed)
+    C = np.asarray(centroids)
+    books = _round_books(fit_codebooks(X - C[nearest(X, C)], m, ksub, seed))
+    return centroids, books
+
+
+def _encode(
     assigned: DataFrame,
     centroids: list[list[float]],
-    m: int,
-    ksub: int,
+    books: list[list[list[float]]],
     vec_col: str,
-    seed: int,
-    sample_fraction: float | None,
-) -> tuple[DataFrame, list[list[list[float]]]]:
-    """Residual-PQ codebooks + codes + stored norm for an IVF-assigned
-    frame. Returns (encoded frame carrying ``pq_code`` and ``vnorm``,
-    rounded codebooks)."""
+) -> DataFrame:
+    """Residual codes + stored norm for an IVF-assigned frame — the one
+    encode pass shared by build, append and the inline twin."""
     res = _with_residuals(assigned, centroids, vec_col)
-    books = _round_books(
-        pq_train(res, m=m, ksub=ksub, vec_col="_res", seed=seed,
-                 sample_fraction=sample_fraction)
-    )
-    encoded = (
+    return (
         pq_encode_col(res, books, vec_col="_res")
         .drop("_res")
         .withColumn(
             "vnorm", F.sqrt(l2_norm_sq(F.col(vec_col).cast("array<double>")))
         )
     )
-    return encoded, books
 
 
 def build_ivfpq_index(
@@ -151,22 +156,16 @@ def build_ivfpq_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ):
-    """Materialize the IVF-PQ index. Build cost = one KMeans fit +
-    assignment pass (IVF) + M small KMeans fits (PQ codebooks, on the
-    residuals) + one Arrow-batched encode pass — all distributed, paid
-    once per corpus. Returns the table handle."""
+    """Materialize the IVF-PQ index. Build cost = one bounded sample
+    collect, the IVF and M per-subspace residual k-means fits on it in
+    NumPy (driver-side), then one distributed assignment + Arrow-batched
+    encode pass, paid once per corpus. Returns the table handle."""
     from delta_lake_optimizations_spark.table import GraftTable
 
-    assigned, raw_centroids = ivf_build(
-        df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed,
-        sample_fraction=sample_fraction,
-    )
-    centroids = _round_centroids(raw_centroids)
-    encoded, books = _train_and_encode(
-        assigned, centroids, m, ksub, vec_col, seed, sample_fraction
-    )
+    centroids, books = _fit(df, nlist, m, ksub, vec_col, seed)
+    assigned = assign_to_centroids(df, centroids, vec_col=vec_col)
+    encoded = _encode(assigned, centroids, books, vec_col)
     t = GraftTable(spark, path)
     t.write(
         encoded.select("list_id", id_col, "pq_code", "vnorm", vec_col),
@@ -190,14 +189,6 @@ def ivfpq_metadata(table) -> tuple[list[list[float]], list[list[list[float]]]]:
     """(centroids, codebooks) back out of the table properties."""
     props = table.snapshot().properties
     return _json.loads(props[CENTROIDS_PROP]), _json.loads(props[PQ_BOOKS_PROP])
-
-
-def _probe_cells(centroids: list[list[float]], query_vec: list[float], nprobe: int) -> list[int]:
-    def sqdist(a: list[float], b: list[float]) -> float:
-        return _math.fsum((x - y) ** 2 for x, y in zip(a, b))
-
-    order = sorted(range(len(centroids)), key=lambda i: sqdist(centroids[i], query_vec))
-    return order[:nprobe]
 
 
 def _ip_adc_score(
@@ -384,7 +375,7 @@ def ann_topk_from_ivfpq_index(
     ADC top k*rf over the probed cells -> exact cosine re-rank from the
     float column, in one scan."""
     centroids, books = ivfpq_metadata(table)
-    probes = _probe_cells(centroids, query_vec, nprobe)
+    probes = probe_cells(centroids, query_vec, nprobe)
     cand = table.load(skip_where=[("list_id", "in", probes)])
     cand, score = _with_adc_score(cand, books, centroids, probes, query_vec)
     return _adc_refine_topk(cand, score, query_vec, k, refine_factor, id_col, vec_col)
@@ -427,7 +418,7 @@ def ann_topk_batch_from_ivfpq(
     qrows, prows = [], []
     cells: set[int] = set()
     for qid, qv in queries:
-        probes = _probe_cells(centroids, qv, nprobe)
+        probes = probe_cells(centroids, qv, nprobe)
         qrows.append(
             (int(qid), [float(x) for x in qv], _lut_flat(books, qv))
         )
@@ -491,18 +482,15 @@ def ivfpq_search_inline(
 ) -> DataFrame:
     """The same IVF-PQ search with NOTHING materialized: fit, encode,
     probe, score in one plan. Exists as the independent re-derivation the
-    ``ann_ivfpq_matches_inline`` twin compares against (seeded KMeans ->
+    ``ann_ivfpq_matches_inline`` twin compares against (seeded k-means ->
     same centroids -> same residuals -> same books/codes -> same ADC
     values), and as the one-off-exploration form. The served path is the
     index."""
-    assigned, raw_centroids = ivf_build(
-        df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed
+    centroids, books = _fit(df, nlist, m, ksub, vec_col, seed)
+    encoded = _encode(
+        assign_to_centroids(df, centroids, vec_col=vec_col), centroids, books, vec_col
     )
-    centroids = _round_centroids(raw_centroids)
-    encoded, books = _train_and_encode(
-        assigned, centroids, m, ksub, vec_col, seed, None
-    )
-    probes = _probe_cells(centroids, query_vec, nprobe)
+    probes = probe_cells(centroids, query_vec, nprobe)
     cand = encoded.filter(F.col("list_id").isin(probes))
     cand, score = _with_adc_score(cand, books, centroids, probes, query_vec)
     return _adc_refine_topk(cand, score, query_vec, k, refine_factor, id_col, vec_col)
@@ -511,7 +499,7 @@ def ivfpq_search_inline(
 def ivfpq_probe_files_scanned(table, query_vec: list[float], nprobe: int = 4) -> int:
     """Index files the probe reads (partition pruning, driver-side)."""
     centroids, _ = ivfpq_metadata(table)
-    probes = _probe_cells(centroids, query_vec, nprobe)
+    probes = probe_cells(centroids, query_vec, nprobe)
     return table.files_scanned(skip_where=[("list_id", "in", probes)])
 
 
@@ -529,14 +517,7 @@ def append_to_ivfpq_index(
     standard trade; rebuild when recall decays."""
     centroids, books = ivfpq_metadata(table)
     assigned = assign_to_centroids(df, centroids, vec_col=vec_col)
-    res = _with_residuals(assigned, centroids, vec_col)
-    encoded = (
-        pq_encode_col(res, books, vec_col="_res")
-        .drop("_res")
-        .withColumn(
-            "vnorm", F.sqrt(l2_norm_sq(F.col(vec_col).cast("array<double>")))
-        )
-    )
+    encoded = _encode(assigned, centroids, books, vec_col)
     table.write(
         encoded.select("list_id", id_col, "pq_code", "vnorm", vec_col),
         mode="append",
@@ -553,7 +534,7 @@ def _cached_ivfpq_index(spark, sf_dir: str, nlist: int = 8, m: int = 4, ksub: in
     from delta_lake_optimizations_spark.table import GraftTable
 
     key = _hashlib.sha256(
-        f"{_os.path.abspath(sf_dir)}|ivfpq-ip|{nlist}|{m}|{ksub}|"
+        f"{_os.path.abspath(sf_dir)}|ivfpq-np|{nlist}|{m}|{ksub}|"
         f"{_corpus_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:16]
     path = _os.path.join(_tempfile.gettempdir(), "spark_graft_ivfpq_index", key)

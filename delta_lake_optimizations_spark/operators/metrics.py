@@ -930,7 +930,7 @@ def ann_lsh_sharded_matches_inline(spark: SparkSession, sf_dir: str) -> DataFram
 def ann_ivf_indexed_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized IVF index (list_id-partitioned table + centroids
     from properties) must return EXACTLY the inline path's result (same
-    seeded KMeans -> same centroids -> same probe cells -> same candidate
+    seeded k-means -> same centroids -> same probe cells -> same candidate
     set). A stale index, a mis-serialized centroid, or broken partition
     pruning makes n_mismatch > 0."""
     from delta_lake_optimizations_spark.operators.ivf import (
@@ -974,7 +974,7 @@ def ann_ivf_indexed_matches_inline(spark: SparkSession, sf_dir: str) -> DataFram
 def ann_ivfpq_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized IVF-PQ index (codes inside the list_id-partitioned
     table, centroids + codebooks from properties) must return EXACTLY the
-    inline re-derivation's result: seeded KMeans -> same centroids and
+    inline re-derivation's result: seeded k-means -> same centroids and
     codebooks (both rounded at the shared 8-dp choke point) -> same probe
     cells -> same stored codes -> bit-identical ADC -> same refine and
     tie-break. A stale index, a mis-serialized codebook, broken partition
@@ -1044,7 +1044,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_join_ivf_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch k-NN join answered from the materialized IVF index must
     return EXACTLY the inline form's result at the same (nlist=8,
-    nprobe=3, seed=7) dial: seeded KMeans makes the inline assignment
+    nprobe=3, seed=7) dial: seeded k-means makes the inline assignment
     identical to the stored one, and both forms share the one
     ``_knn_join_cells`` tail — so any divergence means a stale index, a
     drifted stored assignment, or a probe-map bug. n_mismatch counts

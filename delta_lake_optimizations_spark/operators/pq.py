@@ -10,9 +10,10 @@ lookup table of exact subdistances, summed per code.
 
 Spark-first split of the work:
 
-- **train** (``pq_train``): one ``pyspark.ml`` KMeans per subspace on a
-  sample — M small distributed fits; the codebook (M x ksub x D/M
-  floats) is index METADATA, driver-held and broadcastable.
+- **train** (``pq_train``): one bounded hash-ordered sample collected
+  once, then one seeded NumPy k-means per subspace on the driver
+  (``operators/kmeans.py``); the codebook (M x ksub x D/M floats) is
+  index METADATA, driver-held and broadcastable.
 - **encode** (``pq_encode``): vectorized NumPy argmin inside Arrow-
   batched ``mapInPandas`` — the heavy per-row math rides C loops over
   whole batches, the canonical "Python only via Arrow" fast path.
@@ -31,10 +32,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from delta_lake_optimizations_spark.operators.kmeans import kmeans, nearest, training_sample
 from delta_lake_optimizations_spark.queries.vectors import cosine
 from delta_lake_optimizations_spark.registry import query
 
@@ -45,56 +48,33 @@ def pq_train(
     ksub: int = 16,
     vec_col: str = "embedding",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ) -> list[list[list[float]]]:
     """Fit M per-subspace codebooks (each ksub x D/M). Dimension D must
     divide evenly by ``m``. Returns driver-side codebooks (metadata)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    return fit_codebooks(training_sample(df, vec_col, ksub, seed), m, ksub, seed)
 
-    dim = len(df.select(vec_col).first()[0])
+
+def fit_codebooks(X: np.ndarray, m: int, ksub: int, seed: int) -> list[list[list[float]]]:
+    """One k-means per subspace of the sample matrix ``X`` (subspace
+    ``sub`` seeded ``seed + sub``)."""
+    dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    base = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=seed)
-    base = base.cache()
+    return [
+        kmeans(X[:, sub * dsub : (sub + 1) * dsub], ksub, seed + sub).tolist()
+        for sub in range(m)
+    ]
 
-    # r11 (guide §2.6 "overlap independent jobs"): the M per-subspace
-    # fits are INDEPENDENT seeded jobs over the same cached frame, but
-    # the sequential loop left most of local[32] idle through each fit's
-    # straggler tail (KMeans runs ~a dozen small aggregation rounds per
-    # fit, each with a sync barrier). Materialize the cache once, then
-    # run the fits from a small thread pool so each fit's barriers
-    # back-fill the others' idle cores. Bit-identical codebooks: each
-    # fit sees the same materialized partitions, same seed, same
-    # treeAggregate topology — concurrency changes scheduling, not the
-    # arithmetic (pinned by tests/test_pq.py equality vs the index
-    # twins).
-    def fit_sub(sub: int) -> list[list[float]]:
-        sub_df = base.select(
-            array_to_vector(F.slice(F.col("_v"), sub * dsub + 1, dsub)).alias(
-                "__features"
-            )
-        )
-        model = KMeans(k=ksub, seed=seed + sub, featuresCol="__features").fit(
-            sub_df
-        )
-        return [[float(x) for x in c] for c in model.clusterCenters()]
 
-    try:
-        base.count()  # materialize the cache before fanning out the fits
-        if m > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
-                codebooks = list(pool.map(fit_sub, range(m)))
-        else:
-            codebooks = [fit_sub(0)]
-    finally:
-        base.unpersist()
-    return codebooks
+def _codes(vectors, books: list[np.ndarray]) -> np.ndarray:
+    """(n, M) nearest-sub-centroid codes for a batch of vectors."""
+    vecs = np.vstack([np.asarray(v, dtype=np.float64) for v in vectors])
+    dsub = books[0].shape[1]
+    return np.stack(
+        [nearest(vecs[:, s * dsub : (s + 1) * dsub], b) for s, b in enumerate(books)],
+        axis=1,
+    )
 
 
 def pq_encode(
@@ -106,24 +86,11 @@ def pq_encode(
 ) -> DataFrame:
     """Compress vectors to M small codes (``array<int>``, values <
     ksub). Vectorized argmin over whole Arrow batches."""
-    import numpy as np
-
     books = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    m = len(books)
-    dsub = books[0].shape[1]
 
     def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            vecs = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            codes = np.empty((len(vecs), m), dtype=np.int32)
-            for sub in range(m):
-                chunk = vecs[:, sub * dsub : (sub + 1) * dsub]
-                # |x - c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 constant per row
-                d2 = (
-                    -2.0 * chunk @ books[sub].T
-                    + (books[sub] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, sub] = d2.argmin(axis=1)
+            codes = _codes(pdf[vec_col], books)
             yield pd.DataFrame(
                 {id_col: pdf[id_col], code_col: [list(map(int, c)) for c in codes]}
             )
@@ -145,24 +112,12 @@ def pq_encode_col(
     a join-back shuffle (the shape the materialized IVF-PQ build needs —
     same pattern as ``ivf.assign_to_centroids``). Same vectorized argmin
     math as ``pq_encode``; a pytest pins code-for-code equality."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     books = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    m = len(books)
-    dsub = books[0].shape[1]
 
     def encode(emb):
-        vecs = np.vstack([np.asarray(v, dtype=np.float64) for v in emb])
-        codes = np.empty((len(vecs), m), dtype=np.int32)
-        for sub in range(m):
-            chunk = vecs[:, sub * dsub : (sub + 1) * dsub]
-            d2 = (
-                -2.0 * chunk @ books[sub].T
-                + (books[sub] ** 2).sum(axis=1)[None, :]
-            )
-            codes[:, sub] = d2.argmin(axis=1)
-        return pd.Series([list(map(int, c)) for c in codes])
+        return pd.Series([list(map(int, c)) for c in _codes(emb, books)])
 
     encode.__annotations__ = {"emb": pd.Series, "return": pd.Series}
     udf = pandas_udf("array<int>")(encode)
@@ -173,8 +128,6 @@ def _adc_table(
     codebooks: list[list[list[float]]], query_vec: list[float]
 ) -> list[list[float]]:
     """M x ksub exact squared subdistances from the query's subvectors."""
-    import numpy as np
-
     qv = np.asarray(query_vec, dtype=np.float64)
     m = len(codebooks)
     dsub = len(codebooks[0][0])

@@ -6,9 +6,9 @@ sizes, which is the published recipe for web-scale (100 TB) semantic
 dedup of LLM training data.
 
 Spark mapping:
-- cluster assignment: ``pyspark.ml`` KMeans (seeded) via
-  :func:`..operators.ivf.ivf_build` — one fit (optionally on a sample)
-  plus one model-broadcast transform, no shuffle beyond KMeans itself;
+- cluster assignment: :func:`..operators.ivf.ivf_build` — seeded NumPy
+  k-means on a bounded hash-ordered sample (driver-side), then one
+  Arrow-batched argmin pass over the corpus, no shuffle;
 - within-cluster pairing: :func:`..operators.similarity.
   cosine_near_dup_pairs` with ``block_col='list_id'`` — an equi-join on
   the cluster id, so the pair space is bounded per cluster and the join
@@ -19,10 +19,10 @@ Spark mapping:
   values), applied as a left-anti join.
 
 Scale dials: ``nlist`` bounds the per-cluster quadratic term (SemDeDup
-uses ~11k clusters for 1.3B docs — size nlist ~ n / 10k); at extreme
-scale fit KMeans on ``sample_fraction`` and let the transform stay a
-broadcast map. No Python touches the data path except the Arrow-free
-JVM KMeans transform.
+uses ~11k clusters for 1.3B docs — size nlist ~ n / 10k). The k-means
+training sample is capped at 256 rows per cluster (``kmeans.PER_CENTROID``)
+and a fixed byte budget, so only the assignment pass grows with the
+corpus.
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """Within-cluster near-duplicate pairs ``(vec_a < vec_b, cos_sim)``.
 
@@ -51,14 +50,7 @@ def semantic_dedup_pairs(
     be removed (the SemDeDup paper's dedup-rate-vs-threshold sweep is a
     groupBy over this frame's count at several thresholds).
     """
-    assigned, _ = ivf_build(
-        df,
-        nlist=nlist,
-        vec_col=vec_col,
-        id_col=id_col,
-        seed=seed,
-        sample_fraction=sample_fraction,
-    )
+    assigned, _ = ivf_build(df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed)
     return cosine_near_dup_pairs(
         assigned, threshold=threshold, id_col=id_col, vec_col=vec_col, block_col="list_id"
     )
@@ -71,12 +63,11 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 7,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """Drop every row that has a same-cluster near-duplicate with a
     smaller id; returns the surviving rows of ``df`` unchanged otherwise.
 
-    Deterministic for a fixed seed: KMeans is seeded and the keep rule is
+    Deterministic for a fixed seed: k-means is seeded and the keep rule is
     id-ordered, so reruns (and different partitionings of the same data)
     keep the same rows.
     """
@@ -87,7 +78,6 @@ def semantic_dedup(
         id_col=id_col,
         vec_col=vec_col,
         seed=seed,
-        sample_fraction=sample_fraction,
     )
     losers = pairs.select(F.col("vec_b").alias(id_col)).distinct()
     return df.join(losers, on=id_col, how="left_anti")

@@ -41,6 +41,41 @@ def test_ivf_deterministic(spark):
     _, c1 = ivf_build(emb, nlist=4, seed=7)
     _, c2 = ivf_build(emb, nlist=4, seed=7)
     assert c1 == c2
+    # the same rows at any partition count train the same centroids
+    for n in (1, 4, 8, 32):
+        _, cn = ivf_build(emb.repartition(n), nlist=4, seed=7)
+        assert cn == c1, f"centroids differ at {n} partitions"
+
+
+def test_ivf_build_empty_input_names_vector_column(spark):
+    empty = load_table(spark, SF_DIR, "embeddings").limit(0)
+    with pytest.raises(ValueError, match="embedding"):
+        ivf_build(empty, nlist=4, seed=7)
+
+
+def test_fewer_points_than_cells_still_store_k_centroids(spark, tmp_path):
+    """5 vectors into 8 IVF cells / 16 PQ sub-centroids: the stored
+    centroid and codebook counts must match the nlist / ksub metadata
+    (duplicated centroids, never fewer)."""
+    from delta_lake_optimizations_spark.operators.ivf import (
+        build_ivf_index,
+        ivf_index_centroids,
+    )
+    from delta_lake_optimizations_spark.operators.ivfpq import (
+        build_ivfpq_index,
+        ivfpq_metadata,
+    )
+
+    five = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 5)
+    assert five.count() == 5
+    t = build_ivf_index(spark, five, str(tmp_path / "ivf"), nlist=8, seed=7)
+    assert len(ivf_index_centroids(t)) == int(t.snapshot().properties["graft.ivf.nlist"]) == 8
+    assert t.load().count() == 5
+    t = build_ivfpq_index(spark, five, str(tmp_path / "pq"), nlist=8, m=4, ksub=16)
+    centroids, books = ivfpq_metadata(t)
+    props = t.snapshot().properties
+    assert len(centroids) == int(props["graft.ivf.nlist"]) == 8
+    assert all(len(cb) == int(props["graft.pq.ksub"]) == 16 for cb in books)
 
 
 def _union_find_ground_truth(edges: list[tuple[int, int]]) -> dict[int, int]:

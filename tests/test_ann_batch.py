@@ -17,13 +17,13 @@ from delta_lake_optimizations_spark.operators.ivf import (
 from delta_lake_optimizations_spark.operators.ivfpq import (
     _adc_refine_topk,
     _ip_adc_score,
-    _probe_cells,
     _with_adc_score,
     ann_topk_batch_from_ivfpq,
     ann_topk_from_ivfpq_index,
     build_ivfpq_index,
     ivfpq_metadata,
 )
+from delta_lake_optimizations_spark.operators.kmeans import probe_cells
 from delta_lake_optimizations_spark.operators.lsh_index import (
     ann_topk_batch_from_sharded,
     ann_topk_from_sharded,
@@ -140,7 +140,7 @@ def test_broadcast_lut_matches_literal_lut(spark, tmp_path):
     centroids, books = ivfpq_metadata(t)
     qs = _queries(emb, n=3)
     for _, qv in qs:
-        probes = _probe_cells(centroids, qv, 3)
+        probes = probe_cells(centroids, qv, 3)
         cand = t.load(skip_where=[("list_id", "in", probes)])
         lit_score = _ip_adc_score(books, centroids, probes, qv)
         lit = _adc_refine_topk(cand, lit_score, qv, 10, 4, "vec_id", "embedding")

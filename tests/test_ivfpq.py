@@ -114,10 +114,11 @@ def test_ivfpq_append_assigns_and_encodes_against_stored_metadata(spark, tmp_pat
         r["vec_id"]: (r["list_id"], tuple(r["pq_code"]))
         for r in t_full.load().collect()
     }
-    # incremental: build on half, append the rest without refit. KMeans on
-    # half the corpus gives different centroids/books than the full build,
-    # so compare the APPENDED rows against assignment/encoding under the
-    # half-build's own stored metadata instead.
+    # incremental: build on half, append the rest without refit. A half
+    # corpus trains on a different hash-ordered sample, so its
+    # centroids/books differ from the full build's: compare the APPENDED
+    # rows against assignment/encoding under the half-build's own stored
+    # metadata instead.
     t_inc = build_ivfpq_index(
         spark, half_a, str(tmp_path / "inc"), nlist=4, m=4, ksub=16
     )
@@ -162,8 +163,9 @@ def test_ivf_batch_knn_join_works_on_ivfpq_table(spark, tmp_path):
     """The IVF-PQ layout is a superset of the IVF one (raw vectors ride
     along for exact-math consumers), so the materialized batch k-NN join
     must answer straight off an IVF-PQ table — and agree with the same
-    join off a plain IVF index built at the same seed (identical KMeans
-    -> identical cells -> identical candidates)."""
+    join off a plain IVF index built at the same seed (the IVF-PQ fit
+    trains its centroids on the same hash-ordered sample prefix ->
+    identical centroids -> identical cells -> identical candidates)."""
     from delta_lake_optimizations_spark.catalog import load_table
     from delta_lake_optimizations_spark.operators.ivf import (
         build_ivf_index,

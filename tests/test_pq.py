@@ -18,6 +18,9 @@ def test_pq_compression_shape_and_determinism(spark):
     assert len(books) == 4 and all(len(cb) == 16 for cb in books)
     dim = len(emb.select("embedding").first()[0])
     assert all(len(c) == dim // 4 for cb in books for c in cb)
+    # the same rows at any partition count train the same codebooks
+    for n in (1, 4, 8, 32):
+        assert pq_train(emb.repartition(n), m=4, ksub=16, seed=7) == books, n
 
     a = {r["vec_id"]: r["pq_code"] for r in pq_encode(emb, books).collect()}
     b = {r["vec_id"]: r["pq_code"] for r in pq_encode(emb, books).collect()}
