@@ -168,11 +168,12 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
     file skipping.
 
     Clustered corpora (realistic geometry; uniform is LSH's worst case) at
-    800k and 3.2M vectors, one index per ANN family: the sharded LSH index
+    800k and 3.2M vectors, one index per ANN layout: the sharded LSH index
     (postings exploded per table, keyed by ``tc = table<<planes | code``,
     range-sharded + sorted so a probe reads only the files whose tc range
     contains a probed bucket — IO, including vector decode, is
-    O(candidates)), IVF-Flat, and IVF-PQ with exact refine.
+    O(candidates)), and the IVF-PQ table, probed both exactly (the "ivf"
+    family) and by ADC with exact refine (the "ivfpq" family).
     """
     import shutil
     import statistics
@@ -208,14 +209,12 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
         from delta_lake_optimizations_spark.operators.ivf import (
             ann_topk_batch_from_ivf,
             ann_topk_from_ivf_index,
-            build_ivf_index,
             ivf_probe_files_scanned,
         )
         from delta_lake_optimizations_spark.operators.ivfpq import (
             ann_topk_batch_from_ivfpq,
             ann_topk_from_ivfpq_index,
             build_ivfpq_index,
-            ivfpq_probe_files_scanned,
         )
         from delta_lake_optimizations_spark.operators.lsh_index import (
             ann_topk_batch_from_sharded,
@@ -278,12 +277,6 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
             )
             res["sharded_build_sec"] = round(time.perf_counter() - t0, 4)
             t0 = time.perf_counter()
-            ivf_t = build_ivf_index(
-                spark, corpus, os.path.join(root, sub + "_ivfidx"),
-                nlist=nlist, seed=7,
-            )
-            res["ivf_build_sec"] = round(time.perf_counter() - t0, 4)
-            t0 = time.perf_counter()
             ivfpq_t = build_ivfpq_index(
                 spark, corpus, os.path.join(root, sub + "_ivfpqidx"),
                 nlist=nlist, m=pq_m, ksub=pq_ksub, seed=7,
@@ -331,7 +324,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
                 "bruteforce": lambda qv: topk_cosine(corpus, qv, k=10).count(),
                 "sharded": lambda qv: ann_topk_from_sharded(st, qv, k=10).count(),
                 "ivf": lambda qv: ann_topk_from_ivf_index(
-                    ivf_t, qv, k=10, nprobe=nprobe).count(),
+                    ivfpq_t, qv, k=10, nprobe=nprobe).count(),
                 "ivfpq": lambda qv: ann_topk_from_ivfpq_index(
                     ivfpq_t, qv, k=10, nprobe=nprobe, refine_factor=pq_rf
                 ).count(),
@@ -352,7 +345,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
                 "sharded": lambda: ann_topk_batch_from_sharded(
                     st, batch_qs, dim, k=10).count(),
                 "ivf": lambda: ann_topk_batch_from_ivf(
-                    ivf_t, batch_qs, k=10, nprobe=nprobe).count(),
+                    ivfpq_t, batch_qs, k=10, nprobe=nprobe).count(),
                 "ivfpq": lambda: ann_topk_batch_from_ivfpq(
                     ivfpq_t, batch_qs, k=10, nprobe=nprobe,
                     refine_factor=pq_rf).count(),
@@ -376,7 +369,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
             approx_fns = {
                 "sharded": lambda qv: ann_topk_from_sharded(st, qv, k=10),
                 "ivf": lambda qv: ann_topk_from_ivf_index(
-                    ivf_t, qv, k=10, nprobe=nprobe),
+                    ivfpq_t, qv, k=10, nprobe=nprobe),
                 "ivfpq": lambda qv: ann_topk_from_ivfpq_index(
                     ivfpq_t, qv, k=10, nprobe=nprobe, refine_factor=pq_rf),
             }
@@ -392,13 +385,9 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
             res["sharded_probe_files_med"] = statistics.median(
                 [sharded_probe_files_scanned(st, qv) for qv in qvecs]
             )
-            res["ivf_total_files"] = len(ivf_t.snapshot().files)
-            res["ivf_probe_files_med"] = statistics.median(
-                [ivf_probe_files_scanned(ivf_t, qv, nprobe=nprobe) for qv in qvecs]
-            )
             res["ivfpq_total_files"] = len(ivfpq_t.snapshot().files)
             res["ivfpq_probe_files_med"] = statistics.median(
-                [ivfpq_probe_files_scanned(ivfpq_t, qv, nprobe=nprobe)
+                [ivf_probe_files_scanned(ivfpq_t, qv, nprobe=nprobe)
                  for qv in qvecs]
             )
             n_cand = 0
@@ -412,7 +401,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
             res["sharded_candidate_fraction"] = round(
                 n_cand / (len(qvecs) * n_vec), 4
             )
-            return res, corpus, {"st": st, "ivf_t": ivf_t, "ivfpq_t": ivfpq_t}
+            return res, corpus, {"st": st, "ivfpq_t": ivfpq_t}
 
         # 800k point (r04..r08-comparable) — legacy key names preserved
         p800, ccorpus, _handles = _scale_point(800_000, "cbase", 4, 2, 3, 256, 25)
@@ -435,9 +424,6 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
         out["sharded_probe_file_fraction"] = round(
             p800["sharded_probe_files_med"] / p800["sharded_total_files"], 4
         )
-        out["ivf_probe_file_fraction"] = round(
-            p800["ivf_probe_files_med"] / p800["ivf_total_files"], 4
-        )
         out["ivfpq_probe_file_fraction"] = round(
             p800["ivfpq_probe_files_med"] / p800["ivfpq_total_files"], 4
         )
@@ -457,19 +443,16 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
 
         # ---- embedding-decontamination crossover (r07 #6) ----
         # broadcast form (|corpus| x |bench| dot products, each an
-        # interpreted zip_with/aggregate) vs the IVF-indexed form
-        # (nprobe/nlist of those pairs). Slice sizes are chosen so the
-        # broadcast form costs tens of seconds, not hours: 25k corpus x
-        # 2.5k benchmark = 62M pairs (the first attempt used the full
-        # 800k x 50k = 37 BILLION pairs and ran >1 h — the crossover
-        # point is far below that; the measurement only needs both forms
-        # timed on the same slices).
+        # interpreted zip_with/aggregate) vs the IVF-PQ-indexed form
+        # (exact cosine over nprobe/nlist of those pairs). Slice sizes
+        # are chosen so the broadcast form costs tens of seconds, not
+        # hours: 25k corpus x 2.5k benchmark = 62M pairs (the first
+        # attempt used the full 800k x 50k = 37 BILLION pairs and ran
+        # >1 h — the crossover point is far below that; the measurement
+        # only needs both forms timed on the same slices).
         from delta_lake_optimizations_spark.operators.decontam import (
             embedding_decontaminate_indexed,
             embedding_decontaminate_report,
-        )
-        from delta_lake_optimizations_spark.operators.ivf import (
-            build_ivf_index as _build_ivf,
         )
 
         bench_side = ccorpus.filter(F.col("vec_id") % 320 == 0)
@@ -479,7 +462,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
         embedding_decontaminate_report(corpus_side, bench_side, 0.9).count()
         out["decontam_broadcast_sec"] = round(time.perf_counter() - t0, 4)
         t0 = time.perf_counter()
-        dt = _build_ivf(
+        dt = build_ivfpq_index(
             spark, bench_side, os.path.join(root, "decontamidx"),
             nlist=64, seed=7,
         )

@@ -342,11 +342,12 @@ def decontam_embedding_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
 # broadcast form above is linear in |corpus| * |benchmark| flops — fine
 # while eval suites are thousands of vectors, quadratic pain once a
 # deployment accumulates 10^5+ benchmark vectors. The indexed form
-# answers the same max-cosine report from a materialized IVF index OVER
-# THE BENCHMARK: each corpus vector scores against only its nprobe
-# nearest benchmark cells (one Arrow argpartition pass to pick cells, an
-# equi-join on list_id) — |corpus| * |benchmark| * nprobe/nlist flops,
-# the benchmark never broadcast, the corpus shuffled once by cell id.
+# answers the same max-cosine report from a materialized IVF-PQ index OVER
+# THE BENCHMARK (its exact float vectors, not its codes): each corpus
+# vector scores against only its nprobe nearest benchmark cells (one Arrow
+# argpartition pass to pick cells, an equi-join on list_id) —
+# |corpus| * |benchmark| * nprobe/nlist flops, the benchmark never
+# broadcast, the corpus shuffled once by cell id.
 # Same crossover logic as every ANN family here: build once, probe
 # cheap. ``decontam_embedding_matches_broadcast`` is the oracle-backed
 # equality twin (deterministic: seeded k-means, fixed probe ranking).
@@ -395,7 +396,8 @@ def embedding_decontaminate_indexed(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """``embedding_decontaminate_report`` answered from a materialized
-    IVF index over the benchmark (``ivf.build_ivf_index`` output): max
+    IVF-PQ index over the benchmark (``ivfpq.build_ivfpq_index`` output,
+    read through its ``list_id`` and float vector columns only): max
     cosine per corpus vector = a batch k-NN (k=1) against the index,
     restricted to each vector's ``nprobe`` nearest benchmark cells."""
     from delta_lake_optimizations_spark.operators.ivf import ivf_index_centroids
@@ -435,28 +437,27 @@ def embedding_decontaminate_indexed(
 
 
 def _cached_bench_ivf_index(spark, sf_dir: str, nlist: int = 8):
-    """Build-once IVF index over the synthetic benchmark slice
+    """Build-once IVF-PQ index over the synthetic benchmark slice
     (vec_id % 50 == 0) — content-fingerprinted cache key, the same
-    scheme as ``ivf._cached_ivf_index``."""
+    scheme as ``ivfpq._cached_ivfpq_index``. The decontam probe reads
+    only its cells and float vectors."""
     import hashlib
     import os
     import tempfile
 
-    from delta_lake_optimizations_spark.operators.ivf import (
-        _ivf_corpus_fingerprint,
-        build_ivf_index,
-    )
+    from delta_lake_optimizations_spark.operators.ivfpq import build_ivfpq_index
+    from delta_lake_optimizations_spark.operators.lsh_index import _corpus_fingerprint
     from delta_lake_optimizations_spark.table import GraftTable
 
     key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|bench-ivf-np|{nlist}|"
-        f"{_ivf_corpus_fingerprint(sf_dir)}".encode()
+        f"{os.path.abspath(sf_dir)}|bench-ivfpq-np|{nlist}|"
+        f"{_corpus_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:16]
     path = os.path.join(tempfile.gettempdir(), "spark_graft_bench_ivf", key)
     t = GraftTable(spark, path)
     if not t.exists():
         emb = load_table(spark, sf_dir, "embeddings")
-        t = build_ivf_index(
+        t = build_ivfpq_index(
             spark, emb.filter(F.col("vec_id") % 50 == 0), path,
             nlist=nlist, seed=7,
         )

@@ -3,23 +3,29 @@
 The scale path for ANN beyond hyperplane LSH: partition the vector space
 into ``nlist`` Voronoi cells (k-means centroids), store each vector in its
 cell's posting list, and at query time probe only the ``nprobe`` nearest
-cells — the classic IVF-Flat design from the FAISS / Jegou et al. lineage,
+cells — the classic IVF design from the FAISS / Jegou et al. lineage,
 expressed in Spark primitives:
 
 - **build**: seeded NumPy k-means (``operators/kmeans.py``) on a bounded
   hash-ordered sample, driver-side; assignment is one Arrow-batched
   argmin pass over the corpus (``assign_to_centroids``), shared with the
-  append path.
+  index build and append paths.
 - **search**: centroid scan is driver-side (``nlist`` is small by design,
   e.g. 4096 at 1e9 vectors); candidates come from a partition-pruned
   filter ``list_id IN (probes)``, then exact cosine re-rank with
   ``TakeOrderedAndProject`` (per-partition top-k, driver merge).
 
-At 100 TB the assigned table would be written as a GraftTable partitioned
-by ``list_id`` so the probe filter prunes whole files/directories.
+This module holds the inline forms (fit per call) and the EXACT-probe
+readers of the materialized index. There is one materialized IVF layout:
+the IVF-PQ table (``operators/ivfpq.py``), a GraftTable partitioned by
+``list_id`` with the centroids in its properties. The exact readers here
+use only its ``list_id``, id and vector columns; the ADC readers in
+``ivfpq.py`` use its codes.
 """
 
 from __future__ import annotations
+
+import json as _json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -171,10 +177,9 @@ def knn_join_from_ivf_index(
     """Batch k-NN JOIN answered from the MATERIALIZED IVF index: cell
     assignments come off the stored table (one pruned columnar scan) and
     the probe map from the stored centroids — no k-means fit at query
-    time, the batch sibling of ``ann_topk_from_ivf_index``. The same
-    works against an IVF-PQ table (its layout is a superset: the raw
-    vector column rides along for exactly this kind of exact-math
-    consumer; per-query ADC LUTs don't apply to a whole-corpus join)."""
+    time, the batch sibling of ``ann_topk_from_ivf_index``. It reads the
+    IVF-PQ table's raw vector column: per-query ADC LUTs don't apply to a
+    whole-corpus join."""
     centroids = ivf_index_centroids(table)
     assigned = table.load().select("list_id", id_col, vec_col)
     return _knn_join_cells(assigned, centroids, nprobe, k, id_col, vec_col)
@@ -205,55 +210,14 @@ def ann_ivf_topk(spark, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Materialized IVF index (VERDICT r04 #2): the assigned table written as a
-# GraftTable PARTITIONED BY list_id, centroids carried in table properties.
-# A probe loads only the nprobe partitions nearest the query — hive-dir +
-# stats pruning through the engine's own skip_where machinery — so query
-# IO is nprobe/nlist of the index at any scale. Build is one sampled
-# k-means fit + one distributed assignment pass, paid once per corpus.
+# Exact probes of the materialized IVF index. The index is the IVF-PQ table
+# (``ivfpq.build_ivfpq_index``): PARTITIONED BY list_id, centroids carried
+# in table properties. A probe loads only the nprobe partitions nearest the
+# query — hive-dir + stats pruning through the engine's own skip_where
+# machinery — so query IO is nprobe/nlist of the index at any scale.
 # ---------------------------------------------------------------------------
 
-import hashlib as _hashlib
-import json as _json
-import os as _os
-import tempfile as _tempfile
-
 CENTROIDS_PROP = "graft.ivf.centroids"
-
-
-def build_ivf_index(
-    spark,
-    df: DataFrame,
-    path: str,
-    nlist: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-):
-    """Materialize the IVF index: ``(list_id, id, vector)`` partitioned by
-    ``list_id`` (one hive dir per Voronoi cell), centroids JSON in the
-    table properties (nlist x dim floats — index metadata small enough for
-    the commit log at any realistic nlist; a 4096x768 deployment would put
-    ~25 MB there, at which point a sidecar parquet is the right home, same
-    pattern as the bloom sidecars). Returns the table handle."""
-    from delta_lake_optimizations_spark.table import GraftTable
-
-    assigned, centroids = ivf_build(df, nlist=nlist, vec_col=vec_col, id_col=id_col, seed=seed)
-    t = GraftTable(spark, path)
-    t.write(
-        assigned.select("list_id", id_col, vec_col),
-        mode="overwrite",
-        partition_by=["list_id"],
-        properties={
-            CENTROIDS_PROP: _json.dumps(centroids),
-            "graft.ivf.nlist": str(nlist),
-            # one writer task per cell -> one file per hive partition
-            # (instead of tasks x cells small files); the probe then reads
-            # exactly nprobe files
-            "graft.optimizeWrite": "true",
-        },
-    )
-    return t
 
 
 def ivf_index_centroids(table) -> list[list[float]]:
@@ -343,41 +307,19 @@ def ivf_probe_files_scanned(table, query_vec: list[float], nprobe: int = 4) -> i
     return table.files_scanned(skip_where=[("list_id", "in", probes)])
 
 
-def _ivf_corpus_fingerprint(sf_dir: str) -> str:
-    from delta_lake_optimizations_spark.operators.lsh_index import _corpus_fingerprint
-
-    return _corpus_fingerprint(sf_dir)
-
-
-def _cached_ivf_index(spark, sf_dir: str, nlist: int = 8):
-    """Build-once-per-corpus IVF index (content-fingerprinted cache key,
-    same scheme as the LSH index caches)."""
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.table import GraftTable
-
-    key = _hashlib.sha256(
-        f"{_os.path.abspath(sf_dir)}|ivf-np|{nlist}|"
-        f"{_ivf_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    path = _os.path.join(_tempfile.gettempdir(), "spark_graft_ivf_index", key)
-    t = GraftTable(spark, path)
-    if not t.exists():
-        emb = load_table(spark, sf_dir, "embeddings")
-        t = build_ivf_index(spark, emb, path, nlist=nlist, seed=7)
-    return t
-
-
 @query("ann_ivf_topk_indexed", tags=("similarity", "approx", "index"))
 def ann_ivf_topk_indexed(spark, sf_dir: str) -> DataFrame:
-    """IVF-Flat approximate top-10 for vec_id=0 served from the
-    MATERIALIZED index (list_id-partitioned GraftTable, centroids from
-    table properties): no per-query k-means fit, and the probe reads only
-    nprobe/nlist of the index via partition pruning. (Rows-only driver
-    check; ``ann_ivf_indexed_matches_inline`` is the oracle-backed
-    equivalence metric.)"""
+    """Exact-rerank IVF top-10 for vec_id=0 served from the MATERIALIZED
+    IVF-PQ index (list_id-partitioned GraftTable, centroids from table
+    properties): no per-query k-means fit, and the probe reads only
+    nprobe/nlist of the index via partition pruning, then scores the
+    stored float vectors exactly. (Rows-only driver check;
+    ``ann_ivf_indexed_matches_inline`` is the oracle-backed equivalence
+    metric.)"""
+    from delta_lake_optimizations_spark.operators.ivfpq import _cached_ivfpq_index
     from delta_lake_optimizations_spark.operators.similarity import query_vector
 
-    t = _cached_ivf_index(spark, sf_dir, nlist=8)
+    t = _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16)
     qv = query_vector(spark, sf_dir, 0)
     return ann_topk_from_ivf_index(t, qv, k=10, nprobe=4)
 
@@ -385,10 +327,13 @@ def ann_ivf_topk_indexed(spark, sf_dir: str) -> DataFrame:
 @query("knn_join_ivf_indexed", tags=("similarity", "approx", "knn", "index"))
 def knn_join_ivf_indexed(spark, sf_dir: str) -> DataFrame:
     """Approximate 3-NN join for EVERY vector, answered from the
-    materialized IVF index (stored assignments + stored centroids, no
-    refit). (Rows-only driver check; ``knn_join_ivf_matches_inline`` is
-    the oracle-backed equivalence metric.)"""
-    t = _cached_ivf_index(spark, sf_dir, nlist=8)
+    materialized IVF-PQ index (stored assignments + stored centroids +
+    stored float vectors, no refit). (Rows-only driver check;
+    ``knn_join_ivf_matches_inline`` is the oracle-backed equivalence
+    metric.)"""
+    from delta_lake_optimizations_spark.operators.ivfpq import _cached_ivfpq_index
+
+    t = _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16)
     return knn_join_from_ivf_index(t, nprobe=3, k=3)
 
 
@@ -398,8 +343,9 @@ def assign_to_centroids(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Nearest-centroid assignment against FIXED centroids (no refit) —
-    one Arrow-batched numpy argmin pass; the build and the index append
-    path share it, so increments join the same Voronoi cells."""
+    one Arrow-batched numpy argmin pass; the inline build and the IVF-PQ
+    index build and append paths share it, so increments join the same
+    Voronoi cells."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -413,21 +359,3 @@ def assign_to_centroids(
     assign.__annotations__ = {"emb": pd.Series, "return": pd.Series}
     udf = pandas_udf("int")(assign)
     return df.withColumn("list_id", udf(F.col(vec_col)))
-
-
-def append_to_ivf_index(table, df: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        extra_parameters: dict | None = None) -> None:
-    """Absorb new vectors into an existing IVF index WITHOUT refitting:
-    assign against the STORED centroids (table properties) and append —
-    rows land in their cells' hive partitions, so probes keep reading
-    nprobe cells only. Centroid drift under heavy append is the standard
-    IVF trade; rebuild with ``build_ivf_index`` when recall decays."""
-    centroids = ivf_index_centroids(table)
-    assigned = assign_to_centroids(df, centroids, vec_col=vec_col)
-    table.write(
-        assigned.select("list_id", id_col, vec_col),
-        mode="append",
-        partition_by=["list_id"],
-        extra_parameters=extra_parameters,
-    )

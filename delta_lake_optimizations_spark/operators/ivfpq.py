@@ -1,14 +1,12 @@
-"""Materialized IVF-PQ index (SURVEY §2.9 X3 — VERDICT r06 #1): the
-canonical large-scale ANN layout from the FAISS / Jegou-et-al. lineage,
-built once and served from disk.
+"""Materialized IVF-PQ index (SURVEY §2.9 X3): the canonical large-scale
+ANN layout from the FAISS / Jegou-et-al. lineage, built once and served
+from disk.
 
-The three ANN families each got a build-once GraftTable home in earlier
-rounds (sharded LSH in r05, IVF-Flat in r05/r06); PQ — the family whose
-entire point is that the ENCODED table is what you keep hot — was the
-last one still re-training per query call (``pq.py::ann_pq_topk``).
-This module closes that gap by composing the two proven pieces, with
-the one refinement that makes the composition actually work on
-clustered data: **residual encoding**. Codes quantize ``x - centroid``
+This table is the ONE materialized IVF layout. It serves both probe
+kinds: the exact probes in ``ivf.py`` (``ann_topk_from_ivf_index``,
+``ann_topk_batch_from_ivf``, ``knn_join_from_ivf_index``) read its
+``list_id``, id and float vector columns, and the ADC probes here read its
+codes. Codes use **residual encoding**: they quantize ``x - centroid``
 (the vector's offset inside its Voronoi cell), not ``x`` itself — the
 coarse quantizer already explains the between-cluster variance, so the
 M codebooks spend their 2^bits on the within-cell spread (FAISS's
@@ -119,8 +117,8 @@ def _fit(
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """IVF centroids + residual-PQ codebooks from ONE collected sample.
     The sample is hash-ordered, so its first ``PER_CENTROID * nlist``
-    rows are exactly ``ivf_build``'s sample: the cells match a plain IVF
-    index built at the same seed."""
+    rows are exactly ``ivf_build``'s sample: the cells match the inline
+    IVF search and k-NN join at the same seed."""
     X = training_sample(df, vec_col, max(nlist, ksub), seed)
     centroids = fit_centroids(X[: PER_CENTROID * nlist], nlist, seed)
     C = np.asarray(centroids)
@@ -496,13 +494,6 @@ def ivfpq_search_inline(
     return _adc_refine_topk(cand, score, query_vec, k, refine_factor, id_col, vec_col)
 
 
-def ivfpq_probe_files_scanned(table, query_vec: list[float], nprobe: int = 4) -> int:
-    """Index files the probe reads (partition pruning, driver-side)."""
-    centroids, _ = ivfpq_metadata(table)
-    probes = probe_cells(centroids, query_vec, nprobe)
-    return table.files_scanned(skip_where=[("list_id", "in", probes)])
-
-
 def append_to_ivfpq_index(
     table,
     df: DataFrame,
@@ -528,7 +519,8 @@ def append_to_ivfpq_index(
 
 def _cached_ivfpq_index(spark, sf_dir: str, nlist: int = 8, m: int = 4, ksub: int = 16):
     """Build-once-per-corpus IVF-PQ index (content-fingerprinted cache
-    key, same scheme as the LSH/IVF index caches)."""
+    key, same scheme as the LSH index caches). One cached table serves
+    the exact IVF queries and the ADC IVF-PQ queries alike."""
     from delta_lake_optimizations_spark.catalog import load_table
     from delta_lake_optimizations_spark.operators.lsh_index import _corpus_fingerprint
     from delta_lake_optimizations_spark.table import GraftTable

@@ -928,17 +928,18 @@ def ann_lsh_sharded_matches_inline(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def ann_ivf_indexed_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materialized IVF index (list_id-partitioned table + centroids
-    from properties) must return EXACTLY the inline path's result (same
+    """The exact probe of the materialized IVF-PQ index (list_id-
+    partitioned table + centroids from properties, float vectors scored
+    exactly) must return EXACTLY the inline IVF path's result (same
     seeded k-means -> same centroids -> same probe cells -> same candidate
     set). A stale index, a mis-serialized centroid, or broken partition
     pruning makes n_mismatch > 0."""
     from delta_lake_optimizations_spark.operators.ivf import (
-        _cached_ivf_index,
         ann_topk_from_ivf_index,
         ivf_build,
         ivf_search,
     )
+    from delta_lake_optimizations_spark.operators.ivfpq import _cached_ivfpq_index
     from delta_lake_optimizations_spark.operators.similarity import query_vector
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -948,7 +949,7 @@ def ann_ivf_indexed_matches_inline(spark: SparkSession, sf_dir: str) -> DataFram
         "vec_id", "cos_sim"
     )
     indexed = ann_topk_from_ivf_index(
-        _cached_ivf_index(spark, sf_dir, nlist=8), qv, k=10, nprobe=4
+        _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16), qv, k=10, nprobe=4
     ).select(F.col("vec_id").alias("_v2"), F.col("cos_sim").alias("_c2"))
     both = inline.join(
         indexed,
@@ -1042,24 +1043,25 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_join_ivf_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch k-NN join answered from the materialized IVF index must
-    return EXACTLY the inline form's result at the same (nlist=8,
-    nprobe=3, seed=7) dial: seeded k-means makes the inline assignment
+    """The batch k-NN join answered from the materialized IVF-PQ index
+    (stored cells and float vectors) must return EXACTLY the inline
+    form's result at the same (nlist=8, nprobe=3, seed=7) dial: seeded
+    k-means makes the inline assignment
     identical to the stored one, and both forms share the one
     ``_knn_join_cells`` tail — so any divergence means a stale index, a
     drifted stored assignment, or a probe-map bug. n_mismatch counts
     rows present in exactly one side (full outer on the whole
     (src, nbr, sim) triple)."""
     from delta_lake_optimizations_spark.operators.ivf import (
-        _cached_ivf_index,
         ivf_knn_join,
         knn_join_from_ivf_index,
     )
+    from delta_lake_optimizations_spark.operators.ivfpq import _cached_ivfpq_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     inline = ivf_knn_join(emb, nlist=8, nprobe=3, k=3, seed=7)
     indexed = knn_join_from_ivf_index(
-        _cached_ivf_index(spark, sf_dir, nlist=8), nprobe=3, k=3
+        _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16), nprobe=3, k=3
     ).select(
         F.col("src_id").alias("_s2"),
         F.col("nbr_id").alias("_n2"),
@@ -1095,16 +1097,16 @@ def ann_batch_matches_singles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BATCHED probe paths (VERDICT r08 #1b — one plan scoring Q
     queries, per-query fixed costs amortized) must return, per query,
     EXACTLY what the single-query probes return: brute
-    ``topk_cosine_batch`` vs ``topk_cosine``, IVF
+    ``topk_cosine_batch`` vs ``topk_cosine``, exact IVF
     ``ann_topk_batch_from_ivf`` vs ``ann_topk_from_ivf_index``, IVF-PQ
     ``ann_topk_batch_from_ivfpq`` vs ``ann_topk_from_ivfpq_index`` — all
-    at identical dials over the first 6 corpus vectors. n_mismatch
+    at identical dials over the first 6 corpus vectors, both IVF
+    families probing the one cached IVF-PQ table. n_mismatch
     counts (qid, id, score) triples present on exactly one side of a
     full outer join; a nonzero means a scoring divergence (the batch ADC
     LUT drifting from the literal path), a broken probe map, or a
     tie-break difference in the two top-k reductions."""
     from delta_lake_optimizations_spark.operators.ivf import (
-        _cached_ivf_index,
         ann_topk_batch_from_ivf,
         ann_topk_from_ivf_index,
     )
@@ -1123,7 +1125,6 @@ def ann_batch_matches_singles(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") < 6).collect()
     ]
-    ivf_t = _cached_ivf_index(spark, sf_dir, nlist=8)
     pq_t = _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16)
 
     def singles(fn):
@@ -1143,8 +1144,8 @@ def ann_batch_matches_singles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (
             "ivf",
-            ann_topk_batch_from_ivf(ivf_t, qs, k=10, nprobe=3),
-            singles(lambda qv: ann_topk_from_ivf_index(ivf_t, qv, k=10, nprobe=3)),
+            ann_topk_batch_from_ivf(pq_t, qs, k=10, nprobe=3),
+            singles(lambda qv: ann_topk_from_ivf_index(pq_t, qv, k=10, nprobe=3)),
         ),
         (
             "ivfpq",

@@ -17,22 +17,25 @@ from pyspark.sql.streaming import StreamingQuery
 from delta_lake_optimizations_spark.table import GraftTable
 
 
+def _committed_batches(table: GraftTable) -> set[int]:
+    """Streaming batch ids already recorded in ``table``'s commit log —
+    the replay guard every writer below checks before committing."""
+    out = set()
+    for c in table.commits():
+        b = c.operation_parameters.get("streamingBatchId")
+        if b is not None:
+            out.add(int(b))
+    return out
+
+
 class GraftStreamWriter:
     """foreachBatch handler appending each micro-batch to a GraftTable."""
 
     def __init__(self, table: GraftTable):
         self.table = table
 
-    def _committed_batches(self) -> set[int]:
-        out = set()
-        for c in self.table.commits():
-            b = c.operation_parameters.get("streamingBatchId")
-            if b is not None:
-                out.add(int(b))
-        return out
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.table.exists() and batch_id in self._committed_batches():
+        if self.table.exists() and batch_id in _committed_batches(self.table):
             return  # replayed batch after restart — already committed
         mode = "append" if self.table.exists() else "overwrite"
         self.table.write(
@@ -76,14 +79,6 @@ class GraftStreamMergeWriter:
         self.on = on
         self.sequence_col = sequence_col
 
-    def _committed_batches(self) -> set[int]:
-        out = set()
-        for c in self.table.commits():
-            b = c.operation_parameters.get("streamingBatchId")
-            if b is not None:
-                out.add(int(b))
-        return out
-
     def _latest_per_key(self, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import Window as W
         from pyspark.sql import functions as F
@@ -99,7 +94,7 @@ class GraftStreamMergeWriter:
         from delta_lake_optimizations_spark.table.merge import merge
 
         exists = self.table.exists()
-        if exists and batch_id in self._committed_batches():
+        if exists and batch_id in _committed_batches(self.table):
             return  # replayed batch after restart — already committed
         latest = self._latest_per_key(batch_df)
         if not exists:
@@ -190,14 +185,6 @@ class GraftStreamLshIndexWriter:
         self.table = index_table
         self.n_shards = n_shards
 
-    def _committed_batches(self) -> set[int]:
-        out = set()
-        for c in self.table.commits():
-            b = c.operation_parameters.get("streamingBatchId")
-            if b is not None:
-                out.add(int(b))
-        return out
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from delta_lake_optimizations_spark.operators.lsh_index import (
             append_to_lsh_sharded_index,
@@ -220,7 +207,7 @@ class GraftStreamLshIndexWriter:
                 "STREAMING INDEX INIT", {"streamingBatchId": int(batch_id)}, [], []
             )
             return
-        if batch_id in self._committed_batches():
+        if batch_id in _committed_batches(self.table):
             return  # replayed batch after restart — already committed
         append_to_lsh_sharded_index(
             self.table, batch_df, extra_parameters={"streamingBatchId": int(batch_id)}
@@ -247,77 +234,10 @@ def write_stream_to_lsh_index(
     )
 
 
-class GraftStreamIvfIndexWriter:
-    """foreachBatch twin of ``GraftStreamLshIndexWriter`` for the IVF
-    index: the first batch fits centroids and materializes the
-    list_id-partitioned table; later batches assign against the STORED
-    centroids (no refit — cells stay stable for probes) and append into
-    their partitions. Centroid drift under heavy streaming ingest is the
-    standard IVF trade: rebuild when recall decays."""
-
-    def __init__(self, index_table: GraftTable, nlist: int = 8, seed: int = 7):
-        self.table = index_table
-        self.nlist = nlist
-        self.seed = seed
-
-    def _committed_batches(self) -> set[int]:
-        out = set()
-        for c in self.table.commits():
-            b = c.operation_parameters.get("streamingBatchId")
-            if b is not None:
-                out.add(int(b))
-        return out
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from delta_lake_optimizations_spark.operators.ivf import (
-            append_to_ivf_index,
-            build_ivf_index,
-        )
-
-        if batch_df.isEmpty():
-            return
-        if not self.table.exists():
-            build_ivf_index(
-                batch_df.sparkSession,
-                batch_df,
-                self.table.path,
-                nlist=self.nlist,
-                seed=self.seed,
-            )
-            self.table._write_commit(
-                "STREAMING INDEX INIT", {"streamingBatchId": int(batch_id)}, [], []
-            )
-            return
-        if batch_id in self._committed_batches():
-            return
-        append_to_ivf_index(
-            self.table, batch_df, extra_parameters={"streamingBatchId": int(batch_id)}
-        )
-
-
-def write_stream_to_ivf_index(
-    stream_df: DataFrame,
-    index_table: GraftTable,
-    checkpoint_dir: str,
-    nlist: int = 8,
-    query_name: str = "graft_ivf_index_sink",
-) -> StreamingQuery:
-    """Start an availableNow streaming build/append of the IVF index from
-    a ``(vec_id, embedding)`` stream."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            GraftStreamIvfIndexWriter(index_table, nlist=nlist)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 class GraftStreamIvfPqIndexWriter:
-    """foreachBatch twin of ``GraftStreamIvfIndexWriter`` for the IVF-PQ
-    index: the first batch fits centroids AND the residual codebooks and
+    """foreachBatch twin of ``GraftStreamLshIndexWriter`` for the IVF-PQ
+    index, the one IVF layout (exact and ADC probes both read it): the
+    first batch fits centroids AND the residual codebooks and
     materializes the table; later batches assign + residual-encode
     against the STORED metadata (no refit — cells and code semantics
     stay stable for probes) and append into their partitions.
@@ -337,14 +257,6 @@ class GraftStreamIvfPqIndexWriter:
         self.m = m
         self.ksub = ksub
         self.seed = seed
-
-    def _committed_batches(self) -> set[int]:
-        out = set()
-        for c in self.table.commits():
-            b = c.operation_parameters.get("streamingBatchId")
-            if b is not None:
-                out.add(int(b))
-        return out
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from delta_lake_optimizations_spark.operators.ivfpq import (
@@ -368,7 +280,7 @@ class GraftStreamIvfPqIndexWriter:
                 "STREAMING INDEX INIT", {"streamingBatchId": int(batch_id)}, [], []
             )
             return
-        if batch_id in self._committed_batches():
+        if batch_id in _committed_batches(self.table):
             return
         append_to_ivfpq_index(
             self.table, batch_df, extra_parameters={"streamingBatchId": int(batch_id)}
@@ -416,17 +328,9 @@ class GraftStreamDedupIngestWriter:
         self.store = store
         self.clean = clean_table
 
-    def _committed(self) -> set[int]:
-        out = set()
-        for c in self.clean.commits():
-            b = c.operation_parameters.get("streamingBatchId")
-            if b is not None:
-                out.add(int(b))
-        return out
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         survivors = self.store.ingest(batch_df, f"stream-{batch_id}")
-        if self.clean.exists() and batch_id in self._committed():
+        if self.clean.exists() and batch_id in _committed_batches(self.clean):
             return
         mode = "append" if self.clean.exists() else "overwrite"
         self.clean.write(

@@ -57,10 +57,6 @@ def test_fewer_points_than_cells_still_store_k_centroids(spark, tmp_path):
     """5 vectors into 8 IVF cells / 16 PQ sub-centroids: the stored
     centroid and codebook counts must match the nlist / ksub metadata
     (duplicated centroids, never fewer)."""
-    from delta_lake_optimizations_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_index_centroids,
-    )
     from delta_lake_optimizations_spark.operators.ivfpq import (
         build_ivfpq_index,
         ivfpq_metadata,
@@ -68,14 +64,12 @@ def test_fewer_points_than_cells_still_store_k_centroids(spark, tmp_path):
 
     five = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 5)
     assert five.count() == 5
-    t = build_ivf_index(spark, five, str(tmp_path / "ivf"), nlist=8, seed=7)
-    assert len(ivf_index_centroids(t)) == int(t.snapshot().properties["graft.ivf.nlist"]) == 8
-    assert t.load().count() == 5
     t = build_ivfpq_index(spark, five, str(tmp_path / "pq"), nlist=8, m=4, ksub=16)
     centroids, books = ivfpq_metadata(t)
     props = t.snapshot().properties
     assert len(centroids) == int(props["graft.ivf.nlist"]) == 8
     assert all(len(cb) == int(props["graft.pq.ksub"]) == 16 for cb in books)
+    assert t.load().count() == 5
 
 
 def _union_find_ground_truth(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -359,17 +353,17 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     from delta_lake_optimizations_spark.catalog import load_table
     from delta_lake_optimizations_spark.operators.ivf import (
         ann_topk_from_ivf_index,
-        build_ivf_index,
         ivf_build,
         ivf_index_centroids,
         ivf_probe_files_scanned,
         ivf_search,
     )
+    from delta_lake_optimizations_spark.operators.ivfpq import build_ivfpq_index
     from delta_lake_optimizations_spark.operators.similarity import query_vector
     from tests.conftest import SF_DIR
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    t = build_ivf_index(spark, emb, os.path.join(tmp_path, "ivf"), nlist=8, seed=7)
+    t = build_ivfpq_index(spark, emb, os.path.join(tmp_path, "ivf"), nlist=8, seed=7)
 
     # centroids round-trip through properties
     cents = ivf_index_centroids(t)
@@ -440,18 +434,20 @@ def test_ivf_index_append_uses_stored_centroids(spark, tmp_path):
     from delta_lake_optimizations_spark.catalog import load_table
     from delta_lake_optimizations_spark.operators.ivf import (
         ann_topk_from_ivf_index,
-        append_to_ivf_index,
-        build_ivf_index,
         ivf_index_centroids,
+    )
+    from delta_lake_optimizations_spark.operators.ivfpq import (
+        append_to_ivfpq_index,
+        build_ivfpq_index,
     )
     from tests.conftest import SF_DIR
 
     emb = load_table(spark, SF_DIR, "embeddings")
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
-    t = build_ivf_index(spark, first, os.path.join(tmp_path, "ivf"), nlist=8, seed=7)
+    t = build_ivfpq_index(spark, first, os.path.join(tmp_path, "ivf"), nlist=8, seed=7)
     cents_before = ivf_index_centroids(t)
-    append_to_ivf_index(t, second)
+    append_to_ivfpq_index(t, second)
     assert ivf_index_centroids(t) == cents_before, "append must not refit"
 
     # every appended row sits in its true nearest cell
@@ -478,22 +474,22 @@ def test_ivf_index_compaction_after_appends(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.ivf import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_probe_files_scanned,
+    from delta_lake_optimizations_spark.operators.ivf import ivf_probe_files_scanned
+    from delta_lake_optimizations_spark.operators.ivfpq import (
+        append_to_ivfpq_index,
+        build_ivfpq_index,
     )
     from delta_lake_optimizations_spark.operators.similarity import query_vector
     from delta_lake_optimizations_spark.table import optimize
     from tests.conftest import SF_DIR
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    t = build_ivf_index(
+    t = build_ivfpq_index(
         spark, emb.filter(F.col("vec_id") % 3 == 0), os.path.join(tmp_path, "ivf"),
         nlist=4, seed=7,
     )
-    append_to_ivf_index(t, emb.filter(F.col("vec_id") % 3 == 1))
-    append_to_ivf_index(t, emb.filter(F.col("vec_id") % 3 == 2))
+    append_to_ivfpq_index(t, emb.filter(F.col("vec_id") % 3 == 1))
+    append_to_ivfpq_index(t, emb.filter(F.col("vec_id") % 3 == 2))
     qv = query_vector(spark, SF_DIR, 0)
     fragmented = ivf_probe_files_scanned(t, qv, nprobe=2)
     assert fragmented >= 4, fragmented  # 2 cells x >=2 files each

@@ -12,7 +12,6 @@ from delta_lake_optimizations_spark.catalog import load_table
 from delta_lake_optimizations_spark.operators.ivf import (
     ann_topk_batch_from_ivf,
     ann_topk_from_ivf_index,
-    build_ivf_index,
 )
 from delta_lake_optimizations_spark.operators.ivfpq import (
     _adc_refine_topk,
@@ -69,7 +68,7 @@ def test_topk_cosine_batch_matches_single(spark):
 
 def test_ivf_batch_matches_single(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
-    t = build_ivf_index(spark, emb, str(tmp_path / "ivf"), nlist=8, seed=7)
+    t = build_ivfpq_index(spark, emb, str(tmp_path / "ivf"), nlist=8, seed=7)
     qs = _queries(emb)
     got = _per_query(
         ann_topk_batch_from_ivf(t, qs, k=10, nprobe=3).collect()

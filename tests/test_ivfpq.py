@@ -10,12 +10,12 @@ import tempfile
 from pyspark.sql import functions as F
 
 from delta_lake_optimizations_spark.catalog import load_table
+from delta_lake_optimizations_spark.operators.ivf import ivf_probe_files_scanned
 from delta_lake_optimizations_spark.operators.ivfpq import (
     ann_topk_from_ivfpq_index,
     append_to_ivfpq_index,
     build_ivfpq_index,
     ivfpq_metadata,
-    ivfpq_probe_files_scanned,
     ivfpq_search_inline,
 )
 from delta_lake_optimizations_spark.operators.pq import (
@@ -73,7 +73,7 @@ def test_ivfpq_probe_prunes_files_and_matches_inline(spark, tmp_path):
     t = build_ivfpq_index(spark, emb, str(tmp_path / "idx"), nlist=8, m=4, ksub=16)
     qv = _qv(emb)
     nprobe = 3
-    scanned = ivfpq_probe_files_scanned(t, qv, nprobe=nprobe)
+    scanned = ivf_probe_files_scanned(t, qv, nprobe=nprobe)
     assert scanned <= nprobe < len(t.snapshot().files)
     indexed = ann_topk_from_ivfpq_index(t, qv, k=10, nprobe=nprobe).collect()
     inline = ivfpq_search_inline(
@@ -160,15 +160,15 @@ def test_ivfpq_registered_query_runs(spark):
 
 
 def test_ivf_batch_knn_join_works_on_ivfpq_table(spark, tmp_path):
-    """The IVF-PQ layout is a superset of the IVF one (raw vectors ride
-    along for exact-math consumers), so the materialized batch k-NN join
-    must answer straight off an IVF-PQ table — and agree with the same
-    join off a plain IVF index built at the same seed (the IVF-PQ fit
-    trains its centroids on the same hash-ordered sample prefix ->
-    identical centroids -> identical cells -> identical candidates)."""
+    """The IVF-PQ table is the one IVF layout (raw vectors ride along
+    for exact-math consumers), so the materialized batch k-NN join must
+    answer straight off it — and agree with the inline join at the same
+    seed (the IVF-PQ fit trains its centroids on the same hash-ordered
+    sample prefix -> identical centroids -> identical cells -> identical
+    candidates)."""
     from delta_lake_optimizations_spark.catalog import load_table
     from delta_lake_optimizations_spark.operators.ivf import (
-        build_ivf_index,
+        ivf_knn_join,
         knn_join_from_ivf_index,
     )
 
@@ -176,14 +176,13 @@ def test_ivf_batch_knn_join_works_on_ivfpq_table(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     t_pq = build_ivfpq_index(spark, emb, str(tmp_path / "pq"), nlist=4, m=4, ksub=16)
-    t_flat = build_ivf_index(spark, emb, str(tmp_path / "flat"), nlist=4)
     a = sorted(
         (r["src_id"], r["nbr_id"], r["cos_sim"])
         for r in knn_join_from_ivf_index(t_pq, nprobe=2, k=3).collect()
     )
     b = sorted(
         (r["src_id"], r["nbr_id"], r["cos_sim"])
-        for r in knn_join_from_ivf_index(t_flat, nprobe=2, k=3).collect()
+        for r in ivf_knn_join(emb, nlist=4, nprobe=2, k=3, seed=7).collect()
     )
     assert a == b and len(a) > 0
 
@@ -215,7 +214,7 @@ def test_ivfpq_optimize_compacts_fragmented_cells_probe_unchanged(spark, tmp_pat
     assert files_after < files_before
     # partition pruning must survive compaction: a 2-cell probe reads at
     # most 2 files once each cell is one file
-    assert ivfpq_probe_files_scanned(t, qv, nprobe=2) <= 2
+    assert ivf_probe_files_scanned(t, qv, nprobe=2) <= 2
     after = ann_topk_from_ivfpq_index(t, qv, k=10, nprobe=2).collect()
     assert [(r["vec_id"], r["cos_sim"]) for r in after] == [
         (r["vec_id"], r["cos_sim"]) for r in before
