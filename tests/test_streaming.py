@@ -199,12 +199,11 @@ def test_streaming_lsh_index_matches_inline_and_replays_idempotently(spark, tmp_
     assert t.load().count() == n_rows, "replayed batches duplicated postings"
 
 
-def test_streaming_ivfpq_index_appends_against_stored_metadata(spark, tmp_path):
-    """The IVF-PQ stream sink (the one IVF index sink): batch 0 fits
-    centroids + codebooks and materializes, batch 1 assigns +
-    residual-encodes against the STORED metadata (neither may move);
-    every ingested vector is findable by probing its own embedding, by
-    ADC and by the exact IVF probe; replay is a no-op."""
+def test_streaming_ivf_index_appends_against_stored_centroids(spark, tmp_path):
+    """The IVF index stream sink (the IVF-PQ table, the one IVF layout):
+    batch 0 fits + materializes, batch 1 assigns against the STORED
+    centroids (they must not move); every ingested vector is findable by
+    the exact IVF probe of its own embedding; replay is a no-op."""
     import os
 
     from pyspark.sql import functions as F
@@ -214,6 +213,60 @@ def test_streaming_ivfpq_index_appends_against_stored_metadata(spark, tmp_path):
         ann_topk_from_ivf_index,
         ivf_index_centroids,
     )
+    from delta_lake_optimizations_spark.streaming.graft_sink import (
+        write_stream_to_ivfpq_index,
+    )
+    from delta_lake_optimizations_spark.table import GraftTable
+    from tests.conftest import SF_DIR
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    src_dir = os.path.join(tmp_path, "src")
+    emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.parquet(
+        os.path.join(src_dir, "a")
+    )
+    emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.parquet(
+        os.path.join(src_dir, "b")
+    )
+    stream = (
+        spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir + "/*")
+    )
+    t = GraftTable(spark, os.path.join(tmp_path, "ivf"))
+    q = write_stream_to_ivfpq_index(
+        stream, t, os.path.join(tmp_path, "ck"), nlist=4, m=4, ksub=16
+    )
+    q.awaitTermination(180)
+
+    assert t.load().count() == emb.count()
+    cents = ivf_index_centroids(t)
+    assert len(cents) == 4
+
+    # an appended (odd-id) vector must find itself as nearest
+    probe_row = emb.filter(F.col("vec_id") % 2 == 1).first()
+    top = ann_topk_from_ivf_index(
+        t, [float(x) for x in probe_row["embedding"]], k=1, nprobe=2
+    ).first()
+    assert top["vec_id"] == probe_row["vec_id"]
+
+    q2 = write_stream_to_ivfpq_index(
+        stream, t, os.path.join(tmp_path, "ck2"), nlist=4, m=4, ksub=16
+    )
+    q2.awaitTermination(180)
+    assert t.load().count() == emb.count(), "replay duplicated rows"
+    assert ivf_index_centroids(t) == cents, "replay refit centroids"
+
+
+def test_streaming_ivfpq_index_appends_against_stored_metadata(spark, tmp_path):
+    """The IVF-PQ stream sink: batch 0 fits centroids + codebooks and
+    materializes, batch 1 assigns + residual-encodes against the STORED
+    metadata (neither may move); every ingested vector is findable by
+    probing its own embedding; replay is a no-op."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from delta_lake_optimizations_spark.catalog import load_table
     from delta_lake_optimizations_spark.operators.ivfpq import (
         ann_topk_from_ivfpq_index,
         ivfpq_metadata,
@@ -254,10 +307,6 @@ def test_streaming_ivfpq_index_appends_against_stored_metadata(spark, tmp_path):
         t, [float(x) for x in probe_row["embedding"]], k=1, nprobe=2
     ).first()
     assert top["vec_id"] == probe_row["vec_id"]
-    top = ann_topk_from_ivf_index(
-        t, [float(x) for x in probe_row["embedding"]], k=1, nprobe=2
-    ).first()
-    assert top["vec_id"] == probe_row["vec_id"]
 
     q2 = write_stream_to_ivfpq_index(
         stream, t, os.path.join(tmp_path, "ck2"), nlist=4, m=4, ksub=16
@@ -265,7 +314,6 @@ def test_streaming_ivfpq_index_appends_against_stored_metadata(spark, tmp_path):
     q2.awaitTermination(180)
     assert t.load().count() == emb.count(), "replay duplicated rows"
     assert ivfpq_metadata(t) == (cents, books), "replay refit metadata"
-    assert ivf_index_centroids(t) == cents, "replay refit centroids"
 
 
 def test_sessionize_v2_matches_v1(spark, events_dir):
