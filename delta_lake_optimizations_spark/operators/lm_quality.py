@@ -7,6 +7,15 @@ CCNet uses a KenLM 5-gram; the bigram form here is the same filter with
 the same plumbing, kept exactly SQL-expressible so the driver oracle
 value-checks it end to end.
 
+Higher orders use the stupid-backoff cascade of Brants et al. (2007).
+One order-generic scorer (``_backoff_scores``; the rule is in the
+stupid-backoff comment below) serves ``backoff_scores`` at order 3 and
+``backoff4_scores`` at order 4. Its count tables are one hash aggregate
+per order 1..n over the reference slice, and ``min_count`` prunes only
+the top order. The registered ``lm_backoff_scores`` and
+``lm_backoff4_scores`` oracles restate each cascade in SQL, level by
+level.
+
 Relation to ``quality.bigram_lm_scores``: that operator scores the
 corpus under an LM trained on the corpus ITSELF (self-perplexity — a
 boilerplate/noise signal with no held-out reference, inner joins, add-k
@@ -42,7 +51,7 @@ re-plan with a baked literal would recompute the reference aggregates).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_lake_optimizations_spark.catalog import load_table
@@ -190,75 +199,116 @@ def lm_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_bigrams", F.round("ppl", 4).alias("ppl")
     )
 
+
 # ---------------------------------------------------------------------------
-# Trigram LM with stupid backoff (VERDICT r06 #4). Brants et al. 2007,
-# "Large Language Models in Machine Translation": at web scale, skip
-# proper discount/normalization and score
+# Stupid backoff at order n (Brants et al. 2007, "Large Language Models in
+# Machine Translation"): at web scale, skip discounting and normalization
+# and score the last word of each n-gram by the first level, from the top
+# down, whose suffix the reference has seen:
 #
-#     S(w3 | w1 w2) = c3(w1 w2 w3) / c2(w1 w2)            if c3 > 0
-#                   = a * c2(w2 w3) / c1(w2)              elif c2(w2 w3) > 0
-#                   = a^2 * (c1(w3) + 1) / (N + V)        otherwise
+#     level j = n..2:  a^(n-j) * c_j(w_{n-j+1}..w_n) / c_{j-1}(w_{n-j+1}..w_{n-1})
+#     level 1:         a^(n-1) * (c_1(w_n) + 1) / (N + V)
 #
-# with a = 0.4 (the paper's constant). The last line folds the paper's
-# unigram level c1(w3)/N together with an add-one OOV floor (same V =
-# distinct tokens + 1 convention as the bigram module), so unseen words
-# degrade smoothly instead of hitting -ln 0. S is a score, not a
-# normalized probability ("stupid" is the paper's own word for exactly
-# this shortcut) — exp(avg -ln S) is therefore a perplexity-LIKE
-# quality signal, comparable across documents under the same LM, which
-# is all the CCNet-style filter needs.
+# with a = 0.4 (the paper's constant). Level 1 folds the paper's unigram
+# level c1/N together with an add-one OOV floor (V = distinct tokens + 1,
+# as in the bigram LM), so unseen words degrade smoothly instead of
+# hitting -ln 0. The chosen level's value S is a score, not a normalized
+# probability, so exp(avg -ln S) is a perplexity-LIKE signal: comparable
+# across documents under the same LM, which is all the CCNet-style filter
+# needs.
 #
-# 100 TB design, same as the bigram LM: training is three hash
-# aggregates over the reference slice (trigram / bigram / unigram
-# counts); scoring joins the document trigram stream to the three count
-# tables on their gram keys (AQE broadcasts small LMs, shuffle-joins
-# big ones); ``min_count`` prunes the trigram table's long tail — the
-# dominant LM-size term — and a pruned trigram simply backs off, which
-# is the semantics pruning SHOULD have in this model (the paper ships
-# count cutoffs for the same reason). N and V ride one broadcast 1-row
-# cross join.
+# ``min_count`` prunes only the top order, the dominant LM-size term: a
+# pruned n-gram backs off one level, the paper's count-cutoff semantics.
+# The lower orders stay unpruned because each is the denominator of the
+# level above it; pruning one would inflate its surviving conditionals.
 # ---------------------------------------------------------------------------
 
 BACKOFF_ALPHA = 0.4
 
 
-def train_backoff_lm(
-    ref: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_count: int = 1,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Count tables for the stupid-backoff trigram LM.
-
-    Returns ``(trigrams, bigrams, unigrams, scalars)``:
-    ``trigrams``: (_gram3, c3) pruned to >= min_count;
-    ``bigrams``: (_gram2, c2) UNpruned (it is both the trigram
-    denominator and the backoff numerator — pruning it would inflate
-    surviving trigram conditionals);
-    ``unigrams``: (_w, c1) UNpruned;
-    ``scalars``: 1 row (n, v) — total reference tokens and distinct + 1.
+def _backoff_counts(
+    ref: DataFrame, id_col: str, text_col: str, order: int, min_count: int
+) -> tuple[dict[int, DataFrame], DataFrame]:
+    """Count tables of the order-n stupid-backoff LM: ``counts[k]`` is
+    ``(_g{k}, c{k})``, one ``_gram_rows`` aggregate per order k >= 2 and
+    the token explode for k = 1; the top order is pruned to >= min_count.
+    ``scalars`` is 1 row (n, v): total reference tokens and distinct + 1.
     """
-    trigrams = (
-        _gram_rows(ref, id_col, text_col, n=3, short_gram=False)
-        .groupBy(F.col("_gram").alias("_gram3"))
-        .agg(F.count(F.lit(1)).alias("c3"))
-    )
+    counts = {
+        k: _gram_rows(ref, id_col, text_col, n=k, short_gram=False)
+        .groupBy(F.col("_gram").alias(f"_g{k}"))
+        .agg(F.count(F.lit(1)).alias(f"c{k}"))
+        for k in range(order, 1, -1)
+    }
     if min_count > 1:
-        trigrams = trigrams.filter(F.col("c3") >= min_count)
-    bigrams = (
-        _gram_rows(ref, id_col, text_col, n=2, short_gram=False)
-        .groupBy(F.col("_gram").alias("_gram2"))
-        .agg(F.count(F.lit(1)).alias("c2"))
-    )
+        counts[order] = counts[order].filter(F.col(f"c{order}") >= min_count)
     toks = ref.select(
-        F.explode(tokenize(F.coalesce(F.col(text_col), F.lit("")))).alias("_w")
+        F.explode(tokenize(F.coalesce(F.col(text_col), F.lit("")))).alias("_g1")
     )
-    unigrams = toks.groupBy("_w").agg(F.count(F.lit(1)).alias("c1"))
+    counts[1] = toks.groupBy("_g1").agg(F.count(F.lit(1)).alias("c1"))
     scalars = toks.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.countDistinct("_w") + F.lit(1)).alias("v"),
+        F.count(F.lit(1)).alias("n"), (F.countDistinct("_g1") + F.lit(1)).alias("v")
     )
-    return trigrams, bigrams, unigrams, scalars
+    return counts, scalars
+
+
+def _backoff_scores(
+    docs: DataFrame, ref: DataFrame, id_col: str, text_col: str,
+    order: int, min_count: int, alpha: float,
+) -> DataFrame:
+    """Per-document order-n stupid-backoff score ``(id_col, _n, ppl)`` for
+    every document with >= 1 n-gram position (shorter docs have no
+    evidence and drop). The doc n-gram stream is left-joined to the count
+    tables on its suffix and context grams (AQE broadcasts small LMs,
+    shuffle-joins big ones); N and V ride one broadcast 1-row cross join."""
+    counts, scalars = _backoff_counts(ref, id_col, text_col, order, min_count)
+    parts = F.split("_gram", " ")
+
+    def span(lo: int, k: int) -> Column:
+        if k == 1:
+            return parts.getItem(lo)
+        return F.concat_ws(" ", *(parts.getItem(i) for i in range(lo, lo + k)))
+
+    # below the top order, order k is looked up twice: as the context of the
+    # length-(k+1) suffix (that level's denominator, d{k}) and as the
+    # length-k suffix (s{k}); entries are (count column, first token, k)
+    lookups = [
+        (name, lo, k)
+        for k in range(order - 1, 0, -1)
+        for name, lo in ((f"d{k}", order - k - 1), (f"s{k}", order - k))
+    ]
+    joined = (
+        _gram_rows(docs, id_col, text_col, n=order, short_gram=False)
+        .select(
+            "_id",
+            F.col("_gram").alias(f"_g{order}"),
+            *(span(lo, k).alias(f"_{name}") for name, lo, k in lookups),
+        )
+        .join(counts[order], f"_g{order}", "left")
+    )
+    for name, _, k in lookups:
+        table = counts[k].select(
+            F.col(f"_g{k}").alias(f"_{name}"), F.col(f"c{k}").alias(name)
+        )
+        joined = joined.join(table, f"_{name}", "left")
+    joined = joined.crossJoin(F.broadcast(scalars))
+
+    top, den = F.col(f"c{order}"), F.col(f"d{order - 1}")
+    score = F.when(top.isNotNull(), top / den)
+    for j in range(order - 1, 1, -1):
+        num, den = F.col(f"s{j}"), F.col(f"d{j - 1}")
+        score = score.when(num.isNotNull(), F.lit(alpha ** (order - j)) * num / den)
+    score = score.otherwise(
+        F.lit(alpha ** (order - 1))
+        * (F.coalesce(F.col("s1"), F.lit(0)) + F.lit(1))
+        / (F.col("n") + F.col("v"))
+    )
+    return (
+        joined.select("_id", (-F.log(score)).alias("_nll"))
+        .groupBy("_id")
+        .agg(F.count(F.lit(1)).alias("_n"), F.exp(F.avg("_nll")).alias("ppl"))
+        .select(F.col("_id").alias(id_col), "_n", "ppl")
+    )
 
 
 def backoff_scores(
@@ -269,66 +319,11 @@ def backoff_scores(
     min_count: int = 1,
     alpha: float = BACKOFF_ALPHA,
 ) -> DataFrame:
-    """Per-document stupid-backoff score: ``(id_col, n_trigrams, ppl)``
-    for every document with >= 1 trigram position (< 3 tokens -> no
-    evidence, dropped — same convention as the bigram scorer)."""
-    trigrams, bigrams, unigrams, scalars = train_backoff_lm(
-        ref, id_col, text_col, min_count
-    )
-    parts = F.split("_gram", " ")
-    doc_tri = _gram_rows(docs, id_col, text_col, n=3, short_gram=False).select(
-        "_id",
-        F.col("_gram").alias("_gram3"),
-        F.concat_ws(" ", parts.getItem(0), parts.getItem(1)).alias("_p2"),
-        F.concat_ws(" ", parts.getItem(1), parts.getItem(2)).alias("_s2"),
-        parts.getItem(1).alias("_w2"),
-        parts.getItem(2).alias("_w3"),
-    )
-    joined = (
-        doc_tri.join(trigrams, "_gram3", "left")
-        .join(
-            bigrams.select(F.col("_gram2").alias("_p2"), F.col("c2").alias("c2p")),
-            "_p2",
-            "left",
-        )
-        .join(
-            bigrams.select(F.col("_gram2").alias("_s2"), F.col("c2").alias("c2s")),
-            "_s2",
-            "left",
-        )
-        .join(
-            unigrams.select(F.col("_w").alias("_w2"), F.col("c1").alias("c1w2")),
-            "_w2",
-            "left",
-        )
-        .join(
-            unigrams.select(F.col("_w").alias("_w3"), F.col("c1").alias("c1w3")),
-            "_w3",
-            "left",
-        )
-        .crossJoin(F.broadcast(scalars))
-    )
-    score = (
-        F.when(F.col("c3").isNotNull(), F.col("c3") / F.col("c2p"))
-        .when(
-            F.col("c2s").isNotNull(),
-            F.lit(alpha) * F.col("c2s") / F.col("c1w2"),
-        )
-        .otherwise(
-            F.lit(alpha * alpha)
-            * (F.coalesce(F.col("c1w3"), F.lit(0)) + F.lit(1))
-            / (F.col("n") + F.col("v"))
-        )
-    )
-    return (
-        joined.select("_id", (-F.log(score)).alias("_nll"))
-        .groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_trigrams"),
-            F.exp(F.avg("_nll")).alias("ppl"),
-        )
-        .select(F.col("_id").alias(id_col), "n_trigrams", "ppl")
-    )
+    """Per-document trigram stupid-backoff score: ``(id_col, n_trigrams,
+    ppl)`` for every document with >= 1 trigram position (< 3 tokens ->
+    no evidence, dropped — same convention as the bigram scorer)."""
+    scores = _backoff_scores(docs, ref, id_col, text_col, 3, min_count, alpha)
+    return scores.withColumnRenamed("_n", "n_trigrams")
 
 
 def backoff_filter(
@@ -347,44 +342,6 @@ def backoff_filter(
     )
 
 
-# ---------------------------------------------------------------------------
-# 4-gram stupid backoff (VERDICT r07 #4): one more order of the same
-# Brants et al. cascade — CCNet's KenLM reference uses 4-5-gram models,
-# and each added order measurably sharpens the filter on longer
-# dependencies. Same pruning semantics: ``min_count`` prunes ONLY the
-# top (4-gram) table — a pruned 4-gram backs off, exactly the paper's
-# count-cutoff behavior; all lower orders stay unpruned because they
-# serve as denominators.
-#
-#     S(w4 | w1 w2 w3) = c4(w1..w4) / c3(w1 w2 w3)        if c4 > 0
-#                      = a   * c3(w2 w3 w4) / c2(w2 w3)   elif c3 > 0
-#                      = a^2 * c2(w3 w4)    / c1(w3)      elif c2 > 0
-#                      = a^3 * (c1(w4) + 1) / (N + V)     otherwise
-# ---------------------------------------------------------------------------
-
-
-def train_backoff4_lm(
-    ref: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_count: int = 1,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Count tables for the 4-gram stupid-backoff LM: four hash
-    aggregates over the reference gram streams plus the 1-row scalars.
-    Only the 4-gram table is pruned (see module comment)."""
-    fourgrams = (
-        _gram_rows(ref, id_col, text_col, n=4, short_gram=False)
-        .groupBy(F.col("_gram").alias("_gram4"))
-        .agg(F.count(F.lit(1)).alias("c4"))
-    )
-    if min_count > 1:
-        fourgrams = fourgrams.filter(F.col("c4") >= min_count)
-    trigrams, bigrams, unigrams, scalars = train_backoff_lm(
-        ref, id_col, text_col, min_count=1
-    )
-    return fourgrams, trigrams, bigrams, unigrams, scalars
-
-
 def backoff4_scores(
     docs: DataFrame,
     ref: DataFrame,
@@ -395,86 +352,9 @@ def backoff4_scores(
 ) -> DataFrame:
     """Per-document 4-gram stupid-backoff score: ``(id_col, n_fourgrams,
     ppl)`` for every document with >= 1 4-gram position (< 4 tokens ->
-    no evidence, dropped). Scoring is the gram stream left-joined to the
-    four count tables (AQE broadcasts small LMs); N and V ride one
-    broadcast 1-row cross join."""
-    fourgrams, trigrams, bigrams, unigrams, scalars = train_backoff4_lm(
-        ref, id_col, text_col, min_count
-    )
-    parts = F.split("_gram", " ")
-    doc_four = _gram_rows(docs, id_col, text_col, n=4, short_gram=False).select(
-        "_id",
-        F.col("_gram").alias("_gram4"),
-        F.concat_ws(
-            " ", parts.getItem(0), parts.getItem(1), parts.getItem(2)
-        ).alias("_p3"),
-        F.concat_ws(
-            " ", parts.getItem(1), parts.getItem(2), parts.getItem(3)
-        ).alias("_s3"),
-        F.concat_ws(" ", parts.getItem(1), parts.getItem(2)).alias("_m2"),
-        F.concat_ws(" ", parts.getItem(2), parts.getItem(3)).alias("_s2"),
-        parts.getItem(2).alias("_w3"),
-        parts.getItem(3).alias("_w4"),
-    )
-    joined = (
-        doc_four.join(fourgrams, "_gram4", "left")
-        .join(
-            trigrams.select(F.col("_gram3").alias("_p3"), F.col("c3").alias("c3p")),
-            "_p3",
-            "left",
-        )
-        .join(
-            trigrams.select(F.col("_gram3").alias("_s3"), F.col("c3").alias("c3s")),
-            "_s3",
-            "left",
-        )
-        .join(
-            bigrams.select(F.col("_gram2").alias("_m2"), F.col("c2").alias("c2m")),
-            "_m2",
-            "left",
-        )
-        .join(
-            bigrams.select(F.col("_gram2").alias("_s2"), F.col("c2").alias("c2s")),
-            "_s2",
-            "left",
-        )
-        .join(
-            unigrams.select(F.col("_w").alias("_w3"), F.col("c1").alias("c1w3")),
-            "_w3",
-            "left",
-        )
-        .join(
-            unigrams.select(F.col("_w").alias("_w4"), F.col("c1").alias("c1w4")),
-            "_w4",
-            "left",
-        )
-        .crossJoin(F.broadcast(scalars))
-    )
-    score = (
-        F.when(F.col("c4").isNotNull(), F.col("c4") / F.col("c3p"))
-        .when(
-            F.col("c3s").isNotNull(),
-            F.lit(alpha) * F.col("c3s") / F.col("c2m"),
-        )
-        .when(
-            F.col("c2s").isNotNull(),
-            F.lit(alpha * alpha) * F.col("c2s") / F.col("c1w3"),
-        )
-        .otherwise(
-            F.lit(alpha ** 3)
-            * (F.coalesce(F.col("c1w4"), F.lit(0)) + F.lit(1))
-            / (F.col("n") + F.col("v"))
-        )
-    )
-    return (
-        joined.select("_id", (-F.log(score)).alias("_nll"))
-        .groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_fourgrams"),
-            F.exp(F.avg("_nll")).alias("ppl"),
-        )
-        .select(F.col("_id").alias(id_col), "n_fourgrams", "ppl")
-    )
+    no evidence, dropped)."""
+    scores = _backoff_scores(docs, ref, id_col, text_col, 4, min_count, alpha)
+    return scores.withColumnRenamed("_n", "n_fourgrams")
 
 
 @query(

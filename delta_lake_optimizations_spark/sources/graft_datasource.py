@@ -109,17 +109,16 @@ def _suffix2(p: str) -> str:
 
 
 def _dv_mask(dv_abs_path: str, logical_path: str, n: int) -> "pa.Array | None":
-    """Boolean keep-mask for one file from its deletion-vector directory
-    (matched on the relocation-proof last-two-components key)."""
-    dv = pq.read_table(dv_abs_path, columns=["file_path", "row_index"])
-    want = _suffix2(logical_path)
+    """Boolean keep-mask for one file of ``n`` rows from its deletion
+    vector (``_dv_positions``), or None when no deleted position falls
+    inside the file."""
+    dead = [idx for idx in _dv_positions(dv_abs_path, logical_path) if 0 <= idx < n]
+    if not dead:
+        return None
     keep = [True] * n
-    hit = False
-    for fp, idx in zip(dv.column("file_path").to_pylist(), dv.column("row_index").to_pylist()):
-        if _suffix2(fp) == want and 0 <= idx < n:
-            keep[idx] = False
-            hit = True
-    return pa.array(keep) if hit else None
+    for idx in dead:
+        keep[idx] = False
+    return pa.array(keep)
 
 
 def _read_file_as_batches(

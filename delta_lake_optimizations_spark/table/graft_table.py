@@ -1535,16 +1535,7 @@ class GraftTable:
         is re-applied as a DataFrame filter for exactness.
         """
         snap = self.snapshot(version=version, timestamp=timestamp)
-        if skip_where:
-            # footer stats / hive partition values are keyed by PHYSICAL
-            # names; bloom sidecars and the exactness re-filter by LOGICAL
-            cmap = _colmap(snap.properties)
-            phys_preds = [(cmap.get(c, c), op, v) for c, op, v in skip_where]
-            phys_parts = [cmap.get(c, c) for c in snap.partition_columns]
-            files = self._stats_prune(snap, phys_preds, phys_parts)
-            files = self._bloom_prune(files, skip_where)
-        else:
-            files = snap.files
+        files = self._skip_files(snap, skip_where) if skip_where else snap.files
         df = self._read_files(snap, files)
         if skip_where:
             for col, op, value in skip_where:
@@ -1572,14 +1563,24 @@ class GraftTable:
             f for f in snap.files if _file_may_match(f, phys_preds, phys_parts)
         ]
 
-    def _bloom_prune(self, files: list[AddFile], skip_where) -> list[AddFile]:
-        """Bloom-sidecar file skipping for ``=`` predicates (table/bloom.py)
-        — prunes what min/max can't: point lookups on high-cardinality
+    def _skip_files(
+        self, snap: Snapshot, skip_where: list[tuple[str, str, Any]]
+    ) -> list[AddFile]:
+        """The files of ``snap`` a scan with ``skip_where`` must read:
+        min/max + partition-value skipping (``_stats_prune``), then
+        Bloom-sidecar skipping for ``=`` predicates (table/bloom.py), which
+        prunes what min/max can't: point lookups on high-cardinality
         columns with no clustered layout. Exactness is preserved because
         ``load`` re-applies the predicate as a DataFrame filter (false
         positives scan harmlessly; the sidecar has no false negatives)."""
         from delta_lake_optimizations_spark.table import bloom
 
+        # footer stats / hive partition values are keyed by PHYSICAL
+        # names; bloom sidecars and the exactness re-filter by LOGICAL
+        cmap = _colmap(snap.properties)
+        phys_preds = [(cmap.get(c, c), op, v) for c, op, v in skip_where]
+        phys_parts = [cmap.get(c, c) for c in snap.partition_columns]
+        files = self._stats_prune(snap, phys_preds, phys_parts)
         return bloom.bloom_prune(self, files, skip_where)
 
     def count_rows(
@@ -1597,12 +1598,7 @@ class GraftTable:
         (the §5.3 layout-effect metric: assert on files read, not seconds)."""
         snap = self.snapshot()
         if skip_where:
-            cmap = _colmap(snap.properties)
-            phys_preds = [(cmap.get(c, c), op, v) for c, op, v in skip_where]
-            phys_parts = [cmap.get(c, c) for c in snap.partition_columns]
-            files = self._stats_prune(snap, phys_preds, phys_parts)
-            files = self._bloom_prune(files, skip_where)
-            return len(files)
+            return len(self._skip_files(snap, skip_where))
         return snap.num_files
 
     # -- inspection (M6, M11, M12) ----------------------------------------

@@ -4,7 +4,8 @@
 # runs; each prints one PASS/FAIL line with its exit code and log file. The
 # gate exits non-zero if any step fails or does not run (no tests
 # collected, timeout, missing interpreter — any non-zero exit). Nothing is
-# deselected or forgiven.
+# deselected or forgiven. The tier-1 log ends with its 25 slowest tests,
+# since the suite's wall time is the budget most at risk.
 #
 # Usage: scripts/gate.sh            (from anywhere; logs go to $GATE_LOG_DIR
 #                                    or a fresh temp dir, printed at the end)
@@ -34,7 +35,7 @@ step() {
 }
 
 step tier1 timeout -k 10 2670 python -m pytest tests/ -q \
-    --continue-on-collection-errors -p no:cacheprovider
+    --continue-on-collection-errors -p no:cacheprovider --durations=25
 step slow timeout -k 10 2670 python -m pytest tests/ -q -m slow \
     --continue-on-collection-errors -p no:cacheprovider
 step oracle timeout -k 10 2670 python scripts/driver_sim.py

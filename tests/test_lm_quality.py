@@ -1,18 +1,26 @@
 """CCNet-style bigram-LM perplexity: reference docs score lower than
 noise, OOV degrades smoothly, min_count pruning only raises scores, and
-the filter keeps the low-perplexity side. (Value-exactness vs DuckDB is
-covered by the registered oracle for lm_perplexity_scores.)"""
+the filter keeps the low-perplexity side. The order-3 and order-4
+stupid-backoff scorers: every cascade level hand-computed, pruning backs
+off, and pinned rows on the fixture corpus. (Value-exactness vs DuckDB is
+covered by the registered oracles for lm_perplexity_scores,
+lm_backoff_scores and lm_backoff4_scores.)"""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from delta_lake_optimizations_spark.catalog import load_table
 from delta_lake_optimizations_spark.operators.lm_quality import (
+    backoff4_scores,
+    backoff_scores,
     perplexity_filter,
     perplexity_scores,
     train_bigram_lm,
 )
+
+from .conftest import SF_DIR
 
 
 @pytest.fixture()
@@ -177,7 +185,7 @@ def test_backoff_filter_keeps_fluent_side(spark):
     assert ids == {0, 1}  # ref doc itself is fluent under its own LM
 
 
-# --- 4-gram stupid backoff (VERDICT r07 #4) ---
+# --- 4-gram stupid backoff ---
 
 
 def test_backoff4_cascade_levels_hand_computed(spark):
@@ -254,3 +262,44 @@ def test_backoff4_short_docs_drop(spark):
         for r in backoff4_scores(corpus, ref, "doc_id", "text").collect()
     }
     assert 1 not in ids
+
+
+# (row count, sha256 of the repr of the sorted, unrounded rows) of both
+# backoff scorers on the fixture corpus with the English slice as the
+# reference, recorded from the hand-unrolled order-3 and order-4 scorers
+# that the order-generic cascade replaced.
+_PINNED_BACKOFF_ROWS = {
+    (3, 1): (
+        500,
+        "1fac2b12c335d7094c6c3b00c5f9308fcf25dbb020dc9df04600ec513daf5f70",
+    ),
+    (3, 2): (
+        500,
+        "4aa27c0c1b07ca6649891767dc0bfdd4635e009a70941ed7b526fafa11d8dc91",
+    ),
+    (4, 1): (
+        500,
+        "aaf3f2efbb1061314920e61099855e0894be0dba715f960a822153a1487766fe",
+    ),
+    (4, 2): (
+        500,
+        "7662ac3a6461842f7ec72e0b2be2e87b2f31bdef0da3c55a1cc9ec19356943d8",
+    ),
+}
+
+
+def test_backoff_scores_pinned_rows(spark):
+    import hashlib
+
+    docs = load_table(spark, SF_DIR, "documents")
+    ref = docs.filter(F.col("lang") == "en")
+    scorers = {3: backoff_scores, 4: backoff4_scores}
+    got = {}
+    for order, min_count in _PINNED_BACKOFF_ROWS:
+        scores = scorers[order](docs, ref, "doc_id", "text", min_count=min_count)
+        rows = sorted(tuple(r) for r in scores.collect())
+        got[order, min_count] = (
+            len(rows),
+            hashlib.sha256(repr(rows).encode()).hexdigest(),
+        )
+    assert got == _PINNED_BACKOFF_ROWS
