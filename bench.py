@@ -272,8 +272,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
             corpus = _clustered_table(n_vec, sub)
             t0 = time.perf_counter()
             st = build_lsh_sharded_index(
-                spark, corpus, os.path.join(root, sub + "_sidx"), dim,
-                n_shards=512,
+                spark, corpus, os.path.join(root, sub + "_sidx"), n_shards=512,
             )
             res["sharded_build_sec"] = round(time.perf_counter() - t0, 4)
             t0 = time.perf_counter()
@@ -343,7 +342,7 @@ def _bench_ann_index(spark, dim: int = 64) -> dict:
                 "bruteforce": lambda: topk_cosine_batch(
                     corpus, batch_qs, k=10).count(),
                 "sharded": lambda: ann_topk_batch_from_sharded(
-                    st, batch_qs, dim, k=10).count(),
+                    st, batch_qs, k=10).count(),
                 "ivf": lambda: ann_topk_batch_from_ivf(
                     ivfpq_t, batch_qs, k=10, nprobe=nprobe).count(),
                 "ivfpq": lambda: ann_topk_batch_from_ivfpq(

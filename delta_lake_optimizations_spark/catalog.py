@@ -8,7 +8,10 @@ SURVEY.md §3).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +51,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # ~1.7e18 nanosecond values (> 2^53).
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df
+
+
+def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
+    """Content fingerprint of a corpus table's parquet (sizes + mtimes of
+    every data file): folded into artifact cache keys so a corpus
+    regenerated in place gets a REBUILT artifact instead of a stale one."""
+    target = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    parts: list[str] = []
+    if os.path.isdir(target):
+        for dirpath, _dn, filenames in os.walk(target):
+            for fn in sorted(filenames):
+                p = os.path.join(dirpath, fn)
+                st = os.stat(p)
+                parts.append(f"{os.path.relpath(p, target)}:{st.st_size}:{st.st_mtime_ns}")
+    elif os.path.exists(target):
+        st = os.stat(target)
+        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
+    return "|".join(parts)
+
+
+def cached_table(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable, subdir: str
+):
+    """Build-once-per-corpus GraftTable under ``<tempdir>/<subdir>/<key>``,
+    ``key`` a hash of the corpus path, the config ``tag`` and the
+    embeddings' ``corpus_fingerprint`` (a regenerated corpus changes the
+    key and triggers a rebuild). ``build(path)`` writes the table at
+    ``path`` and returns it; later calls reuse the committed table."""
+    from delta_lake_optimizations_spark.table import GraftTable
+
+    key = hashlib.sha256(
+        f"{os.path.abspath(sf_dir)}|{tag}|{corpus_fingerprint(sf_dir)}".encode()
+    ).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), subdir, key)
+    t = GraftTable(spark, path)
+    return t if t.exists() else build(path)
 
 
 def register_tables(

@@ -284,14 +284,11 @@ def cached_bpe_model(spark, sf_dir: str, n_merges: int = 200) -> BpeModel:
     import hashlib
     import json
 
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.lsh_index import (
-        _corpus_fingerprint,
-    )
+    from delta_lake_optimizations_spark.catalog import corpus_fingerprint, load_table
 
     key = hashlib.sha256(
         f"{os.path.abspath(sf_dir)}|bpe|{n_merges}|"
-        f"{_corpus_fingerprint(sf_dir, table='documents')}".encode()
+        f"{corpus_fingerprint(sf_dir, table='documents')}".encode()
     ).hexdigest()[:16]
     cache_dir = os.path.join(tempfile.gettempdir(), "spark_graft_bpe_model")
     path = os.path.join(cache_dir, f"{key}.json")

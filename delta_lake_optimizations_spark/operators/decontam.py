@@ -438,30 +438,25 @@ def embedding_decontaminate_indexed(
 
 def _cached_bench_ivf_index(spark, sf_dir: str, nlist: int = 8):
     """Build-once IVF-PQ index over the synthetic benchmark slice
-    (vec_id % 50 == 0) — content-fingerprinted cache key, the same
-    scheme as ``ivfpq._cached_ivfpq_index``. The decontam probe reads
-    only its cells and float vectors."""
-    import hashlib
-    import os
-    import tempfile
-
+    (vec_id % 50 == 0), cached like every corpus index (see
+    ``catalog.cached_table``). The decontam probe reads only its cells
+    and float vectors."""
+    from delta_lake_optimizations_spark.catalog import cached_table
     from delta_lake_optimizations_spark.operators.ivfpq import build_ivfpq_index
-    from delta_lake_optimizations_spark.operators.lsh_index import _corpus_fingerprint
-    from delta_lake_optimizations_spark.table import GraftTable
 
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|bench-ivfpq-np|{nlist}|"
-        f"{_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_bench_ivf", key)
-    t = GraftTable(spark, path)
-    if not t.exists():
-        emb = load_table(spark, sf_dir, "embeddings")
-        t = build_ivfpq_index(
-            spark, emb.filter(F.col("vec_id") % 50 == 0), path,
-            nlist=nlist, seed=7,
-        )
-    return t
+    return cached_table(
+        spark,
+        sf_dir,
+        f"bench-ivfpq-np|{nlist}",
+        lambda path: build_ivfpq_index(
+            spark,
+            load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0),
+            path,
+            nlist=nlist,
+            seed=7,
+        ),
+        "spark_graft_bench_ivf",
+    )
 
 
 @query("decontam_embedding_indexed", tags=("decontam", "similarity", "index", "llm-pipeline"))
@@ -495,6 +490,8 @@ def decontam_embedding_matches_broadcast(
     not just the contaminated tail) so the twin pins ~|corpus| values,
     never an empty set. A stale benchmark index, a probe under-reach,
     or an assignment drift makes n_mismatch > 0."""
+    from delta_lake_optimizations_spark.operators.metrics import mismatch_count
+
     emb = load_table(spark, sf_dir, "embeddings")
     bench = emb.filter(F.col("vec_id") % 50 == 0)
     corpus = emb.filter(F.col("vec_id") % 50 != 0)
@@ -504,27 +501,8 @@ def decontam_embedding_matches_broadcast(
     t = _cached_bench_ivf_index(spark, sf_dir, nlist=8)
     indexed_form = embedding_decontaminate_indexed(
         corpus, t, threshold=-1.0, nprobe=4
-    ).select(
-        F.col("vec_id").alias("_v2"), F.col("max_bench_cos").alias("_c2")
     )
-    both = broadcast_form.join(
-        indexed_form,
-        (F.col("vec_id") == F.col("_v2"))
-        & (F.col("max_bench_cos") == F.col("_c2")),
-        "full",
-    )
-    return both.agg(
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("vec_id").isNull() | F.col("_v2").isNull(), 1
-                ).otherwise(0)
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_mismatch")
-    )
+    return mismatch_count(broadcast_form, indexed_form, ["vec_id", "max_bench_cos"])
 
 
 @query(

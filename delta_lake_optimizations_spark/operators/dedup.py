@@ -582,6 +582,7 @@ def minhash_scaled_matches_pairwise(spark: SparkSession, sf_dir: str) -> DataFra
     from delta_lake_optimizations_spark.operators.components import (
         connected_components,
     )
+    from delta_lake_optimizations_spark.operators.metrics import mismatch_count
 
     documents = load_table(spark, sf_dir, "documents")
     scaled = dedup_minhash_survivors(documents, "doc_id", "text", threshold=0.5).select(
@@ -592,16 +593,8 @@ def minhash_scaled_matches_pairwise(spark: SparkSession, sf_dir: str) -> DataFra
     pairwise = (
         documents.join(comp, documents["doc_id"] == comp["vertex"], "left")
         .filter(F.coalesce("component", F.col("doc_id")) == F.col("doc_id"))
-        .select(F.col("doc_id").alias("_d2"))
     )
-    both = scaled.join(pairwise, F.col("doc_id") == F.col("_d2"), "full")
-    return both.agg(
-        F.sum(
-            F.when(F.col("doc_id").isNull() | F.col("_d2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch")
-    )
+    return mismatch_count(scaled, pairwise, ["doc_id"])
 
 
 # ---------------------------------------------------------------------------

@@ -57,11 +57,8 @@ land in the right cells with consistent codes and probes stay pruned.
 
 from __future__ import annotations
 
-import hashlib as _hashlib
 import json as _json
 import math as _math
-import os as _os
-import tempfile as _tempfile
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -518,23 +515,21 @@ def append_to_ivfpq_index(
 
 
 def _cached_ivfpq_index(spark, sf_dir: str, nlist: int = 8, m: int = 4, ksub: int = 16):
-    """Build-once-per-corpus IVF-PQ index (content-fingerprinted cache
-    key, same scheme as the LSH index caches). One cached table serves
-    the exact IVF queries and the ADC IVF-PQ queries alike."""
-    from delta_lake_optimizations_spark.catalog import load_table
-    from delta_lake_optimizations_spark.operators.lsh_index import _corpus_fingerprint
-    from delta_lake_optimizations_spark.table import GraftTable
+    """Build-once-per-corpus IVF-PQ index (see ``catalog.cached_table``).
+    One cached table serves the exact IVF queries and the ADC IVF-PQ
+    queries alike."""
+    from delta_lake_optimizations_spark.catalog import cached_table, load_table
 
-    key = _hashlib.sha256(
-        f"{_os.path.abspath(sf_dir)}|ivfpq-np|{nlist}|{m}|{ksub}|"
-        f"{_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    path = _os.path.join(_tempfile.gettempdir(), "spark_graft_ivfpq_index", key)
-    t = GraftTable(spark, path)
-    if not t.exists():
-        emb = load_table(spark, sf_dir, "embeddings")
-        t = build_ivfpq_index(spark, emb, path, nlist=nlist, m=m, ksub=ksub, seed=7)
-    return t
+    return cached_table(
+        spark,
+        sf_dir,
+        f"ivfpq-np|{nlist}|{m}|{ksub}",
+        lambda path: build_ivfpq_index(
+            spark, load_table(spark, sf_dir, "embeddings"), path,
+            nlist=nlist, m=m, ksub=ksub, seed=7,
+        ),
+        "spark_graft_ivfpq_index",
+    )
 
 
 @query("ann_ivfpq_topk_indexed", tags=("similarity", "approx", "index", "pq"))

@@ -1,44 +1,46 @@
-"""Materialized LSH index (SURVEY §2.9 X3 — the 100 TB ANN path).
+"""Random-hyperplane LSH (SURVEY §2.9 X3 — the 100 TB ANN path).
 
-The inline multi-probe query (``similarity.ann_topk_multiprobe``) computes
-``n_tables * n_planes`` dot products PER ROW PER QUERY to derive the code
-columns it filters on — for a single query that candidate stage costs more
-multiplies than the exact scan it is meant to avoid. The scale answer is to
-make the codes an INDEX: compute them ONCE (one narrow pass over the
-corpus), persist them next to the vectors, and answer every subsequent
-query by reading only the buckets it probes, followed by an exact re-rank
-of the surviving candidates.
+This module owns hyperplane LSH; every other module imports it from here:
 
-Layout (``build_lsh_sharded_index``): postings exploded per table, keyed
-by ``tc = table<<planes | code``, range-sharded + sorted, small parquet row
-groups, written through the GraftTable layer (one commit-logged write,
-time-travelable and vacuumable like any other table). The probe is ONE
-``tc IN (multiprobe buckets)`` load riding the engine's min/max file
+- **Planes and codes.** ``_hyperplane`` is the one deterministic plane
+  sequence. A vector's packed sign code for one table is computed three
+  ways, bit-identical by construction: ``code_col`` (the Spark fold
+  column the inline queries filter and join on), ``_codes_pandas_udf``
+  (the Arrow/NumPy pass the index build and the batch join use; it reads
+  ``dim`` from each batch) and ``query_margins`` / ``query_codes`` (the
+  driver-side code of a query constant).
+- **Probe masks.** ``hamming_masks`` enumerates the XOR masks of a
+  Hamming ball; ``ranked_probe_lists`` orders flip sets by the query's
+  hyperplane margins instead (Multi-Probe LSH, Lv et al., VLDB 2007).
+- **The sharded index and its dials.** ``build_lsh_sharded_index``
+  persists the codes as ``tc = table<<planes | code`` postings and
+  records ``graft.lsh.nTables`` / ``graft.lsh.nPlanes`` in the table's
+  properties. Every probe, join, batch and append reads those two dials
+  from the index, so a caller cannot probe an index with the wrong ones.
+
+Why an index: the inline multi-probe query (``similarity.
+ann_topk_multiprobe``) computes ``n_tables * n_planes`` dot products PER
+ROW PER QUERY to derive the codes it filters on. The index computes them
+ONCE (one narrow pass over the corpus) and answers every query by reading
+only the buckets it probes, then re-ranking the candidates exactly. The
+probe is ONE ``tc IN (buckets)`` load riding the engine's min/max file
 skipping plus the pushed In predicate's row-group pruning, so IO and
 decode are O(candidates). At 800k clustered vectors: speedup 2.0x over
 brute force end-to-end, 3.2% candidates, recall@10 0.96, probe touches 11%
 of index files — and the gap WIDENS with corpus size (brute is O(corpus),
-the probe is O(buckets)).
-
-Recall is identical BY CONSTRUCTION to the inline multi-probe path at the
-same (n_tables, n_planes, Hamming radius): the planes come from the same
-deterministic ``_hyperplane`` sequence, so code bits — and therefore the
-candidate set — are bit-for-bit the same.
+the probe is O(buckets)). Recall equals the inline path's at the same
+(n_tables, n_planes, Hamming radius), because the code bits are the same.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
+from itertools import combinations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from delta_lake_optimizations_spark.catalog import load_table
+from delta_lake_optimizations_spark.catalog import cached_table, load_table
 from delta_lake_optimizations_spark.operators.similarity import (
-    _hyperplane,
-    embedding_dim,
     query_vector,
     topk_cosine,
 )
@@ -61,13 +63,22 @@ N_PLANES = 12
 PROBE_HAMMING_INDEXED = 1
 
 
-def _code_col(dim: int, table_idx: int, n_planes: int, vec_col: str) -> Column:
-    """Packed sign code for one LSH table (the only place dot products
-    happen — at INDEX BUILD time, once per corpus pass). Uses the FOLD dot
-    on purpose: expanding n_tables*n_planes*dim element_at terms makes
-    Catalyst's optimizer go nonlinear (planning minutes, not seconds); the
-    fold plans instantly and the interpreted evaluation is paid once per
-    corpus, amortized over every query."""
+def _hyperplane(dim: int, plane_idx: int) -> list[float]:
+    """Deterministic pseudo-random unit-free hyperplane (fixed LCG — no RNG
+    state, reproducible across cluster sizes)."""
+    out = []
+    x = (plane_idx * 2654435761 + 1013904223) & 0xFFFFFFFF
+    for _ in range(dim):
+        x = (x * 1664525 + 1013904223) & 0xFFFFFFFF
+        out.append(((x >> 8) / float(1 << 24)) * 2.0 - 1.0)
+    return out
+
+
+def code_col(dim: int, table_idx: int, n_planes: int, vec_col: str) -> Column:
+    """Packed sign code of ``vec_col`` for one LSH table, as a Spark
+    column. Uses the FOLD dot on purpose: expanding n_tables*n_planes*dim
+    element_at terms makes Catalyst's optimizer go nonlinear (planning
+    minutes, not seconds); the fold plans instantly."""
     b: Column = F.lit(0).cast("long")
     for i in range(n_planes):
         plane = F.array(
@@ -80,6 +91,17 @@ def _code_col(dim: int, table_idx: int, n_planes: int, vec_col: str) -> Column:
     return b
 
 
+def hamming_masks(n_planes: int, h: int) -> list[int]:
+    """XOR masks of every flip set of at most ``h`` of ``n_planes`` bits:
+    0 (the exact code) first, then by flip count, each count in
+    ``combinations`` order (13 masks at 12 planes, h=1; 79 at h=2)."""
+    return [
+        sum(1 << b for b in bits)
+        for r in range(h + 1)
+        for bits in combinations(range(n_planes), r)
+    ]
+
+
 def lsh_index_frame_expr(
     df: DataFrame,
     dim: int,
@@ -88,25 +110,25 @@ def lsh_index_frame_expr(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Expression-only code path (the original spec): one interpreted fold
-    dot per plane, one ``lsh_code_{t}`` column per table. Kept as the
-    semantic reference — the vectorized codes behind
-    ``lsh_exploded_index_frame`` are asserted bit-identical to these in
-    tests/test_lsh_index.py."""
+    """Expression-only code path: one ``code_col`` per table, named
+    ``lsh_code_{t}``. Kept as the semantic reference — the vectorized
+    codes behind ``lsh_exploded_index_frame`` are asserted bit-identical
+    to these in tests/test_lsh_index.py."""
     return df.select(
         F.col(id_col),
         F.col(vec_col),
         *[
-            _code_col(dim, t, n_planes, vec_col).alias(f"lsh_code_{t}")
+            code_col(dim, t, n_planes, vec_col).alias(f"lsh_code_{t}")
             for t in range(n_tables)
         ],
     )
 
 
-def _codes_pandas_udf(dim: int, n_tables: int, n_planes: int):
+def _codes_pandas_udf(n_tables: int, n_planes: int):
     """Arrow-batched code computation: one numpy pass per batch instead of
     ``n_tables*n_planes`` interpreted fold evaluations per row (~5-10x
-    faster build at 100k x 64; identical bits).
+    faster build at 100k x 64; identical bits). ``dim`` is each batch's
+    vector width; the planes are generated once per width.
 
     Bit-identity argument: the fold computes, in IEEE double,
     ``acc_{i+1} = acc_i + (float64(e_i) * p_i)`` left-to-right from 0.0.
@@ -119,19 +141,23 @@ def _codes_pandas_udf(dim: int, n_tables: int, n_planes: int):
     from pyspark.sql.functions import pandas_udf
 
     total = n_tables * n_planes
-    planes = np.array(
-        [_hyperplane(dim, p) for p in range(total)], dtype=np.float64
-    )  # (total, dim)
+    planes_by_dim: dict[int, np.ndarray] = {}
 
     def codes(emb):
         X = np.vstack([np.asarray(v, dtype=np.float32) for v in emb]).astype(
             np.float64
         )  # float -> double cast, exact (same as Spark's cast)
+        dim = X.shape[1]
+        if dim not in planes_by_dim:
+            planes_by_dim[dim] = np.array(
+                [_hyperplane(dim, p) for p in range(total)], dtype=np.float64
+            )  # (total, dim)
+        planes = planes_by_dim[dim]
         acc = np.zeros((X.shape[0], total), dtype=np.float64)
         tmp = np.empty_like(acc)
         for i in range(dim):  # left-to-right accumulation, matches the fold
-            # r11: out= forms — identical IEEE multiply/add per element,
-            # no per-step temporaries; measured ~2x on the fold kernel
+            # out= forms: the same IEEE multiply/add per element without
+            # per-step temporaries (~2x on this loop)
             np.multiply(X[:, i : i + 1], planes[None, :, i], out=tmp)
             np.add(acc, tmp, out=acc)
         bits = acc >= 0.0
@@ -150,35 +176,14 @@ def _codes_pandas_udf(dim: int, n_tables: int, n_planes: int):
 def query_codes(
     query_vec: list[float], n_tables: int = N_TABLES, n_planes: int = N_PLANES
 ) -> list[int]:
-    """Driver-side code of the query vector for every table (pure Python
-    arithmetic on a query constant — no Spark job)."""
-    out = []
-    for t in range(n_tables):
-        code = 0
-        for i in range(n_planes):
-            hp = _hyperplane(len(query_vec), t * n_planes + i)
-            if sum(float(a) * float(p) for a, p in zip(query_vec, hp)) >= 0:
-                code |= 1 << i
-        out.append(code)
-    return out
+    """Driver-side code of the query vector for every table."""
+    return [c for c, _ in query_margins(query_vec, n_tables, n_planes)]
 
 
-def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content fingerprint of the source parquet (sizes + mtimes of every
-    data file): folded into the index cache key so a corpus regenerated
-    in place gets a REBUILT index instead of silently stale neighbors."""
-    target = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    parts: list[str] = []
-    if os.path.isdir(target):
-        for dirpath, _dn, filenames in os.walk(target):
-            for fn in sorted(filenames):
-                p = os.path.join(dirpath, fn)
-                st = os.stat(p)
-                parts.append(f"{os.path.relpath(p, target)}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(target):
-        st = os.stat(target)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
+def _dials(table) -> tuple[int, int]:
+    """``(n_tables, n_planes)`` the sharded index was built with."""
+    props = table.snapshot().properties
+    return int(props["graft.lsh.nTables"]), int(props["graft.lsh.nPlanes"])
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +217,6 @@ N_TABLES_SHARDED = 8
 
 def lsh_exploded_index_frame(
     df: DataFrame,
-    dim: int,
     n_tables: int = N_TABLES_SHARDED,
     n_planes: int = N_PLANES,
     id_col: str = "vec_id",
@@ -221,7 +225,7 @@ def lsh_exploded_index_frame(
     """One posting row per (vector, table): ``tc, id, vector`` where
     ``tc = table_id << n_planes | code``. Narrow (posexplode of the
     vectorized code array — no shuffle)."""
-    codes = _codes_pandas_udf(dim, n_tables, n_planes)
+    codes = _codes_pandas_udf(n_tables, n_planes)
     return (
         df.select(F.col(id_col), F.col(vec_col), codes(F.col(vec_col)).alias("_codes"))
         .select(
@@ -270,7 +274,6 @@ def _partition_tokens(spark: SparkSession, n_parts: int) -> list[int]:
 def _tc_shard_token_map(
     spark: SparkSession,
     df: DataFrame,
-    dim: int,
     n_tables: int,
     n_planes: int,
     n_shards: int,
@@ -293,7 +296,7 @@ def _tc_shard_token_map(
     fraction = min(1.0, max(0.01, 20000.0 / cnt))
     sample = df.sample(fraction=fraction, seed=20260818) if fraction < 1.0 else df
     hist = (
-        lsh_exploded_index_frame(sample, dim, n_tables, n_planes, id_col, vec_col)
+        lsh_exploded_index_frame(sample, n_tables, n_planes, id_col, vec_col)
         .groupBy("tc")
         .count()
         .collect()
@@ -327,7 +330,6 @@ def build_lsh_sharded_index(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    dim: int,
     n_tables: int = N_TABLES_SHARDED,
     n_planes: int = N_PLANES,
     n_shards: int = 64,
@@ -339,7 +341,8 @@ def build_lsh_sharded_index(
     (``graft.cluster.by`` — map-side, no extra shuffle), one commit-logged
     write. File count scales with corpus size (``n_shards`` per rewrite),
     probe IO stays O(probed buckets) — size shards so one shard ~= one
-    target-size parquet file."""
+    target-size parquet file. ``n_tables`` and ``n_planes`` are stored as
+    table properties, where every probe reads them."""
     from delta_lake_optimizations_spark.table import GraftTable
 
     # The contiguous tc ranges come from a SAMPLED histogram (codes UDF over
@@ -349,9 +352,9 @@ def build_lsh_sharded_index(
     # repartitionByRange gives the same layout, but its boundary sampling
     # evaluates the whole child plan (the UDF) a second time — it is only
     # the fallback when no histogram could be drawn.
-    frame = lsh_exploded_index_frame(df, dim, n_tables, n_planes, id_col, vec_col)
+    frame = lsh_exploded_index_frame(df, n_tables, n_planes, id_col, vec_col)
     mapping = _tc_shard_token_map(
-        spark, df, dim, n_tables, n_planes, n_shards, id_col, vec_col
+        spark, df, n_tables, n_planes, n_shards, id_col, vec_col
     )
     if mapping is None:
         frame = frame.repartitionByRange(n_shards, "tc")
@@ -403,20 +406,8 @@ def multiprobe_code_lists(
     """Per-table explicit probe-code lists: the query's code plus every
     code within Hamming distance ``probe_hamming`` (driver-side integer
     enumeration — 13 codes/table at h=1, 79 at h=2)."""
-    from itertools import combinations
-
-    qcodes = query_codes(query_vec, n_tables, n_planes)
-    out: list[list[int]] = []
-    for qc in qcodes:
-        probes = [qc]
-        for h in range(1, probe_hamming + 1):
-            for bits in combinations(range(n_planes), h):
-                flip = 0
-                for b in bits:
-                    flip |= 1 << b
-                probes.append(qc ^ flip)
-        out.append(probes)
-    return out
+    masks = hamming_masks(n_planes, probe_hamming)
+    return [[qc ^ m for m in masks] for qc in query_codes(query_vec, n_tables, n_planes)]
 
 
 def probe_buckets(
@@ -430,22 +421,19 @@ def probe_buckets(
     return sorted({(t << n_planes) | c for t, probes in enumerate(lists) for c in probes})
 
 
-def ann_topk_from_sharded(
+def _topk_from_buckets(
     table,
+    buckets: list[int],
     query_vec: list[float],
-    k: int = 10,
-    probe_hamming: int = PROBE_HAMMING_INDEXED,
-    n_tables: int = N_TABLES_SHARDED,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int,
+    n_tables: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """Top-k from the sharded index: ONE load whose ``tc IN (buckets)``
+    """The sharded probe tail: ONE load whose ``tc IN (buckets)``
     predicate rides min/max file skipping (only shards containing probed
-    buckets are read or decoded), dedupe candidates, exact cosine re-rank.
-    Candidate set is identical to the inline multi-probe at the same
-    (n_tables, n_planes, probe_hamming)."""
-    buckets = probe_buckets(query_vec, probe_hamming, n_tables, n_planes)
+    buckets are read or decoded), dedupe candidates, exact cosine
+    re-rank."""
     cand = table.load(skip_where=[("tc", "in", buckets)]).select(id_col, vec_col)
     # A vector can match in up to n_tables tables, so candidates carry
     # duplicates. Deduping BEFORE the re-rank would shuffle every
@@ -461,41 +449,52 @@ def ann_topk_from_sharded(
     )
 
 
+def ann_topk_from_sharded(
+    table,
+    query_vec: list[float],
+    k: int = 10,
+    probe_hamming: int = PROBE_HAMMING_INDEXED,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Top-k from the sharded index over the Hamming<=``probe_hamming``
+    ball of the query's codes. Candidate set is identical to the inline
+    multi-probe at the index's (n_tables, n_planes) and the same
+    ``probe_hamming``."""
+    n_tables, n_planes = _dials(table)
+    buckets = probe_buckets(query_vec, probe_hamming, n_tables, n_planes)
+    return _topk_from_buckets(table, buckets, query_vec, k, n_tables, id_col, vec_col)
+
+
 def sharded_probe_files_scanned(
     table,
     query_vec: list[float],
     probe_hamming: int = PROBE_HAMMING_INDEXED,
-    n_tables: int = N_TABLES_SHARDED,
-    n_planes: int = N_PLANES,
 ) -> int:
     """Index files the probe reads (driver-side metadata pruning count —
     the measured IO-pruning claim)."""
-    buckets = probe_buckets(query_vec, probe_hamming, n_tables, n_planes)
+    buckets = probe_buckets(query_vec, probe_hamming, *_dials(table))
     return table.files_scanned(skip_where=[("tc", "in", buckets)])
 
 
 def _cached_sharded_index(
     spark: SparkSession, sf_dir: str, n_tables: int = N_TABLES_SHARDED
 ):
-    """Build-once-per-corpus sharded index under the system temp dir, keyed
-    by corpus path + config + corpus CONTENT fingerprint (a regenerated
-    corpus changes the key and triggers a rebuild); later calls reuse the
-    committed table."""
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|sharded|{n_tables}x{N_PLANES}|"
-        f"{_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_lsh_sharded", key)
-    from delta_lake_optimizations_spark.table import GraftTable
-
-    t = GraftTable(spark, path)
-    if not t.exists():
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = embedding_dim(sf_dir)
-        t = build_lsh_sharded_index(
-            spark, emb, path, dim, n_tables=n_tables, n_shards=32
-        )
-    return t
+    """Build-once-per-corpus sharded index (see ``catalog.cached_table``);
+    ``n_tables`` is part of the cache key."""
+    return cached_table(
+        spark,
+        sf_dir,
+        f"sharded|{n_tables}x{N_PLANES}",
+        lambda path: build_lsh_sharded_index(
+            spark,
+            load_table(spark, sf_dir, "embeddings"),
+            path,
+            n_tables=n_tables,
+            n_shards=32,
+        ),
+        "spark_graft_lsh_sharded",
+    )
 
 
 @query("ann_lsh_topk_sharded", tags=("similarity", "approx", "index"))
@@ -610,23 +609,15 @@ def ann_topk_from_sharded_ranked(
     query_vec: list[float],
     k: int = 10,
     budget: int = RANKED_BUDGET,
-    n_tables: int = N_TABLES_SHARDED,
-    n_planes: int = N_PLANES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k from the sharded index with margin-ranked probes: identical
-    plan shape to ``ann_topk_from_sharded`` (one ``tc IN (buckets)`` load
-    riding file skipping, dedupe, exact re-rank) — only the bucket list is
+    """Top-k from the sharded index with margin-ranked probes: the same
+    probe tail as ``ann_topk_from_sharded`` — only the bucket list is
     chosen by margin rank instead of a blind Hamming ball."""
+    n_tables, n_planes = _dials(table)
     buckets = probe_buckets_ranked(query_vec, budget, n_tables, n_planes)
-    cand = table.load(skip_where=[("tc", "in", buckets)]).select(id_col, vec_col)
-    top = topk_cosine(cand, query_vec, k=k * n_tables, id_col=id_col, vec_col=vec_col)
-    return (
-        top.dropDuplicates([id_col])
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _topk_from_buckets(table, buckets, query_vec, k, n_tables, id_col, vec_col)
 
 
 @query("ann_lsh_topk_sharded_ranked", tags=("similarity", "approx", "index"))
@@ -659,15 +650,7 @@ def append_to_lsh_sharded_index(
     — the classic LSM-ish trade: cheap ingest, periodic re-cluster,
     correctness never depends on the maintenance having run (the probe's
     IN filter still applies row-level)."""
-    props = table.snapshot().properties
-    n_tables = int(props["graft.lsh.nTables"])
-    n_planes = int(props["graft.lsh.nPlanes"])
-    dim = None
-    for f in df.schema.fields:
-        if f.name == "embedding":
-            # dim must come from data; one driver-side peek of the increment
-            dim = len(df.select("embedding").first()[0])
-    frame = lsh_exploded_index_frame(df, dim, n_tables, n_planes)
+    frame = lsh_exploded_index_frame(df, *_dials(table))
     table.write(frame, mode="append", extra_parameters=extra_parameters)
 
 
@@ -679,10 +662,7 @@ def append_to_lsh_sharded_index(
 def knn_join_from_sharded(
     table,
     queries: DataFrame,
-    dim: int,
     k: int = 3,
-    n_tables: int = N_TABLES_SHARDED,
-    n_planes: int = N_PLANES,
     probe_hamming: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -705,27 +685,20 @@ def knn_join_from_sharded(
     exact cosine re-rank.
 
     Candidate pairs are IDENTICAL to the inline self-join
-    (``similarity.knn_join_lsh_multitable``) at the same
-    (n_tables, n_planes, probe_hamming): both admit (s, c) iff some
-    table's stored code for c equals a probed code of s — pinned by the
-    ``knn_join_sharded_matches_inline`` metric.
+    (``similarity.knn_join_lsh_multitable``) at the index's
+    (n_tables, n_planes) and the same probe_hamming: both admit (s, c) iff
+    some table's stored code for c equals a probed code of s — pinned by
+    the ``knn_join_sharded_matches_inline`` metric.
 
     Scale note: the query batch broadcasts twice (probe keys, then
     vectors) — right for retrieval batches up to ~1M queries; a
     corpus-scale self-join should use the shuffle-based inline form
     instead."""
-    from itertools import combinations
-
     from pyspark.sql import Window
 
-    codes = _codes_pandas_udf(dim, n_tables, n_planes)
-    masks = [0]
-    for r in range(1, probe_hamming + 1):
-        for combo in combinations(range(n_planes), r):
-            m = 0
-            for i in combo:
-                m |= 1 << i
-            masks.append(m)
+    n_tables, n_planes = _dials(table)
+    codes = _codes_pandas_udf(n_tables, n_planes)
+    masks = hamming_masks(n_planes, probe_hamming)
     probes = (
         queries.select(
             F.col(id_col).alias("src_id"), codes(F.col(vec_col)).alias("_codes")
@@ -740,10 +713,10 @@ def knn_join_from_sharded(
         )
     )
     tcs = sorted(r[0] for r in probes.select("tc").distinct().collect())
-    # r11 norm-once: candidate norm projects once per scanned row (below
-    # the probe join, reused across fanout); query norms materialize in
-    # the tiny broadcast relation. Per-pair work is the dot alone, and
-    # the fact shuffle stays the slim (src_id, nbr_id, cos_sim) triple.
+    # Norms project once: the candidate norm per scanned row (below the
+    # probe join, reused across fanout), query norms in the tiny broadcast
+    # relation. Per-pair work is the dot alone, and the fact shuffle stays
+    # the slim (src_id, nbr_id, cos_sim) triple.
     cand = table.load(skip_where=[("tc", "in", tcs)]).select(
         "tc",
         F.col(id_col).alias("nbr_id"),
@@ -761,13 +734,12 @@ def knn_join_from_sharded(
     # cosine computes MAP-SIDE (query vectors rejoin by broadcast before
     # any exchange), so the fact shuffle carries (src_id, nbr_id,
     # cos_sim) — ~24 bytes/row instead of the full float vector (~20x
-    # slimmer; the fat candidate shuffle was the batch probe's tail,
-    # VERDICT r09 #4). A pair surfaces once per agreeing table (<=
-    # n_tables duplicates) with an identical score, so max() is pure
-    # dedupe — and groupBy gives it a map-side partial combine, shrinking
-    # duplicates before they ever ship. The per-query top-k window then
-    # re-clusters the DEDUPED slim rows (second exchange, but of k-ish
-    # rows per query, not candidates).
+    # slimmer; a shuffle of candidate vectors dominated the batch probe).
+    # A pair surfaces once per agreeing table (<= n_tables duplicates)
+    # with an identical score, so max() is pure dedupe — and groupBy gives
+    # it a map-side partial combine, shrinking duplicates before they ever
+    # ship. The per-query top-k window then re-clusters the DEDUPED slim
+    # rows (second exchange, but of k-ish rows per query, not candidates).
     w = Window.partitionBy("src_id").orderBy(F.col("cos_sim").desc(), F.col("nbr_id"))
     return (
         pairs.join(F.broadcast(qvecs), F.col("src_id") == F.col("_sid2"))
@@ -792,11 +764,8 @@ def knn_join_from_sharded(
 def ann_topk_batch_from_sharded(
     table,
     queries: list[tuple[int, list[float]]],
-    dim: int,
     k: int = 10,
     probe_hamming: int = PROBE_HAMMING_INDEXED,
-    n_tables: int = N_TABLES_SHARDED,
-    n_planes: int = N_PLANES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -813,10 +782,7 @@ def ann_topk_batch_from_sharded(
     return knn_join_from_sharded(
         table,
         qdf,
-        dim,
         k=k,
-        n_tables=n_tables,
-        n_planes=n_planes,
         probe_hamming=probe_hamming,
         id_col=id_col,
         vec_col=vec_col,
@@ -832,5 +798,4 @@ def knn_join_sharded_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/metrics.py is the oracle-backed equality twin.)"""
     t = _cached_sharded_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = embedding_dim(sf_dir)
-    return knn_join_from_sharded(t, emb, dim, k=3)
+    return knn_join_from_sharded(t, emb, k=3)

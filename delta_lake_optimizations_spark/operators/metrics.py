@@ -70,6 +70,22 @@ def _recall_frame(
     )
 
 
+def mismatch_count(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """1-row frame {n_mismatch}: rows of ``on`` present on exactly one
+    side of a full outer join of ``left`` and ``right`` on all of ``on``
+    (0 when both sides are empty) — the equality-twin verdict."""
+    r = right.select(*[F.col(c).alias(f"_r_{c}") for c in on])
+    cond = F.col(on[0]) == F.col(f"_r_{on[0]}")
+    for c in on[1:]:
+        cond = cond & (F.col(c) == F.col(f"_r_{c}"))
+    one_side = F.col(on[0]).isNull() | F.col(f"_r_{on[0]}").isNull()
+    return left.select(*on).join(r, cond, "full").agg(
+        F.coalesce(F.sum(F.when(one_side, 1).otherwise(0)), F.lit(0))
+        .cast("long")
+        .alias("n_mismatch")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Sketch accuracy metrics (HLL, quantile sketch)
 # ---------------------------------------------------------------------------
@@ -554,27 +570,9 @@ def knn_join_sharded_matches_inline(spark: SparkSession, sf_dir: str) -> DataFra
     inline = knn_join_lsh_multitable(
         emb, dim, k=3, n_tables=N_TABLES_SHARDED, n_planes=N_PLANES, probe_hamming=1
     )
-    indexed = knn_join_from_sharded(
-        _cached_sharded_index(spark, sf_dir), emb, dim, k=3
-    ).select(
-        F.col("src_id").alias("_s2"),
-        F.col("nbr_id").alias("_n2"),
-        F.col("cos_sim").alias("_c2"),
-    )
-    both = inline.join(
-        indexed,
-        (F.col("src_id") == F.col("_s2"))
-        & (F.col("nbr_id") == F.col("_n2"))
-        & (F.col("cos_sim") == F.col("_c2")),
-        "full",
-    )
-    return both.agg(
-        F.lit(3).cast("long").alias("k"),
-        F.sum(
-            F.when(F.col("src_id").isNull() | F.col("_s2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch"),
+    indexed = knn_join_from_sharded(_cached_sharded_index(spark, sf_dir), emb, k=3)
+    return mismatch_count(inline, indexed, ["src_id", "nbr_id", "cos_sim"]).select(
+        F.lit(3).cast("long").alias("k"), "n_mismatch"
     )
 
 
@@ -600,9 +598,7 @@ def ann_lsh_ranked_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_frame(
         spark,
         sf_dir,
-        lambda emb, qv: ann_topk_from_sharded_ranked(
-            t, qv, k=10, budget=79, n_tables=N_TABLES
-        ),
+        lambda emb, qv: ann_topk_from_sharded_ranked(t, qv, k=10, budget=79),
         0.6,
     )
 
@@ -902,21 +898,9 @@ def ann_lsh_sharded_matches_inline(spark: SparkSession, sf_dir: str) -> DataFram
     inline = ann_topk_multiprobe(
         emb, qv, k=10, n_tables=N_TABLES_SHARDED, probe_hamming=PROBE_HAMMING_INDEXED
     ).select("vec_id", "cos_sim")
-    sharded = ann_topk_from_sharded(
-        _cached_sharded_index(spark, sf_dir), qv, k=10
-    ).select(F.col("vec_id").alias("_v2"), F.col("cos_sim").alias("_c2"))
-    both = inline.join(
-        sharded,
-        (F.col("vec_id") == F.col("_v2")) & (F.col("cos_sim") == F.col("_c2")),
-        "full",
-    )
-    return both.agg(
-        F.lit(10).cast("long").alias("k"),
-        F.sum(
-            F.when(F.col("vec_id").isNull() | F.col("_v2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch"),
+    sharded = ann_topk_from_sharded(_cached_sharded_index(spark, sf_dir), qv, k=10)
+    return mismatch_count(inline, sharded, ["vec_id", "cos_sim"]).select(
+        F.lit(10).cast("long").alias("k"), "n_mismatch"
     )
 
 
@@ -950,19 +934,9 @@ def ann_ivf_indexed_matches_inline(spark: SparkSession, sf_dir: str) -> DataFram
     )
     indexed = ann_topk_from_ivf_index(
         _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16), qv, k=10, nprobe=4
-    ).select(F.col("vec_id").alias("_v2"), F.col("cos_sim").alias("_c2"))
-    both = inline.join(
-        indexed,
-        (F.col("vec_id") == F.col("_v2")) & (F.col("cos_sim") == F.col("_c2")),
-        "full",
     )
-    return both.agg(
-        F.lit(10).cast("long").alias("k"),
-        F.sum(
-            F.when(F.col("vec_id").isNull() | F.col("_v2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch"),
+    return mismatch_count(inline, indexed, ["vec_id", "cos_sim"]).select(
+        F.lit(10).cast("long").alias("k"), "n_mismatch"
     )
 
 @query(
@@ -995,19 +969,9 @@ def ann_ivfpq_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = ann_topk_from_ivfpq_index(
         _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16),
         qv, k=10, nprobe=4, refine_factor=4,
-    ).select(F.col("vec_id").alias("_v2"), F.col("cos_sim").alias("_c2"))
-    both = inline.join(
-        indexed,
-        (F.col("vec_id") == F.col("_v2")) & (F.col("cos_sim") == F.col("_c2")),
-        "full",
     )
-    return both.agg(
-        F.lit(10).cast("long").alias("k"),
-        F.sum(
-            F.when(F.col("vec_id").isNull() | F.col("_v2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch"),
+    return mismatch_count(inline, indexed, ["vec_id", "cos_sim"]).select(
+        F.lit(10).cast("long").alias("k"), "n_mismatch"
     )
 
 
@@ -1062,25 +1026,9 @@ def knn_join_ivf_matches_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline = ivf_knn_join(emb, nlist=8, nprobe=3, k=3, seed=7)
     indexed = knn_join_from_ivf_index(
         _cached_ivfpq_index(spark, sf_dir, nlist=8, m=4, ksub=16), nprobe=3, k=3
-    ).select(
-        F.col("src_id").alias("_s2"),
-        F.col("nbr_id").alias("_n2"),
-        F.col("cos_sim").alias("_c2"),
     )
-    both = inline.join(
-        indexed,
-        (F.col("src_id") == F.col("_s2"))
-        & (F.col("nbr_id") == F.col("_n2"))
-        & (F.col("cos_sim") == F.col("_c2")),
-        "full",
-    )
-    return both.agg(
-        F.lit(3).cast("long").alias("k"),
-        F.sum(
-            F.when(F.col("src_id").isNull() | F.col("_s2").isNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_mismatch"),
+    return mismatch_count(inline, indexed, ["src_id", "nbr_id", "cos_sim"]).select(
+        F.lit(3).cast("long").alias("k"), "n_mismatch"
     )
 
 
@@ -1159,25 +1107,8 @@ def ann_batch_matches_singles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out = None
     for family, batch, single in pairs:
-        b = batch.select("qid", "vec_id", "cos_sim")
-        s = single.select(
-            F.col("qid").alias("_q2"),
-            F.col("vec_id").alias("_v2"),
-            F.col("cos_sim").alias("_c2"),
+        one = mismatch_count(batch, single, ["qid", "vec_id", "cos_sim"]).select(
+            F.lit(family).alias("family"), "n_mismatch"
         )
-        joined = b.join(
-            s,
-            (F.col("qid") == F.col("_q2"))
-            & (F.col("vec_id") == F.col("_v2"))
-            & (F.col("cos_sim") == F.col("_c2")),
-            "full",
-        ).agg(
-            F.lit(family).alias("family"),
-            F.sum(
-                F.when(F.col("qid").isNull() | F.col("_q2").isNull(), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_mismatch"),
-        )
-        out = joined if out is None else out.unionByName(joined)
+        out = one if out is None else out.unionByName(one)
     return out.orderBy("family")

@@ -4,8 +4,10 @@
   correctness baseline. One scan, no shuffle until the final top-k.
 - ``cosine_near_dup_pairs``: all pairs above a cosine threshold within a
   blocking key (embedding-based near-dup, X2's vector twin).
-- ``ann_lsh_topk``: random-hyperplane LSH bucketing — the approximate
-  scale path (candidates only from matching buckets).
+- ``ann_lsh_topk``, ``knn_join_lsh``, ``hard_negatives_lsh``: the inline
+  random-hyperplane LSH queries — the approximate scale path (candidates
+  only from matching buckets). Their codes and probe masks come from
+  ``operators/lsh_index.py``, the one owner of hyperplane LSH.
 
 Float-parity note: element products are computed in DOUBLE on both the
 Spark and DuckDB side, folded left-to-right, so oracle hashes match (see
@@ -14,14 +16,13 @@ Spark and DuckDB side, folded left-to-right, so oracle hashes match (see
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from delta_lake_optimizations_spark.catalog import load_table
 from delta_lake_optimizations_spark.queries.vectors import (
     cosine,
     cosine_with_norms,
-    dot,
     l2_norm_py,
     norm_col,
 )
@@ -41,7 +42,7 @@ def _guard_unblocked(df: DataFrame, op: str, limit: int = UNBLOCKED_ROW_LIMIT) -
         raise ValueError(
             f"{op} without block_col is an O(n^2) baseline, refused for "
             f">{limit} rows (got at least {n}). Pass block_col (label / "
-            "ann_lsh_buckets 'bucket' / ivf_build 'list_id') to bound the "
+            "an lsh_index.code_col code / ivf_build 'list_id') to bound the "
             "pair space."
         )
 
@@ -264,12 +265,12 @@ def cosine_near_dup_pairs(
 
     With a block column the pair space is bounded per block; without one
     this is a conscious cross join (only for small inputs — refused above
-    ``UNBLOCKED_ROW_LIMIT`` rows). For 100 TB use ``ann_lsh_buckets`` as
-    the blocker instead.
+    ``UNBLOCKED_ROW_LIMIT`` rows). For 100 TB block on an LSH code
+    (``lsh_index.code_col``) instead.
     """
     if block_col is None:
         _guard_unblocked(df, "cosine_near_dup_pairs")
-    # r11 norm-once: per-side norms projected before the join (see
+    # per-side norms projected before the join (see
     # queries/vectors.py::norm_col) — per-pair work is the dot alone.
     left = df.select(
         F.col(id_col).alias("_ida"),
@@ -344,44 +345,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _hyperplane(dim: int, plane_idx: int) -> list[float]:
-    """Deterministic pseudo-random unit-free hyperplane (fixed LCG — no RNG
-    state, reproducible across cluster sizes)."""
-    out = []
-    x = (plane_idx * 2654435761 + 1013904223) & 0xFFFFFFFF
-    for _ in range(dim):
-        x = (x * 1664525 + 1013904223) & 0xFFFFFFFF
-        out.append(((x >> 8) / float(1 << 24)) * 2.0 - 1.0)
-    return out
-
-
-def ann_lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Add a random-hyperplane LSH ``bucket`` column (sign pattern of
-    ``n_planes`` projections packed into a BIGINT).
-
-    Vectors with equal bucket are likely-similar; at scale, near-dup and
-    ANN both become equi-joins/groupBys on this column.
-    """
-    # NB: plane projections stay on the FOLD dot, not the expanded
-    # dot_lit — n_planes expansions are ~n_planes*dim*2 expression nodes
-    # and Catalyst's optimizer goes nonlinear on trees that size (measured:
-    # a 16x12-plane expanded select planned for minutes; the fold plans
-    # instantly and the pass is once-per-corpus, not per-query).
-    bucket: Column = F.lit(0).cast("long")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, i)])
-        bit = F.when(dot(F.col(vec_col), plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return df.withColumn("bucket", bucket)
-
-
 def ann_topk_multiprobe(
     df: DataFrame,
     query_vec: list[float],
@@ -407,25 +370,19 @@ def ann_topk_multiprobe(
     the uniform corpus, LSH's worst case) — scale-free in n, so the
     re-rank touches a constant fraction at any corpus size.
 
-    At scale the table codes are an INDEX: materialize them once as
-    columns (one narrow write) and each query is then a code-compare
-    filter + re-rank over the candidate fraction. Inline computation here
-    keeps the registered query self-contained.
+    At scale the table codes are an INDEX (``lsh_index.
+    build_lsh_sharded_index``): computed once, each query is then a
+    bucket-pruned load + re-rank over the candidate fraction. Inline
+    computation here keeps the registered query self-contained.
     """
-    dim = len(query_vec)
+    from delta_lake_optimizations_spark.operators.lsh_index import (
+        code_col,
+        query_codes,
+    )
+
     cond = None
-    for t in range(n_tables):
-        b: Column = F.lit(0).cast("long")
-        qcode = 0
-        for i in range(n_planes):
-            hp = _hyperplane(dim, t * n_planes + i)
-            plane = F.array(*[F.lit(v) for v in hp])
-            bit = F.when(dot(F.col(vec_col), plane) >= 0, F.lit(1).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            b = b.bitwiseOR(F.shiftleft(bit, i))
-            if sum(float(a) * float(p) for a, p in zip(query_vec, hp)) >= 0:
-                qcode |= 1 << i
+    for t, qcode in enumerate(query_codes(query_vec, n_tables, n_planes)):
+        b = code_col(len(query_vec), t, n_planes, vec_col)
         hit = F.bit_count(b.bitwiseXOR(F.lit(qcode))) <= probe_hamming
         cond = hit if cond is None else (cond | hit)
     return topk_cosine(df.filter(cond), query_vec, k=k, id_col=id_col, vec_col=vec_col)
@@ -436,9 +393,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 for vec_id=0 under the HONEST multi-probe config
     (16 tables x 12 planes, Hamming-2 probing — measured recall 0.7-1.0,
     mean 0.8, across probe queries on the uniform corpus, pinned in
-    tests/test_ann_and_components.py; round 2 registered a single-table
-    Hamming-2 dial that measured ~0.35 recall).
-    (Rows-only driver check; pytest pins recall vs brute force.)"""
+    tests/test_ann_and_components.py; a single table at Hamming-2
+    measured ~0.35). (Rows-only driver check; pytest pins recall vs
+    brute force.)"""
     embeddings = load_table(spark, sf_dir, "embeddings")
     qv = query_vector(spark, sf_dir, 0)
     return ann_topk_multiprobe(embeddings, qv, k=10)
@@ -516,7 +473,7 @@ def knn_join(
     Without ``block_col`` this is an explicit O(n^2) cross join: correct,
     only for oracle-scale inputs, and refused above
     ``UNBLOCKED_ROW_LIMIT`` rows. At 100 TB pass a blocking column
-    (e.g. the hyperplane-LSH ``bucket`` from :func:`ann_lsh_buckets`):
+    (e.g. a hyperplane-LSH code from ``lsh_index.code_col``):
     the pair space becomes an equi-join per bucket — shuffle on the
     bucket key, quadratic only within each (small) bucket — and the
     window top-k keeps k rows per src partition-locally before any
@@ -527,7 +484,7 @@ def knn_join(
     if block_col is None:
         _guard_unblocked(df, "knn_join")
 
-    # r11 norm-once: per-side norms projected before the join.
+    # per-side norms projected before the join: per-pair work is the dot
     left = df.select(
         F.col(id_col).alias("src_id"),
         F.col(vec_col).alias("_qv"),
@@ -634,22 +591,16 @@ def knn_join_lsh_multitable(
     probe_hamming=1 measures 0.965 recall at 8.5% of the pair space —
     pinned in tests/test_ann_and_components.py.
     """
-    import itertools
-
     from pyspark.sql import Window
 
-    bucket_exprs = []
-    for t in range(n_tables):
-        b: Column = F.lit(0).cast("long")
-        for i in range(n_planes):
-            plane = F.array(*[F.lit(v) for v in _hyperplane(dim, t * n_planes + i)])
-            bit = F.when(dot(F.col(vec_col), plane) >= 0, F.lit(1).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            b = b.bitwiseOR(F.shiftleft(bit, i))
-        bucket_exprs.append(b)
-    # r11 norm-once: the norm projects once per input row (the posexplode
-    # duplicates the computed value, not the fold).
+    from delta_lake_optimizations_spark.operators.lsh_index import (
+        code_col,
+        hamming_masks,
+    )
+
+    bucket_exprs = [code_col(dim, t, n_planes, vec_col) for t in range(n_tables)]
+    # the norm projects once per input row (the posexplode duplicates the
+    # computed value, not the fold)
     coded = df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -664,13 +615,7 @@ def knn_join_lsh_multitable(
         "bucket",
     )
     if probe_hamming > 0:
-        masks = [0]
-        for r in range(1, probe_hamming + 1):
-            for combo in itertools.combinations(range(n_planes), r):
-                m = 0
-                for i in combo:
-                    m |= 1 << i
-                masks.append(m)
+        masks = hamming_masks(n_planes, probe_hamming)
         left = (
             left.withColumn(
                 "_mask", F.explode(F.array(*[F.lit(m).cast("long") for m in masks]))
@@ -719,8 +664,8 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables x 9 planes, Hamming-1 probing — measured recall 0.725 touching
     30.8% of the pair space on the UNIFORM corpus (LSH's worst case;
     clustered encoder-geometry measures 0.965 at 8.5%, both pinned in
-    tests/test_ann_and_components.py). Round 2 registered 8x6/probe-0,
-    which measured ~0.35 recall. ``dim`` comes from the parquet footer
+    tests/test_ann_and_components.py; 8x6/probe-0 measured ~0.35
+    recall). ``dim`` comes from the parquet footer
     (driver-side metadata read) so the main plan is the first Spark job.
     (Rows-only driver check.)"""
     embeddings = load_table(spark, sf_dir, "embeddings")

@@ -194,13 +194,8 @@ class GraftStreamLshIndexWriter:
         if batch_df.isEmpty():
             return
         if not self.table.exists():
-            dim = len(batch_df.select("embedding").first()[0])
             build_lsh_sharded_index(
-                batch_df.sparkSession,
-                batch_df,
-                self.table.path,
-                dim,
-                n_shards=self.n_shards,
+                batch_df.sparkSession, batch_df, self.table.path, n_shards=self.n_shards
             )
             # stamp the creating batch id so a replay of batch 0 is a no-op
             self.table._write_commit(

@@ -5,13 +5,16 @@ plans/$SPARK_GRAFT_PLANS_ROUND/<name>_<tag>.txt (default r12).
 
 Usage: python scripts/capture_plans.py <tag> [name ...]
 
-With no names, captures every headline query. Plan capture is
-timing-insensitive, so it can run while other work contends for cores.
+With no names, captures every headline query. Expression ids (``#123``,
+``#123L``) are replaced by a bare ``#``: they count up per process, so
+without this two captures of the same plan never diff clean. Plan capture
+is timing-insensitive, so it can run while other work contends for cores.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -37,10 +40,14 @@ def main() -> None:
         names = [n for n, q in sorted(reg.items()) if q.headline]
     for name in names:
         df = reg[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
+        plan = re.sub(
+            r"#\d+L?",
+            "#",
+            df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
+            ),
         )
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:

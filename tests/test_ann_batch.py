@@ -103,18 +103,11 @@ def test_ivfpq_batch_matches_single(spark, tmp_path):
 
 
 def test_sharded_batch_matches_single(spark, tmp_path):
-    from delta_lake_optimizations_spark.operators.similarity import (
-        embedding_dim,
-    )
-
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
-    t = build_lsh_sharded_index(
-        spark, emb, str(tmp_path / "sidx"), dim, n_shards=8
-    )
+    t = build_lsh_sharded_index(spark, emb, str(tmp_path / "sidx"), n_shards=8)
     qs = _queries(emb)
     got = _per_query(
-        ann_topk_batch_from_sharded(t, qs, dim, k=10).collect(),
+        ann_topk_batch_from_sharded(t, qs, k=10).collect(),
         qid_col="src_id",
         id_col="nbr_id",
     )

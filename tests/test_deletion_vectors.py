@@ -171,11 +171,16 @@ def test_reorg_purge_materializes_dvs(spark, tmp_path):
 def test_fsck_repair_drops_missing_files(spark, tmp_path):
     import os as _os
 
+    import pyarrow.parquet as pq
+
     from delta_lake_optimizations_spark.table import GraftTable, fsck_repair
 
     t = GraftTable(spark, _os.path.join(tmp_path, "fsck"))
     t.write(spark.range(100).selectExpr("id AS k").repartition(4))
     victim = t.snapshot().files[0]
+    # how repartition(4) splits the rows follows the core count, so read
+    # the victim's row count from its own parquet footer
+    victim_rows = pq.ParquetFile(_os.path.join(t.path, victim.path)).metadata.num_rows
     _os.remove(_os.path.join(t.path, victim.path))
     rep = fsck_repair(t, dry_run=True)
     assert rep["missing_files"] == [victim.path]
@@ -183,4 +188,5 @@ def test_fsck_repair_drops_missing_files(spark, tmp_path):
     rep = fsck_repair(t)
     assert rep["missing_files"] == [victim.path] and "version" in rep
     assert len(t.snapshot().files) == 3
-    assert t.load().count() == 75
+    assert 0 < victim_rows < 100
+    assert t.load().count() == 100 - victim_rows

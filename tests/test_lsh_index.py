@@ -43,8 +43,7 @@ def test_query_codes_match_stored_codes(spark):
     posting codes for the same vector, table by table (else candidates
     are garbage)."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
-    frame = lsh_exploded_index_frame(emb, dim, n_tables=N_TABLES)
+    frame = lsh_exploded_index_frame(emb, n_tables=N_TABLES)
     rows = frame.filter(F.col("vec_id") == 5).collect()
     stored = _codes_by_table(rows)[5]
     qc = query_codes([float(x) for x in rows[0]["embedding"]])
@@ -56,8 +55,7 @@ def test_query_plan_has_no_dot_products(spark, tmp_path):
     ``tc IN (buckets)`` over stored postings — the plan must not contain
     the aggregate-based dot-product expression the inline path uses."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
-    t = build_lsh_sharded_index(spark, emb, os.path.join(tmp_path, "sidx"), dim)
+    t = build_lsh_sharded_index(spark, emb, os.path.join(tmp_path, "sidx"))
     qv = query_vector(spark, SF_DIR, 0)
     plan = (
         ann_topk_from_sharded(t, qv, k=10)
@@ -89,7 +87,7 @@ def test_vectorized_codes_bit_identical_to_expression_fold(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     dim = embedding_dim(SF_DIR)
     fast = _codes_by_table(
-        lsh_exploded_index_frame(emb, dim, n_tables=N_TABLES).collect()
+        lsh_exploded_index_frame(emb, n_tables=N_TABLES).collect()
     )
     ref = {r["vec_id"]: r for r in lsh_index_frame_expr(emb, dim).collect()}
     assert fast.keys() == ref.keys()
@@ -112,8 +110,7 @@ def test_sharded_index_equals_inline_h1(spark, tmp_path):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
-    t = build_lsh_sharded_index(spark, emb, os.path.join(tmp_path, "sidx"), dim)
+    t = build_lsh_sharded_index(spark, emb, os.path.join(tmp_path, "sidx"))
     for vid in (0, 7):
         qv = query_vector(spark, SF_DIR, vid)
         inline = [
@@ -141,9 +138,8 @@ def test_sharded_probe_prunes_files(spark, tmp_path):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
     t = build_lsh_sharded_index(
-        spark, emb, os.path.join(tmp_path, "sidx"), dim, n_shards=128
+        spark, emb, os.path.join(tmp_path, "sidx"), n_shards=128
     )
     total = len(t.snapshot().files)
     assert total >= 64, f"expected many shards, got {total}"
@@ -181,8 +177,7 @@ def test_sharded_index_append_then_optimize(spark, tmp_path):
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
     t = build_lsh_sharded_index(
-        spark, first, os.path.join(tmp_path, "sidx"), embedding_dim(SF_DIR),
-        n_shards=64,
+        spark, first, os.path.join(tmp_path, "sidx"), n_shards=64
     )
     append_to_lsh_sharded_index(t, second)
 
@@ -248,34 +243,45 @@ def test_ranked_probe_not_worse_than_blind_at_equal_budget(spark, tmp_path):
     top-10, averaged over probe vectors, as the blind ball — it spends
     the identical budget on better-chosen buckets (measured: beats or
     ties the ball on every probe vector at sf0.001/sf0.01). 16 tables,
-    the dial of the ``ann_lsh_ranked_recall`` metric."""
+    the dial of the ``ann_lsh_ranked_recall`` metric. Both probes are
+    called without dials: they must read the index's own 16 tables, so
+    the blind probe reads exactly the files of the 16-table Hamming<=2
+    buckets and returns the exact re-rank of their candidates."""
     from delta_lake_optimizations_spark.operators.lsh_index import (
         ann_topk_from_sharded_ranked,
+        probe_buckets,
+        sharded_probe_files_scanned,
     )
     from delta_lake_optimizations_spark.operators.similarity import topk_cosine
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
     t = build_lsh_sharded_index(
-        spark, emb, os.path.join(tmp_path, "sidx"), dim, n_tables=N_TABLES,
-        n_shards=32,
+        spark, emb, os.path.join(tmp_path, "sidx"), n_tables=N_TABLES, n_shards=32
     )
     ranked_mean, blind_mean = 0.0, 0.0
     for vid in (0, 1, 2):
         qv = query_vector(spark, SF_DIR, vid)
         exact = {r[0] for r in topk_cosine(emb, qv, k=10).collect()}
         ranked = {
-            r[0]
-            for r in ann_topk_from_sharded_ranked(
-                t, qv, k=10, budget=79, n_tables=N_TABLES
-            ).collect()
+            r[0] for r in ann_topk_from_sharded_ranked(t, qv, k=10, budget=79).collect()
         }
-        blind = {
-            r[0]
-            for r in ann_topk_from_sharded(
-                t, qv, k=10, probe_hamming=2, n_tables=N_TABLES
-            ).collect()
-        }
+        blind_rows = [
+            (r[0], r[1])
+            for r in ann_topk_from_sharded(t, qv, k=10, probe_hamming=2).collect()
+        ]
+        buckets = probe_buckets(qv, 2, N_TABLES, N_PLANES)
+        assert sharded_probe_files_scanned(t, qv, probe_hamming=2) == t.files_scanned(
+            skip_where=[("tc", "in", buckets)]
+        ), f"vec {vid}: probe did not read the index's own dials"
+        cand = (
+            t.load(skip_where=[("tc", "in", buckets)])
+            .select("vec_id", "embedding")
+            .dropDuplicates(["vec_id"])
+        )
+        assert blind_rows == [
+            (r[0], r[1]) for r in topk_cosine(cand, qv, k=10).collect()
+        ], f"vec {vid}: probe is not the re-rank of the 16-table buckets"
+        blind = {v for v, _ in blind_rows}
         ranked_mean += len(exact & ranked) / max(1, len(exact))
         blind_mean += len(exact & blind) / max(1, len(exact))
     assert ranked_mean >= blind_mean, (ranked_mean / 3, blind_mean / 3)
@@ -294,9 +300,8 @@ def test_sharded_ranked_probe_returns_topk_from_probed_buckets(spark, tmp_path):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
     t = build_lsh_sharded_index(
-        spark, emb, os.path.join(tmp_path, "sidx"), dim, n_shards=32
+        spark, emb, os.path.join(tmp_path, "sidx"), n_shards=32
     )
     qv = query_vector(spark, SF_DIR, 0)
     got = ann_topk_from_sharded_ranked(t, qv, k=10).collect()
@@ -315,9 +320,8 @@ def test_sharded_ranked_probe_returns_topk_from_probed_buckets(spark, tmp_path):
 def test_knn_join_from_sharded_plan_and_equality(spark, tmp_path):
     """Batch k-NN join from the index: equals the inline multi-table
     self-join at the same dial, index side broadcast-joined (never
-    sort-merge shuffled), and — the r10 slim-shuffle rework (VERDICT r09
-    #4) — the cosine computes MAP-SIDE so no exchange ever carries the
-    float vectors: one (src_id, nbr_id) exchange of ~24-byte scored rows
+    sort-merge shuffled), and the cosine computes MAP-SIDE so no exchange
+    ever carries the float vectors: one (src_id, nbr_id) exchange of ~24-byte scored rows
     fed by a PARTIAL max (map-side dedupe combine), then one src_id
     exchange of the already-deduped rows for the top-k window."""
     import re
@@ -333,13 +337,17 @@ def test_knn_join_from_sharded_plan_and_equality(spark, tmp_path):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    dim = embedding_dim(SF_DIR)
     t = build_lsh_sharded_index(
-        spark, emb, os.path.join(tmp_path, "sidx"), dim, n_shards=32
+        spark, emb, os.path.join(tmp_path, "sidx"), n_shards=32
     )
-    got = knn_join_from_sharded(t, emb, dim, k=3)
+    got = knn_join_from_sharded(t, emb, k=3)
     want = knn_join_lsh_multitable(
-        emb, dim, k=3, n_tables=N_TABLES_SHARDED, n_planes=N_PLANES, probe_hamming=1
+        emb,
+        embedding_dim(SF_DIR),
+        k=3,
+        n_tables=N_TABLES_SHARDED,
+        n_planes=N_PLANES,
+        probe_hamming=1,
     )
     g = sorted(map(tuple, got.collect()))
     w = sorted(map(tuple, want.collect()))
@@ -374,10 +382,10 @@ def test_knn_join_from_sharded_plan_and_equality(spark, tmp_path):
 
 
 def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
-    """r12 single-UDF-pass sharded build (VERDICT r11 #3): the histogram-
-    derived token mapping must reproduce repartitionByRange's defining
-    layout property — every file covers a CONTIGUOUS, NON-OVERLAPPING tc
-    range (that is what probe file-skipping rides) — stay balanced on a
+    """Single-UDF-pass sharded build: the histogram-derived token
+    mapping must reproduce repartitionByRange's defining layout property
+    — every file covers a CONTIGUOUS, NON-OVERLAPPING tc range (that is
+    what probe file-skipping rides) — stay balanced on a
     skewed bucket distribution (up to the unsplittable hot key), be
     deterministic across rebuilds, and plan as a HASH exchange (no
     rangepartitioning = no sampling pass re-evaluating the codes UDF)."""
@@ -388,7 +396,6 @@ def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    dim = embedding_dim(SF_DIR)
     # skew the bucket distribution: one vector replicated 300x -> one hot
     # tc per table on top of the organic spread
     hot = emb.limit(1).select(
@@ -412,7 +419,7 @@ def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
         return sorted(out)
 
     t1 = build_lsh_sharded_index(
-        spark, skewed, os.path.join(tmp_path, "s1"), dim, n_shards=16
+        spark, skewed, os.path.join(tmp_path, "s1"), n_shards=16
     )
     r1 = ranges_of(t1)
     assert len(r1) >= 8
@@ -428,7 +435,7 @@ def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
 
     # deterministic rebuild -> identical file ranges
     t2 = build_lsh_sharded_index(
-        spark, skewed, os.path.join(tmp_path, "s2"), dim, n_shards=16
+        spark, skewed, os.path.join(tmp_path, "s2"), n_shards=16
     )
     assert ranges_of(t2) == r1
 
@@ -441,10 +448,10 @@ def test_sharded_build_contiguous_balanced_deterministic(spark, tmp_path):
     # rangepartitioning (whose boundary sampling re-evaluated the Arrow
     # codes UDF over the full corpus) must be gone
     mapping = _tc_shard_token_map(
-        spark, skewed, dim, 8, N_PLANES, 16, "vec_id", "embedding"
+        spark, skewed, 8, N_PLANES, 16, "vec_id", "embedding"
     )
     token_by_tc, n_parts = mapping
-    frame = lsh_exploded_index_frame(skewed, dim, 8, N_PLANES).withColumn(
+    frame = lsh_exploded_index_frame(skewed, 8, N_PLANES).withColumn(
         "_shard_tok",
         F.element_at(
             F.lit(token_by_tc).cast("array<long>"), F.col("tc").cast("int") + 1
@@ -465,8 +472,7 @@ def test_sharded_build_falls_back_to_range_partitioning(spark, tmp_path, monkeyp
     monkeypatch.setattr(lsh_index, "_tc_shard_token_map", lambda *a, **k: None)
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     t = build_lsh_sharded_index(
-        spark, emb, os.path.join(tmp_path, "sidx"), embedding_dim(SF_DIR),
-        n_shards=16,
+        spark, emb, os.path.join(tmp_path, "sidx"), n_shards=16
     )
     ranges = sorted(
         (int(f.stats["minValues"]["tc"]), int(f.stats["maxValues"]["tc"]))
