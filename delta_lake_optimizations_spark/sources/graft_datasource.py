@@ -5,6 +5,7 @@ GraftTable as a first-class Spark connector::
     df = spark.read.format("graft").option("path", tbl).load()        # batch
     df = spark.read.format("graft").option("versionAsOf", 3).load(tbl)
     st = spark.readStream.format("graft").load(tbl)                   # stream
+    df.write.format("graft").mode("append").save(tbl)                 # write
 
 Why a connector and not just ``GraftTable.load``: the connector gives the
 table an *executor-side* scan path with file-granular input partitions —
@@ -16,6 +17,21 @@ each microbatch serves exactly the add-files of newly landed commits
 (offset = committed version), which is how Delta's own streaming source
 works (reference teaches the table-as-stream idea implicitly via its
 append/history lessons, docs/02-lab-optimizations.md "Table History").
+
+Column mapping is honoured on both sides, as in ``GraftTable``: files
+carry the PHYSICAL (creation-time) names of renamed columns. Every input
+partition carries the logical -> physical map to the executor, so batch,
+stream and change-feed reads return logical names; the writer writes
+renamed columns under their physical names.
+
+Writes commit through ``GraftTable._commit_write``, the one step that
+also commits ``GraftTable.write``: schema evolution, the overwrite's
+remove list (deletion-vector directories included), the metadata and the
+log append. A plain append commits no metadata, so a blind append that
+loses a commit race rebases onto the new head inside the log append, like
+every other blind append. Spark does not pass ``partitionBy`` to Python data sources,
+so the writer is unpartitioned only: an append into a partitioned table
+is refused on the driver, before any task writes a file.
 
 Scale notes (100 TB):
 - ``partitions()`` is O(#files in the delta of versions), driver-side
@@ -36,8 +52,8 @@ Streaming change-commit policy mirrors Delta's options:
 
 from __future__ import annotations
 
-import json
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -56,6 +72,20 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from delta_lake_optimizations_spark.table.graft_table import (
+    _CONSTRAINT_PREFIX,
+    STATS_COLS_PROP,
+    STATS_MAX_COLUMNS,
+    AddFile,
+    ConstraintViolationError,
+    GraftTable,
+    _colmap,
+    _refuse_if_append_only,
+    _signature_mismatch,
+    collect_file_stats,
+    dv_file_key,
+)
+
 
 @dataclass
 class GraftFilePartition(InputPartition):
@@ -66,6 +96,8 @@ class GraftFilePartition(InputPartition):
     partition_values: tuple[tuple[str, str], ...]  # hive col -> string value
     logical_path: str = ""  # AddFile.path — DV rows are keyed against it
     dv_abs_path: str | None = None  # deletion-vector parquet dir, if any
+    # logical -> physical name of every renamed column (column mapping)
+    colmap: tuple[tuple[str, str], ...] = ()
     # change-feed extensions (readChangeFeed=true): what kind of change
     # this partition emits, tagged with the commit that produced it.
     # mode "data" serves the file's rows; mode "dv_diff" serves ONLY the
@@ -76,12 +108,23 @@ class GraftFilePartition(InputPartition):
     prev_dv_abs_path: str | None = None
 
 
+def _file_partition(
+    root: str, f: AddFile, colmap: dict[str, str], **change
+) -> GraftFilePartition:
+    return GraftFilePartition(
+        abs_path=os.path.join(root, f.path),
+        partition_values=tuple(sorted(f.partition_values.items())),
+        logical_path=f.path,
+        dv_abs_path=os.path.join(root, f.dv_path) if f.dv_path else None,
+        colmap=tuple(sorted(colmap.items())),
+        **change,
+    )
+
+
 def _snapshot(path: str, version: int | None = None, timestamp: str | None = None):
     """Driver-side log replay without a SparkSession: GraftTable's log
     primitives are pure-Python file IO (graft_table.py:_replay), so a
     metadata-only handle with spark=None is safe."""
-    from delta_lake_optimizations_spark.table.graft_table import GraftTable
-
     tbl = GraftTable(None, path)  # type: ignore[arg-type]
     return tbl, tbl.snapshot(version=version, timestamp=timestamp)
 
@@ -103,76 +146,91 @@ def _parse_partition_value(raw: str, dtype: T.DataType):
     return raw
 
 
-def _suffix2(p: str) -> str:
-    parts = p.rstrip(os.sep).split(os.sep)
-    return os.sep.join(parts[-2:])
-
-
-def _dv_mask(dv_abs_path: str, logical_path: str, n: int) -> "pa.Array | None":
-    """Boolean keep-mask for one file of ``n`` rows from its deletion
-    vector (``_dv_positions``), or None when no deleted position falls
-    inside the file."""
-    dead = [idx for idx in _dv_positions(dv_abs_path, logical_path) if 0 <= idx < n]
-    if not dead:
-        return None
-    keep = [True] * n
-    for idx in dead:
-        keep[idx] = False
-    return pa.array(keep)
+def _dv_positions(dv_abs_path: str | None, logical_path: str) -> set[int]:
+    if dv_abs_path is None:
+        return set()
+    dv = pq.read_table(dv_abs_path, columns=["file_path", "row_index"])
+    want = dv_file_key(logical_path)
+    return {
+        idx
+        for fp, idx in zip(
+            dv.column("file_path").to_pylist(), dv.column("row_index").to_pylist()
+        )
+        if dv_file_key(fp) == want
+    }
 
 
 def _read_file_as_batches(
-    abs_path: str,
-    partition_values: dict[str, str],
+    p: GraftFilePartition,
     schema: T.StructType,
-    batch_rows: int = 65536,
-    logical_path: str = "",
-    dv_abs_path: str | None = None,
     take_positions: list[int] | None = None,
+    batch_rows: int = 65536,
 ) -> Iterator[pa.RecordBatch]:
     """Executor-side scan of one parquet file, emitted as Arrow batches
-    matching the table schema exactly (order, names, types). Partition
+    matching the table schema exactly (order, logical names, types).
+    Renamed columns are read under their physical names. Partition
     columns absent from the file are materialized as constants from the
-    hive directory values. Column pruning: only the schema's non-partition
-    fields are read from disk."""
+    hive directory values. Column pruning: only the schema's
+    non-partition fields are read from disk. Without ``take_positions``
+    the file's deletion vector, if any, filters its rows."""
     arrow_schema = to_arrow_schema(schema)
-    present = set(pq.read_schema(abs_path).names)
+    pvals = dict(p.partition_values)
+    cmap = dict(p.colmap)
+    names = [cmap.get(f.name, f.name) for f in schema.fields]
+    present = set(pq.read_schema(p.abs_path).names)
     # Only columns that exist in THIS file are read; columns added later
     # by merge_schema evolution null-fill (Delta read-side evolution).
-    file_cols = [
-        f.name for f in schema.fields if f.name not in partition_values and f.name in present
-    ]
-    table = pq.read_table(abs_path, columns=file_cols)
+    table = pq.read_table(
+        p.abs_path, columns=[n for n in names if n not in pvals and n in present]
+    )
     if take_positions is not None:
         table = table.take(pa.array(take_positions, type=pa.int64()))
-    elif dv_abs_path is not None:
-        mask = _dv_mask(dv_abs_path, logical_path, table.num_rows)
-        if mask is not None:
-            table = table.filter(mask)
+    elif p.dv_abs_path is not None:
+        dead = [
+            i
+            for i in _dv_positions(p.dv_abs_path, p.logical_path)
+            if 0 <= i < table.num_rows
+        ]
+        if dead:
+            keep = [True] * table.num_rows
+            for i in dead:
+                keep[i] = False
+            table = table.filter(pa.array(keep))
     n = table.num_rows
     cols = []
-    for field, arrow_field in zip(schema.fields, arrow_schema):
-        if field.name in partition_values:
-            val = _parse_partition_value(partition_values[field.name], field.dataType)
+    for name, field, arrow_field in zip(names, schema.fields, arrow_schema):
+        if name in pvals:
+            val = _parse_partition_value(pvals[name], field.dataType)
             cols.append(pa.array([val] * n, type=arrow_field.type))
-        elif field.name not in present:
+        elif name not in present:
             cols.append(pa.nulls(n, type=arrow_field.type))
         else:
-            col = table.column(field.name)
+            col = table.column(name)
             if col.type != arrow_field.type:
                 col = col.cast(arrow_field.type)
-            cols.append(col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col)
-    out = pa.Table.from_arrays(
-        [c if isinstance(c, (pa.Array, pa.ChunkedArray)) else c for c in cols],
-        schema=arrow_schema,
-    )
-    for batch in out.to_batches(max_chunksize=batch_rows):
-        yield batch
+            cols.append(col.combine_chunks())
+    out = pa.Table.from_arrays(cols, schema=arrow_schema)
+    yield from out.to_batches(max_chunksize=batch_rows)
+
+
+def _read_partition(
+    p: GraftFilePartition, schema: T.StructType, cdf: bool
+) -> Iterator[pa.RecordBatch]:
+    """Executor side of every read (batch, stream, change feed): the
+    partition's rows, plus the change-feed columns when ``cdf``."""
+    take = None
+    if p.mode == "dv_diff":
+        # the rows THIS commit tombstoned: new DV minus previous DV
+        new_pos = _dv_positions(p.dv_abs_path, p.logical_path)
+        take = sorted(new_pos - _dv_positions(p.prev_dv_abs_path, p.logical_path))
+        if not take:
+            return
+    for batch in _read_file_as_batches(p, schema, take):
+        yield _append_cdf_columns(batch, p.change_type, p.commit_version) if cdf else batch
 
 
 class GraftBatchReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options: dict):
-        self._schema = schema
         self._options = options
         self._cdf = _bool_opt(options, "readchangefeed")
         self._data_schema = (
@@ -184,15 +242,12 @@ class GraftBatchReader(DataSourceReader):
         if self._cdf:
             # batch change-feed read (Delta's CDF batch form): all changes
             # in startingVersion..endingVersion (default: latest)
-            start = int(self._options.get("startingversion", 0))
-            ending = self._options.get("endingversion")
-            if ending is None:
-                tbl, _ = _snapshot(path)
-                ending = tbl.latest_version()
+            _, snap = _snapshot(path)
             return _commit_range_partitions(
                 path,
-                start,
-                int(ending),
+                int(self._options.get("startingversion", 0)),
+                int(self._options.get("endingversion", snap.version)),
+                _colmap(snap.properties),
                 cdf=True,
                 skip_change=_bool_opt(self._options, "skipchangecommits"),
                 ignore_changes=False,
@@ -204,59 +259,11 @@ class GraftBatchReader(DataSourceReader):
             version=int(version) if version is not None else None,
             timestamp=timestamp,
         )
-        return [
-            GraftFilePartition(
-                abs_path=os.path.join(path, f.path),
-                partition_values=tuple(sorted(f.partition_values.items())),
-                logical_path=f.path,
-                dv_abs_path=os.path.join(path, f.dv_path) if f.dv_path else None,
-            )
-            for f in snap.files
-        ]
+        cmap = _colmap(snap.properties)
+        return [_file_partition(path, f, cmap) for f in snap.files]
 
     def read(self, partition: GraftFilePartition) -> Iterator[pa.RecordBatch]:
-        if partition.mode == "dv_diff":
-            new_pos = _dv_positions(partition.dv_abs_path, partition.logical_path)
-            old_pos = _dv_positions(partition.prev_dv_abs_path, partition.logical_path)
-            fresh = sorted(new_pos - old_pos)
-            if not fresh:
-                return
-            for batch in _read_file_as_batches(
-                partition.abs_path,
-                dict(partition.partition_values),
-                self._data_schema,
-                take_positions=fresh,
-            ):
-                yield _append_cdf_columns(batch, "delete", partition.commit_version)
-            return
-        batches = _read_file_as_batches(
-            partition.abs_path,
-            dict(partition.partition_values),
-            self._data_schema,
-            logical_path=partition.logical_path,
-            dv_abs_path=partition.dv_abs_path,
-        )
-        if not self._cdf:
-            yield from batches
-            return
-        for batch in batches:
-            yield _append_cdf_columns(
-                batch, partition.change_type, partition.commit_version
-            )
-
-
-def _dv_positions(dv_abs_path: str | None, logical_path: str) -> set[int]:
-    if dv_abs_path is None:
-        return set()
-    dv = pq.read_table(dv_abs_path, columns=["file_path", "row_index"])
-    want = _suffix2(logical_path)
-    return {
-        idx
-        for fp, idx in zip(
-            dv.column("file_path").to_pylist(), dv.column("row_index").to_pylist()
-        )
-        if _suffix2(fp) == want
-    }
+        return _read_partition(partition, self._data_schema, self._cdf)
 
 
 _CDF_FIELDS = (
@@ -281,6 +288,7 @@ def _commit_range_partitions(
     path: str,
     first_v: int,
     last_v: int,
+    colmap: dict[str, str],
     cdf: bool,
     skip_change: bool,
     ignore_changes: bool,
@@ -288,8 +296,6 @@ def _commit_range_partitions(
     """Input splits for the commits ``first_v..last_v`` (both inclusive):
     the shared engine behind streaming offsets AND batch change-feed
     reads. See :class:`GraftStreamReader` for the change-commit policy."""
-    from delta_lake_optimizations_spark.table.graft_table import GraftTable
-
     tbl = GraftTable(None, path)  # type: ignore[arg-type]
     out: list[InputPartition] = []
     for v in range(first_v, last_v + 1):
@@ -308,11 +314,10 @@ def _commit_range_partitions(
             )
             if dv_only:
                 out.extend(
-                    GraftFilePartition(
-                        abs_path=os.path.join(path, f.path),
-                        partition_values=tuple(sorted(f.partition_values.items())),
-                        logical_path=f.path,
-                        dv_abs_path=os.path.join(path, f.dv_path),
+                    _file_partition(
+                        path,
+                        f,
+                        colmap,
                         change_type="delete",
                         commit_version=v,
                         mode="dv_diff",
@@ -347,16 +352,7 @@ def _commit_range_partitions(
                     "added files (may duplicate rewritten rows)"
                 )
         out.extend(
-            GraftFilePartition(
-                abs_path=os.path.join(path, f.path),
-                partition_values=tuple(sorted(f.partition_values.items())),
-                logical_path=f.path,
-                dv_abs_path=(
-                    os.path.join(path, f.dv_path) if f.dv_path else None
-                ),
-                commit_version=v,
-            )
-            for f in commit.add
+            _file_partition(path, f, colmap, commit_version=v) for f in commit.add
         )
     return out
 
@@ -375,7 +371,6 @@ class GraftStreamReader(DataSourceStreamReader):
     carries ``_change_type`` and ``_commit_version``."""
 
     def __init__(self, schema: T.StructType, options: dict):
-        self._schema = schema
         self._options = options
         self._path = _required_path(options)
         self._skip_change = _bool_opt(options, "skipchangecommits")
@@ -385,6 +380,8 @@ class GraftStreamReader(DataSourceStreamReader):
         self._data_schema = (
             T.StructType(schema.fields[:-2]) if self._cdf else schema
         )
+        # the column mapping of the snapshot the stream's schema came from
+        self._colmap = _colmap(_snapshot(self._path)[1].properties)
 
     def initialOffset(self) -> dict:
         starting = self._options.get("startingversion")
@@ -399,45 +396,18 @@ class GraftStreamReader(DataSourceStreamReader):
         return {"version": tbl.latest_version()}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        from delta_lake_optimizations_spark.table.graft_table import GraftTable
-
         return _commit_range_partitions(
             self._path,
             int(start["version"]) + 1,
             int(end["version"]),
+            self._colmap,
             cdf=self._cdf,
             skip_change=self._skip_change,
             ignore_changes=self._ignore_changes,
         )
 
     def read(self, partition: GraftFilePartition) -> Iterator[pa.RecordBatch]:
-        if partition.mode == "dv_diff":
-            # the rows THIS commit tombstoned: new DV minus previous DV
-            new_pos = _dv_positions(partition.dv_abs_path, partition.logical_path)
-            old_pos = _dv_positions(partition.prev_dv_abs_path, partition.logical_path)
-            fresh = sorted(new_pos - old_pos)
-            if not fresh:
-                return
-            for batch in _read_file_as_batches(
-                partition.abs_path,
-                dict(partition.partition_values),
-                self._data_schema,
-                take_positions=fresh,
-            ):
-                yield _append_cdf_columns(batch, "delete", partition.commit_version)
-            return
-        batches = _read_file_as_batches(
-            partition.abs_path,
-            dict(partition.partition_values),
-            self._data_schema,
-            logical_path=partition.logical_path,
-            dv_abs_path=partition.dv_abs_path,
-        )
-        if not self._cdf:
-            yield from batches
-            return
-        for batch in batches:
-            yield _append_cdf_columns(batch, partition.change_type, partition.commit_version)
+        return _read_partition(partition, self._data_schema, self._cdf)
 
     def commit(self, end: dict) -> None:  # offsets live in the query checkpoint
         pass
@@ -453,40 +423,75 @@ class GraftWriteMessage(WriterCommitMessage):
     stats: dict | None = None
 
 
+def _sql_ident(name: str) -> str:
+    return '"' + name.replace('"', '""') + '"'
+
+
 class GraftBatchWriter(DataSourceArrowWriter):
     """Distributed write path for ``df.write.format("graft")``.
 
-    Executors stream their partition's Arrow batches straight into one
-    parquet file each under a fresh commit directory — no driver
-    collect, no shuffle — and ship back only footer metadata
-    (path/size/numRecords/min-max stats). The driver then appends ONE
-    commit to the log, going through GraftTable._write_commit so
-    optimistic concurrency (link(2) single-winner), checkpointing, and
-    Delta-style property preservation all apply. Appends that lose a
-    commit race are rebased and retried: an append removes nothing, so
-    replaying the same add-list on the new base is conflict-free.
+    On the driver, the writer reads the table's snapshot once and refuses,
+    before any task writes a file: an overwrite of a
+    ``delta.appendOnly=true`` table, an append into a partitioned table
+    (Spark does not forward partitionBy to Python data sources — use
+    GraftTable.write for hive-partitioned layouts), and an append whose
+    column names and types differ from the table's without
+    ``mergeSchema``.
 
-    Unpartitioned only (Spark does not forward partitionBy to Python
-    data sources) — use GraftTable.write for hive-partitioned layouts.
+    Executors stream their partition's Arrow batches straight into one
+    parquet file each under a fresh data directory — renamed columns
+    under their physical names, no driver collect, no shuffle — and ship
+    back only footer metadata (path/size/numRecords/min-max stats, capped
+    by ``graft.dataSkippingNumIndexedCols``).
+
+    ``commit`` checks the table's CHECK constraints over the new files
+    with DuckDB (the commit hook has no SparkSession; CHECK expressions
+    are ANSI, and one DuckDB cannot evaluate fails the write), then makes
+    ONE call to ``GraftTable._commit_write`` against the snapshot read on
+    the driver — the step ``GraftTable.write`` commits through. A plain
+    append commits no metadata and rebases past concurrent commits that
+    changed none; any other write that loses a commit race fails, and
+    Spark's abort removes its files.
     """
 
     def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
         self._schema = schema
-        self._options = options
         self._overwrite = overwrite
+        self._merge = _bool_opt(options, "mergeschema")
         self._path = _required_path(options)
-        # one shared commit dir, minted driver-side so all tasks agree
-        import uuid
-
+        tbl = GraftTable(None, self._path)  # type: ignore[arg-type]
+        base = tbl.snapshot() if tbl.exists() else None
+        self._base_version = base.version if base is not None else None
+        props = base.properties if base is not None else {}
+        if base is not None and overwrite:
+            _refuse_if_append_only(props, "overwrite")
+        elif base is not None:
+            if base.partition_columns:
+                raise ValueError(
+                    "graft source appends are unpartitioned only (Spark does "
+                    "not pass partitionBy to Python data sources); table is "
+                    f"partitioned by {base.partition_columns} — use "
+                    "GraftTable.write"
+                )
+            if not self._merge and base.schema is not None:
+                mismatch = _signature_mismatch(base.schema, schema)
+                if mismatch:
+                    raise ValueError(
+                        "schema mismatch on graft append (set "
+                        ".option('mergeSchema','true') to add columns): " + mismatch
+                    )
+        cmap = _colmap(props)
+        self._colmap = {f.name: cmap[f.name] for f in schema.fields if f.name in cmap}
+        self._constraints = {
+            k[len(_CONSTRAINT_PREFIX):]: v
+            for k, v in props.items()
+            if k.startswith(_CONSTRAINT_PREFIX)
+        }
+        self._stats_cols = int(props.get(STATS_COLS_PROP, STATS_MAX_COLUMNS))
+        # one shared data dir, minted driver-side so all tasks agree
         self._rel_dir = os.path.join("data", f"dsw-{uuid.uuid4().hex[:12]}")
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> GraftWriteMessage:
-        import uuid
-
-        from delta_lake_optimizations_spark.table.graft_table import (
-            collect_file_stats,
-        )
-
         out_dir = os.path.join(self._path, self._rel_dir)
         os.makedirs(out_dir, exist_ok=True)
         rel_file = os.path.join(self._rel_dir, f"part-{uuid.uuid4().hex}.parquet")
@@ -496,6 +501,10 @@ class GraftBatchWriter(DataSourceArrowWriter):
             for batch in iterator:
                 if batch.num_rows == 0:
                     continue
+                if self._colmap:
+                    batch = batch.rename_columns(
+                        [self._colmap.get(n, n) for n in batch.schema.names]
+                    )
                 if writer is None:
                     writer = pq.ParquetWriter(abs_file, batch.schema)
                 writer.write_batch(batch)
@@ -504,7 +513,7 @@ class GraftBatchWriter(DataSourceArrowWriter):
                 writer.close()
         if writer is None:
             return GraftWriteMessage(rel_path=None)
-        n, stats = collect_file_stats(abs_file)
+        n, stats = collect_file_stats(abs_file, self._stats_cols)
         return GraftWriteMessage(
             rel_path=rel_file,
             size=os.path.getsize(abs_file),
@@ -513,21 +522,6 @@ class GraftBatchWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages) -> None:
-        import json
-
-        from delta_lake_optimizations_spark.table.graft_table import (
-            AddFile,
-            ConcurrentCommitError,
-            GraftTable,
-            _merge_schemas,
-        )
-
-        from delta_lake_optimizations_spark.table.graft_table import (
-            _CONSTRAINT_PREFIX,
-            ConstraintViolationError,
-        )
-
-        tbl = GraftTable(None, self._path)  # type: ignore[arg-type]
         adds = [
             AddFile(
                 path=m.rel_path,
@@ -538,90 +532,48 @@ class GraftBatchWriter(DataSourceArrowWriter):
             for m in messages
             if m is not None and m.rel_path is not None
         ]
-        # CHECK-constraint enforcement (schema-on-write): validate the
-        # just-written files — footer metadata came back, the rows stayed
-        # on disk — BEFORE anything lands in the log. This commit hook
-        # runs in a plain Python worker (no SparkSession), so constraint
-        # expressions are evaluated with DuckDB over the new files; CHECK
-        # expressions are ANSI by design, and an expression DuckDB cannot
-        # parse fails the write (enforcement never silently degrades).
-        if tbl.exists() and adds:
-            constraints = {
-                k: v
-                for k, v in tbl.snapshot().properties.items()
-                if k.startswith(_CONSTRAINT_PREFIX)
-            }
-            if constraints:
-                import duckdb
+        if self._constraints and adds:
+            self._check_constraints(adds)
+        tbl = GraftTable(None, self._path)  # type: ignore[arg-type]
+        base = (
+            tbl.snapshot(version=self._base_version)
+            if self._base_version is not None
+            else None
+        )
+        tbl._commit_write(
+            base,
+            adds,
+            self._schema,
+            "overwrite" if self._overwrite else "append",
+            merge_schema=self._merge,
+        )
 
-                files = [os.path.join(self._path, a.path) for a in adds]
-                for key, expr_text in constraints.items():
-                    name = key[len(_CONSTRAINT_PREFIX):]
-                    try:
-                        bad = duckdb.sql(
-                            f"SELECT count(*) FROM read_parquet({files!r}) "
-                            f"WHERE NOT ({expr_text})"
-                        ).fetchone()[0]
-                    except Exception as exc:
-                        self.abort(messages)
-                        raise ConstraintViolationError(
-                            f"cannot evaluate CHECK constraint {name!r} "
-                            f"({expr_text}) on the graft write path: {exc}"
-                        ) from exc
-                    if bad:
-                        self.abort(messages)
-                        raise ConstraintViolationError(
-                            f"{bad} row(s) violate CHECK constraint "
-                            f"{name!r}: {expr_text}"
-                        )
+    def _check_constraints(self, adds: list[AddFile]) -> None:
+        """CHECK-constraint enforcement (schema-on-write) over the
+        just-written files — footer metadata came back, the rows stayed on
+        disk — BEFORE anything lands in the log."""
+        import duckdb
 
-        merge = _bool_opt(self._options, "mergeschema")
-        for attempt in range(5):
-            existed = tbl.exists()
-            base = tbl.snapshot() if existed else None
-            schema = self._schema
-            if base is not None and base.schema is not None:
-                if merge:
-                    schema = _merge_schemas(base.schema, self._schema)
-                elif not self._overwrite:
-                    base_sig = [(f.name, f.dataType) for f in base.schema.fields]
-                    new_sig = [(f.name, f.dataType) for f in self._schema.fields]
-                    if base_sig != new_sig:
-                        raise ValueError(
-                            "schema mismatch on graft append (set "
-                            ".option('mergeSchema','true') to add columns): "
-                            f"{[(n, t.simpleString()) for n, t in base_sig]} vs "
-                            f"{[(n, t.simpleString()) for n, t in new_sig]}"
-                        )
-            if self._overwrite and base is not None:
-                remove = [f.path for f in base.files]
-                operation, params = "WRITE", {"mode": "Overwrite"}
-            elif base is not None:
-                remove = []
-                operation, params = "WRITE", {"mode": "Append"}
-            else:
-                remove = []
-                operation, params = "CREATE TABLE AS SELECT", {"mode": "ErrorIfExists"}
-            metadata = {
-                "schemaJson": json.dumps(schema.jsonValue()),
-                "partitionColumns": [],
-                "properties": dict(base.properties) if base is not None else {},
-            }
+        files = [os.path.join(self._path, a.path) for a in adds]
+        cols = ", ".join(
+            f"{_sql_ident(self._colmap.get(f.name, f.name))} AS {_sql_ident(f.name)}"
+            for f in self._schema.fields
+        )
+        rows = f"(SELECT {cols} FROM read_parquet({files!r}))"
+        for name, expr_text in self._constraints.items():
             try:
-                tbl._write_commit(
-                    operation,
-                    params,
-                    adds,
-                    remove,
-                    metadata,
-                    base_version=base.version if base is not None else -1,
+                bad = duckdb.sql(
+                    f"SELECT count(*) FROM {rows} WHERE NOT ({expr_text})"
+                ).fetchone()[0]
+            except Exception as exc:
+                raise ConstraintViolationError(
+                    f"cannot evaluate CHECK constraint {name!r} "
+                    f"({expr_text}) on the graft write path: {exc}"
+                ) from exc
+            if bad:
+                raise ConstraintViolationError(
+                    f"{bad} row(s) violate CHECK constraint {name!r}: {expr_text}"
                 )
-                return
-            except ConcurrentCommitError:
-                if self._overwrite or attempt == 4:
-                    raise
-                # append rebase: nothing removed, so re-reading the new
-                # base and re-attempting the same add-list is conflict-free
 
     def abort(self, messages) -> None:
         import shutil

@@ -86,12 +86,10 @@ _GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 def _fold_sessions(
     ts_list: list[int], val_list: list[float], st: tuple | None
 ) -> tuple[list[tuple], tuple]:
-    """The sessionizer core, shared verbatim by BOTH stateful-API
-    implementations (v1 ``applyInPandasWithState`` and v2
-    ``transformWithStateInPandas``) so their semantics are identical by
-    construction: fold time-ordered events into (start, last, n, total)
-    runs split on >30 min gaps; returns (finished sessions, open
-    state)."""
+    """The sessionizer core, kept free of any stateful API so it is
+    testable without a stream: fold time-ordered events into (start,
+    last, n, total) runs split on >30 min gaps; returns (finished
+    sessions, open state)."""
     start_us, last_us, n, total = st if st is not None else (None, None, 0, 0.0)
     order = sorted(range(len(ts_list)), key=ts_list.__getitem__)
     finished: list[tuple] = []
@@ -189,61 +187,6 @@ def sessionize_stream(events: DataFrame, idle_timeout: bool = False) -> DataFram
             outputMode="append",
             timeoutConf=conf,
         )
-    )
-
-
-def sessionize_stream_v2(events: DataFrame) -> DataFrame:
-    """The SAME sessionizer on Spark 4's state API v2
-    (``transformWithStateInPandas`` / StatefulProcessor — the successor
-    of ``applyInPandasWithState``): schema-evolvable named state,
-    composable value/list/map states, RocksDB-backed. Both
-    implementations call the identical ``_fold_sessions`` core, and
-    tests pin their outputs byte-equal on the events corpus.
-
-    Requires the RocksDB state store provider (bundled in OSS Spark 4):
-    set ``spark.sql.streaming.stateStore.providerClass`` to
-    ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
-    before starting the query — transformWithState refuses the default
-    HDFS-backed provider."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("session", _SESSION_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            ts_list: list[int] = []
-            val_list: list[float] = []
-            for pdf in rows:
-                ts_list.extend(int(t.value // 1000) for t in pdf["ts"])
-                val_list.extend(float(v) for v in pdf["value"])
-            st = tuple(self._state.get()) if self._state.exists() else None
-            finished, new_state = _fold_sessions(ts_list, val_list, st)
-            self._state.update(new_state)
-            if finished:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id] * len(finished),
-                        "session_start": [
-                            pd.Timestamp(s, unit="us") for s, _, _, _ in finished
-                        ],
-                        "session_end": [
-                            pd.Timestamp(e, unit="us") for _, e, _, _ in finished
-                        ],
-                        "n_events": [n_ for _, _, n_, _ in finished],
-                        "total_value": [tot for _, _, _, tot in finished],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionProcessor(),
-        outputStructType=_SESSION_OUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 

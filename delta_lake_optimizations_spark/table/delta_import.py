@@ -64,6 +64,7 @@ from delta_lake_optimizations_spark.table.graft_table import (
     Commit,
     GraftTable,
     collect_file_stats,
+    dv_file_key,
 )
 
 _JSON_COMMIT = re.compile(r"^(\d{20})\.json$")
@@ -371,12 +372,6 @@ def _add_action_json(
     return out
 
 
-def _suffix2(p: str) -> str:
-    """Last two path components — the same key the read-side DV
-    anti-join and ``maintenance._delete_with_dv`` use."""
-    return os.sep.join(p.split(os.sep)[-2:])
-
-
 def _export_dvs(table, dv_files: list[AddFile]) -> dict[str, dict[str, Any]]:
     """Materialize the snapshot's graft-native DV parquet rows as ONE
     Delta DV ``.bin`` sidecar (``table/roaring.py`` bitstream) and return
@@ -396,13 +391,13 @@ def _export_dvs(table, dv_files: list[AddFile]) -> dict[str, dict[str, Any]]:
         paths = tbl.column("file_path").to_pylist()
         idxs = tbl.column("row_index").to_pylist()
         for p, i in zip(paths, idxs):
-            by_suffix.setdefault(_suffix2(p), []).append(int(i))
+            by_suffix.setdefault(dv_file_key(p), []).append(int(i))
 
     u = _uuid.uuid4()
     blobs: list[bytes] = []
     ordered: list[AddFile] = []
     for f in sorted(dv_files, key=lambda a: a.path):
-        positions = by_suffix.get(_suffix2(f.path), [])
+        positions = by_suffix.get(dv_file_key(f.path), [])
         if len(set(positions)) != f.dv_count:
             raise ValueError(
                 f"generate_delta_log: DV sidecar rows for {f.path} "

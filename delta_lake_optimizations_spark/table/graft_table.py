@@ -54,7 +54,7 @@ from datetime import date, datetime, timezone
 from typing import Any
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -150,6 +150,16 @@ def _identity_specs(props: dict[str, str]) -> dict[str, dict[str, Any]]:
 
 class ConstraintViolationError(ValueError):
     """A write contained rows violating a CHECK constraint."""
+
+
+def _refuse_if_append_only(props: dict[str, str], verb: str) -> None:
+    """delta.appendOnly parity: on a table marked append-only, every verb
+    that could drop rows (overwrite, replaceWhere, DELETE, UPDATE, MERGE)
+    is refused; plain appends pass."""
+    if props.get("delta.appendOnly", "").lower() == "true":
+        raise ConstraintViolationError(
+            f"table is delta.appendOnly=true: {verb} refused"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -386,6 +396,19 @@ def collect_file_stats(
     for name in no_null_stats:  # incomplete counts would claim false proofs
         nulls.pop(name, None)
     return num_records, {"minValues": mins, "maxValues": maxs, "nullCounts": nulls}
+
+
+def dv_file_key(path: str) -> str:
+    """The file identity deletion-vector rows are matched on: the last two
+    path components (commit-dir/filename — globally unique thanks to the
+    per-write UUIDs in both), so DVs keep matching when the table root
+    moves or a shallow clone references the file absolutely."""
+    return os.sep.join(path.rstrip(os.sep).split(os.sep)[-2:])
+
+
+def dv_file_key_col(path: Column) -> Column:
+    """``dv_file_key`` as a Column expression."""
+    return F.substring_index(path, os.sep, -2)
 
 
 # ---------------------------------------------------------------------------
@@ -872,24 +895,6 @@ class GraftTable:
         )
         return out, next_val + step * total, tagged
 
-    def _metadata_for(
-        self,
-        df: DataFrame,
-        partition_by: list[str] | None,
-        properties: dict[str, str] | None,
-        base: Snapshot | None,
-        schema_override: T.StructType | None = None,
-    ) -> dict[str, Any]:
-        props = dict(base.properties) if base else {}
-        if properties:
-            props.update(properties)
-        schema = schema_override if schema_override is not None else df.schema
-        return {
-            "schemaJson": json.dumps(schema.jsonValue()),
-            "partitionColumns": partition_by or [],
-            "properties": props,
-        }
-
     def write(
         self,
         df: DataFrame,
@@ -952,16 +957,9 @@ class GraftTable:
             )
         if mode == "error" and existed:
             raise FileExistsError(f"table exists at {self.path}")
-        # delta.appendOnly parity: a table marked append-only refuses any
-        # write that could drop rows (overwrite/replaceWhere); DML verbs
-        # check the same property (maintenance module).
-        if (
-            base is not None
-            and base.properties.get("delta.appendOnly", "").lower() == "true"
-            and (mode != "append" or replace_where is not None)
-        ):
-            raise ConstraintViolationError(
-                "table is delta.appendOnly=true: only plain appends allowed"
+        if base is not None and (mode != "append" or replace_where is not None):
+            _refuse_if_append_only(
+                base.properties, mode if replace_where is None else "replaceWhere"
             )
 
         merged_props = dict(base.properties) if base is not None else {}
@@ -1064,44 +1062,33 @@ class GraftTable:
         # write itself) — the finally releases the identity allocation's
         # pinned frames on every path, not just success (ADVICE r03).
         try:
-            evolved_schema: T.StructType | None = None
             if merge_schema and base is not None and base.schema is not None:
-                evolved_schema = _merge_schemas(
-                    base.schema,
-                    df.schema,
-                    widen=str(
-                        merged_props.get("delta.enableTypeWidening", "")
-                    ).lower()
-                    == "true",
-                )
                 # Align the batch to the evolved types: a column the batch
                 # carries NARROWER than the table upcasts here (safe, no
                 # schema change); widened columns already match the batch.
+                # The commit step evolves the committed schema the same way.
+                evolved_schema = _merge_schemas(
+                    base.schema, df.schema, widen=_type_widening(merged_props)
+                )
                 evolved_types = {f.name: f.dataType for f in evolved_schema.fields}
                 for f in df.schema.fields:
                     if f.name in evolved_types and f.dataType != evolved_types[f.name]:
                         df = df.withColumn(
                             f.name, F.col(f.name).cast(evolved_types[f.name])
                         )
-            if mode == "append" and base is not None:
+            if base is not None and (mode == "append" or replace_where is not None):
                 if partition_by is None:
                     partition_by = base.partition_columns
-                base_schema = base.schema
-                if base_schema is not None and not overwrite_schema and not merge_schema:
-                    # Compare names AND types (in order): a same-named column
-                    # with a different type would commit a new schemaJson that
-                    # _read_files then applies to historical parquet files,
-                    # corrupting old data. Type changes must go through the
-                    # explicit overwrite_schema path. (Nullability is excluded:
-                    # Spark flips it freely across transformations.)
-                    base_sig = [(f.name, f.dataType) for f in base_schema.fields]
-                    new_sig = [(f.name, f.dataType) for f in df.schema.fields]
-                    if base_sig != new_sig:
+                if base.schema is not None and not overwrite_schema and not merge_schema:
+                    # type changes must go through the explicit
+                    # overwrite_schema path
+                    mismatch = _signature_mismatch(base.schema, df.schema)
+                    if mismatch:
+                        verb = "append" if replace_where is None else "replaceWhere write"
                         raise ValueError(
-                            "schema mismatch on append (pass merge_schema=True to add "
+                            f"schema mismatch on {verb} (pass merge_schema=True to add "
                             "columns or overwrite_schema=True to replace the schema): "
-                            f"{[(n, t.simpleString()) for n, t in base_sig]} vs "
-                            f"{[(n, t.simpleString()) for n, t in new_sig]}"
+                            + mismatch
                         )
 
             # CHECK-constraint enforcement (schema-on-write ACID guarantee,
@@ -1176,17 +1163,6 @@ class GraftTable:
                         f"predicate {replace_where}"
                     )
                 if base is not None:
-                    if partition_by is None:
-                        partition_by = base.partition_columns
-                    if base.schema is not None and not overwrite_schema and not merge_schema:
-                        base_sig = [(f.name, f.dataType) for f in base.schema.fields]
-                        new_sig = [(f.name, f.dataType) for f in df.schema.fields]
-                        if base_sig != new_sig:
-                            raise ValueError(
-                                "schema mismatch on replaceWhere write: "
-                                f"{[(n, t.simpleString()) for n, t in base_sig]} vs "
-                                f"{[(n, t.simpleString()) for n, t in new_sig]}"
-                            )
                     cmap = _colmap(merged_props)
                     phys_preds = [(cmap.get(c, c), o, v) for c, o, v in replace_where]
                     phys_parts = [cmap.get(c, c) for c in base.partition_columns]
@@ -1263,73 +1239,27 @@ class GraftTable:
                     identity_updates[_IDENTITY_NEXT_PREFIX + id_col] = str(new_next)
                     merged_props[_IDENTITY_NEXT_PREFIX + id_col] = str(new_next)
 
-        if mode == "append" and base is not None:
-            remove: list[str] = []
-            operation = "WRITE"
-            params = {"mode": "Append"}
-        elif replace_where is not None and base is not None:
-            remove = expand_removes(base, [f.path for f in rw_targets], adds)
-            operation = "WRITE"
-            params = {
-                "mode": "Overwrite",
-                "replaceWhere": [
-                    [c, o, _json_safe(v)] for c, o, v in replace_where
-                ],
-            }
-        else:
-            remove = (
-                expand_removes(base, [f.path for f in base.files], adds)
-                if base is not None
-                else []
-            )
-            operation = "WRITE" if existed else "CREATE TABLE AS SELECT"
-            params = {"mode": "Overwrite" if existed else "ErrorIfExists"}
-        if extra_parameters:
-            params.update(extra_parameters)
+        params: dict[str, Any] = {}
+        if replace_where is not None and base is not None:
+            params["replaceWhere"] = [[c, o, _json_safe(v)] for c, o, v in replace_where]
+        params.update(extra_parameters or {})
         if expectation_metrics:
             # DLT-parity observability: per-expectation violation counts
             # land in the commit's operationParameters — DESCRIBE HISTORY
             # is the quality dashboard, no side channel to query
             params["expectations"] = expectation_metrics
-        # Pass ``base`` for overwrite too: Delta preserves table properties
-        # (constraints, autoCompact, stats flags) across a plain
-        # mode=overwrite — only the data and schema are replaced.
-        metadata = self._metadata_for(
-            df,
-            partition_by,
-            {**(properties or {}), **identity_updates} if (properties or identity_updates) else None,
+        commit = self._commit_write(
             base,
-            schema_override=evolved_schema,
-        )
-        # A plain append that changes NO table state (same column
-        # name/type signature — nullability excluded, Spark flips it
-        # freely — same partitioning, same properties) commits with
-        # metadata=None: replay carries the previous declaration forward,
-        # and the commit becomes a BLIND append eligible for automatic
-        # rebase past concurrent non-metadata commits (_write_commit).
-        commit_metadata: dict[str, Any] | None = metadata
-        if (
-            mode == "append"
-            and base is not None
-            and base.schema is not None
-            and not overwrite_schema
-            and not merge_schema
-            and [(f.name, f.dataType) for f in base.schema.fields]
-            == [
-                (f.name, f.dataType)
-                for f in T.StructType.fromJson(
-                    json.loads(metadata["schemaJson"])
-                ).fields
-            ]
-            and list(metadata.get("partitionColumns", []))
-            == list(base.partition_columns)
-            and metadata.get("properties", {}) == base.properties
-        ):
-            commit_metadata = None
-        commit = self._write_commit(
-            operation, params, adds, remove, commit_metadata,
-            base_version=base.version if base is not None else -1,
-            no_rebase=serializable,
+            adds,
+            df.schema,
+            mode,
+            partition_by,
+            {**(properties or {}), **identity_updates},
+            params,
+            merge_schema=merge_schema,
+            overwrite_schema=overwrite_schema,
+            replaced=rw_targets if replace_where is not None else None,
+            serializable=serializable,
         )
         # T1 parity: "statistics collected automatically at write time"
         # (reference docs/02-lab-optimizations.md:591-596). Precedence
@@ -1337,7 +1267,7 @@ class GraftTable:
         # "It overrides session configs") wins when SET — either way —
         # else the session conf (:605-610) decides, else off.
         if self._extended_stats_enabled(
-            metadata["properties"], "delta.stats.extended.collect",
+            merged_props, "delta.stats.extended.collect",
             "spark.microsoft.delta.stats.collect.extended",
         ):
             from delta_lake_optimizations_spark.stats import StatisticsStore
@@ -1346,7 +1276,7 @@ class GraftTable:
         # Bloom sidecar auto-build (graft.bloom.columns property): index
         # the freshly written files for point-lookup file skipping. The
         # build is incremental — already-indexed files are untouched.
-        bloom_cols = metadata["properties"].get(BLOOM_COLUMNS_PROP, "")
+        bloom_cols = merged_props.get(BLOOM_COLUMNS_PROP, "")
         if bloom_cols:
             from delta_lake_optimizations_spark.table.bloom import bloom_build
 
@@ -1356,9 +1286,78 @@ class GraftTable:
         # immediately bin-pack them. The OPTIMIZE is its own commit, so the
         # write above is already durable; a steady stream of small appends
         # (e.g. the streaming sink) self-heals instead of degrading scans.
-        if metadata["properties"].get("delta.autoOptimize.autoCompact") == "true":
-            self._maybe_auto_compact(metadata["properties"])
+        if merged_props.get("delta.autoOptimize.autoCompact") == "true":
+            self._maybe_auto_compact(merged_props)
         return commit
+
+    def _commit_write(
+        self,
+        base: Snapshot | None,
+        adds: list[AddFile],
+        schema: T.StructType,
+        mode: str,
+        partition_by: list[str] | None = None,
+        properties: dict[str, str] | None = None,
+        parameters: dict[str, Any] | None = None,
+        merge_schema: bool = False,
+        overwrite_schema: bool = False,
+        replaced: list[AddFile] | None = None,
+        serializable: bool = False,
+    ) -> Commit:
+        """Commit written files: the one step that turns a write into a
+        table commit, shared by ``write`` and the ``graft`` data source's
+        writer. Spark-free — it reads only the log and the AddFiles.
+
+        ``base`` is the snapshot the write read (None for a new table),
+        ``schema`` the written schema, ``mode`` 'append' or an overwrite;
+        ``replaced`` narrows an overwrite to the files a replaceWhere
+        replaces (default: every base file). ``properties`` are property
+        updates and ``parameters`` extra operationParameters.
+
+        Table properties carry over from ``base`` (Delta preserves
+        constraints, autoCompact and stats flags across a plain
+        overwrite — only data and schema are replaced). A plain append
+        that changes NO table state (same name/type signature, same
+        partitioning, same properties) commits metadata=None: replay
+        carries the previous declaration forward, and the commit is a
+        BLIND append that rebases past concurrent non-metadata commits
+        (``_write_commit``) unless ``serializable``."""
+        props = dict(base.properties) if base is not None else {}
+        props.update(properties or {})
+        if merge_schema and base is not None and base.schema is not None:
+            schema = _merge_schemas(base.schema, schema, widen=_type_widening(props))
+        if base is None:
+            remove: list[str] = []
+            operation, params = "CREATE TABLE AS SELECT", {"mode": "ErrorIfExists"}
+        elif mode == "append":
+            remove = []
+            operation, params = "WRITE", {"mode": "Append"}
+        else:
+            gone = base.files if replaced is None else replaced
+            remove = expand_removes(base, [f.path for f in gone], adds)
+            operation, params = "WRITE", {"mode": "Overwrite"}
+        params.update(parameters or {})
+        metadata: dict[str, Any] | None = {
+            "schemaJson": json.dumps(schema.jsonValue()),
+            "partitionColumns": partition_by or [],
+            "properties": props,
+        }
+        if (
+            mode == "append"
+            and base is not None
+            and base.schema is not None
+            and not overwrite_schema
+            and not merge_schema
+            and _signature_mismatch(base.schema, schema) is None
+            and (partition_by or []) == list(base.partition_columns)
+            and props == base.properties
+        ):
+            metadata = None
+        return self._write_commit(
+            operation, params, adds, remove, metadata,
+            base_version=base.version if base is not None else -1,
+            no_rebase=serializable,
+        )
 
     def _extended_stats_enabled(
         self, props: dict[str, str], table_prop: str, session_conf: str
@@ -1408,15 +1407,11 @@ class GraftTable:
                 F.col("file_path").alias("__dv_file"),
                 F.col("row_index").alias("__dv_idx"),
             )
-            # Join on the last two path components (commit-dir/filename —
-            # globally unique thanks to per-write UUIDs in both), so DVs
-            # keep matching when the table root moves or the file is
-            # referenced absolutely by a shallow clone.
-            left_key = F.substring_index(F.col("__prov_file"), os.sep, -2)
-            right_key = F.substring_index(F.col("__dv_file"), os.sep, -2)
+            key = dv_file_key_col
             df = df.join(
                 dv,
-                (left_key == right_key) & (F.col("__prov_idx") == F.col("__dv_idx")),
+                (key(F.col("__prov_file")) == key(F.col("__dv_file")))
+                & (F.col("__prov_idx") == F.col("__dv_idx")),
                 "left_anti",
             )
         if not with_provenance:
@@ -2112,6 +2107,27 @@ def _is_widening(src: T.DataType, dst: T.DataType) -> bool:
             and (dst.precision, dst.scale) != (src.precision, src.scale)
         )
     return False
+
+
+def _signature_mismatch(base: T.StructType, schema: T.StructType) -> str | None:
+    """None when ``schema`` has ``base``'s column names AND types, in order;
+    else both signatures, for an error message. Nullability is excluded:
+    Spark flips it freely across transformations. A same-named column with
+    a different type must never reach a commit — the new schemaJson would
+    be applied to historical parquet files, corrupting old data."""
+    base_sig = [(f.name, f.dataType) for f in base.fields]
+    new_sig = [(f.name, f.dataType) for f in schema.fields]
+    if base_sig == new_sig:
+        return None
+    return (
+        f"{[(n, t.simpleString()) for n, t in base_sig]} vs "
+        f"{[(n, t.simpleString()) for n, t in new_sig]}"
+    )
+
+
+def _type_widening(props: dict[str, str]) -> bool:
+    """The ``delta.enableTypeWidening`` gate of ``_merge_schemas``."""
+    return str(props.get("delta.enableTypeWidening", "")).lower() == "true"
 
 
 def _merge_schemas(

@@ -23,6 +23,9 @@ from delta_lake_optimizations_spark.table.graft_table import (
     AddFile,
     Commit,
     GraftTable,
+    _refuse_if_append_only,
+    dv_file_key,
+    dv_file_key_col,
     expand_removes,
 )
 
@@ -32,13 +35,6 @@ DEFAULT_TARGET_FILE_MB = 128  # low end of the reference's 128-512 MB guidance
 #: columns); OPTIMIZE without an explicit zorder_by re-clusters on it
 CLUSTER_BY_PROP = "graft.cluster.by"
                               # (docs/02-lab-optimizations.md:346)
-
-
-def _refuse_if_append_only(table: GraftTable, verb: str) -> None:
-    """delta.appendOnly parity: row-dropping verbs are refused."""
-    props = table.snapshot().properties
-    if props.get("delta.appendOnly", "").lower() == "true":
-        raise ValueError(f"table is delta.appendOnly=true: {verb} refused")
 
 
 
@@ -245,13 +241,6 @@ def _zorder_layout(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _suffix2(p: str) -> str:
-    """Last two path components — the relocation-proof file identity the
-    DV machinery joins on."""
-    parts = p.rstrip(os.sep).split(os.sep)
-    return os.sep.join(parts[-2:])
-
-
 def _strip_file_uri(p: str) -> str:
     """'file:///a/b' or 'file:/a/b' -> '/a/b' (input_file_name URI form)."""
     if p.startswith("file:"):
@@ -294,7 +283,7 @@ def delete(
     rewrite into an O(deleted-rows) write; run OPTIMIZE later to fold
     DVs into clean files (any rewrite clears them naturally).
     """
-    _refuse_if_append_only(table, "DELETE")
+    _refuse_if_append_only(table.snapshot().properties, "DELETE")
     snap = table.snapshot()
     df = table._read_files(snap, snap.files, with_provenance=True)
     pred = F.expr(predicate)
@@ -350,14 +339,14 @@ def _delete_with_dv(
     # (commit-dir/filename, unique via per-write UUIDs) — the same key the
     # read-side DV anti-join uses — so it survives absolute paths from
     # shallow clones and table-root moves.
-    hit_suffixes = [_suffix2(f.path) for f in hit_files]
+    hit_suffixes = [dv_file_key(f.path) for f in hit_files]
     old_dv_dirs = sorted({f.dv_path for f in hit_files if f.dv_path})
     if old_dv_dirs:
         old_rows = (
             table.spark.read.parquet(
                 *[os.path.join(table.path, d) for d in old_dv_dirs]
             )
-            .filter(F.substring_index(F.col("file_path"), os.sep, -2).isin(hit_suffixes))
+            .filter(dv_file_key_col(F.col("file_path")).isin(hit_suffixes))
             .select("file_path", "row_index")
         )
         dv_rows = dv_rows.unionByName(old_rows)
@@ -372,7 +361,7 @@ def _delete_with_dv(
     dv_rows.coalesce(1).write.mode("overwrite").parquet(abs_dv_dir)
 
     counts = {
-        _suffix2(r["file_path"]): r["cnt"]
+        dv_file_key(r["file_path"]): r["cnt"]
         for r in table.spark.read.parquet(abs_dv_dir)
         .groupBy("file_path")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -384,7 +373,7 @@ def _delete_with_dv(
             partition_values=dict(f.partition_values),
             stats=dict(f.stats),
             dv_path=rel_dv_dir,
-            dv_count=int(counts.get(_suffix2(f.path), f.dv_count)),
+            dv_count=int(counts.get(dv_file_key(f.path), f.dv_count)),
         )
         for f in hit_files
     ]
@@ -414,7 +403,7 @@ def update(
     contain matching rows; each is rewritten with
     ``CASE WHEN p THEN expr ELSE c END`` per updated column. ``set`` maps
     column name -> SQL expression string or Column."""
-    _refuse_if_append_only(table, "UPDATE")
+    _refuse_if_append_only(table.snapshot().properties, "UPDATE")
     snap = table.snapshot()
     df = table._read_files(snap, snap.files, with_provenance=True)
     pred = F.expr(predicate) if predicate is not None else F.lit(True)

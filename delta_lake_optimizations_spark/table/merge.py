@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from delta_lake_optimizations_spark.table.graft_table import (
     Commit,
     GraftTable,
+    _refuse_if_append_only,
     expand_removes,
 )
 from delta_lake_optimizations_spark.table.maintenance import _hit_files
@@ -64,13 +65,11 @@ def merge(
     you KNOW the source is dimension-sized; an unconditional broadcast of
     a large source (the 100 TB CDC story) would OOM the driver.
     """
-    from delta_lake_optimizations_spark.table.maintenance import _refuse_if_append_only
-
-    _refuse_if_append_only(table, "MERGE")
+    snap = table.snapshot()
+    _refuse_if_append_only(snap.properties, "MERGE")
     if when_matched_delete and when_matched_update:
         raise ValueError("choose update OR delete for matched rows")
 
-    snap = table.snapshot()
     target_cols = [f.name for f in snap.schema.fields] if snap.schema else None
     df = table._read_files(snap, snap.files, with_provenance=True)
     if target_cols is None:

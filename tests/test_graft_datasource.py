@@ -71,6 +71,16 @@ def test_batch_partitioned_reconstructs_partition_columns(graft, tmp_path):
     assert dict(out.dtypes)["country"] == "string"
     assert _rows(out.select("id", "country", "v")) == _rows(df)
 
+    # Spark does not pass partitionBy to Python sources: an append into a
+    # partitioned table is refused on the driver, before any task writes
+    data_dirs = sorted(os.listdir(os.path.join(path, "data")))
+    one = spark.createDataFrame([Row(id=99, country="US", v=1.0)])
+    with pytest.raises(Exception, match="unpartitioned only"):
+        one.write.format("graft").mode("append").save(path)
+    assert sorted(os.listdir(os.path.join(path, "data"))) == data_dirs
+    assert tbl.snapshot().partition_columns == ["country"]
+    assert _rows(tbl.load().select("id", "country", "v")) == _rows(df)
+
 
 def test_stream_serves_appends_and_only_new_commits(graft, tmp_path):
     spark = graft
@@ -182,16 +192,25 @@ def test_writer_creates_and_appends(graft, tmp_path):
     assert tbl.latest_version() == 1
     # round-trips through the reader too
     assert spark.read.format("graft").load(path).count() == 600
+    # same schema: a blind append with no metadata action, so a writer
+    # holding the stale v0 snapshot rebases past it instead of failing
+    assert tbl._read_commit(1).metadata is None
+    stale = tbl._write_commit("WRITE", {"mode": "Append"}, [], [], None, base_version=0)
+    assert stale.version == 2
 
 
 def test_writer_overwrite_replaces_and_keeps_history(graft, tmp_path):
     spark = graft
     path = str(tmp_path / "w")
     spark.range(0, 100).write.format("graft").mode("overwrite").save(path)
-    spark.range(0, 7).write.format("graft").mode("overwrite").save(path)
     tbl = GraftTable(spark, path)
+    delete(tbl, "id < 3", deletion_vectors=True)
+    dv_dirs = {f.dv_path for f in tbl.snapshot().files if f.dv_path}
+    spark.range(0, 7).write.format("graft").mode("overwrite").save(path)
     assert tbl.load().count() == 7
     assert tbl.load(version=0).count() == 100  # time travel across the overwrite
+    # the replaced files' deletion vectors are tombstoned for VACUUM
+    assert dv_dirs and dv_dirs <= set(tbl._read_commit(2).remove)
 
 
 def test_writer_schema_mismatch_rejected_mergeschema_evolves(graft, tmp_path):
@@ -209,6 +228,29 @@ def test_writer_schema_mismatch_rejected_mergeschema_evolves(graft, tmp_path):
     assert out.filter("t IS NULL").count() == 10
 
 
+def test_column_mapping_read_and_append(graft, tmp_path):
+    """After RENAME COLUMN the files keep the physical name: the source
+    reads it under the logical name (batch and change feed), appends
+    under the physical name, and caps footer stats by the table's
+    graft.dataSkippingNumIndexedCols."""
+    spark = graft
+    path = str(tmp_path / "cm")
+    tbl = GraftTable(spark, path)
+    tbl.write(spark.createDataFrame([(1, "a")], "id long, s string"))
+    tbl.rename_column("s", "label")
+    tbl.set_properties({"graft.dataSkippingNumIndexedCols": "1"})
+    assert _rows(spark.read.format("graft").load(path)) == [(1, "a")]
+
+    spark.createDataFrame([(2, "b")], "id long, label string").write.format(
+        "graft"
+    ).mode("append").save(path)
+    assert _rows(tbl.load()) == [(1, "a"), (2, "b")]
+    cdf = spark.read.format("graft").option("readChangeFeed", "true").load(path)
+    assert _rows(cdf.select("id", "label")) == [(1, "a"), (2, "b")]
+    added = tbl._read_commit(tbl.latest_version()).add
+    assert added and all(set(a.stats["minValues"]) == {"id"} for a in added)
+
+
 def test_writer_enforces_check_constraints(graft, tmp_path):
     from delta_lake_optimizations_spark.table.graft_table import (
         ConstraintViolationError,
@@ -223,6 +265,11 @@ def test_writer_enforces_check_constraints(graft, tmp_path):
         spark.range(-5, -1).write.format("graft").mode("append").save(path)
     assert tbl.load().count() == 10  # nothing landed
     spark.range(10, 15).write.format("graft").mode("append").save(path)
+    assert tbl.load().count() == 15
+
+    tbl.set_properties({"delta.appendOnly": "true"})
+    with pytest.raises(Exception, match="appendOnly"):
+        spark.range(0, 3).write.format("graft").mode("overwrite").save(path)
     assert tbl.load().count() == 15
 
 

@@ -316,58 +316,8 @@ def test_streaming_ivfpq_index_appends_against_stored_metadata(spark, tmp_path):
     assert ivfpq_metadata(t) == (cents, books), "replay refit metadata"
 
 
-def test_sessionize_v2_matches_v1(spark, events_dir):
-    """State API v2 (transformWithStateInPandas) sessionizer must emit
-    EXACTLY the sessions the applyInPandasWithState one emits on the
-    same micro-batched input — both call the shared _fold_sessions core,
-    and this pins the API-v2 wiring (RocksDB state store, value-state
-    round-trip, append semantics).
-
-    Environment gate: Spark's TWS driver worker imports google.protobuf
-    (its state-server protocol is protobuf-defined); this sandbox has no
-    protobuf wheel and no pip, so the full-streaming assertion runs only
-    where protobuf exists. The fold core shared by both APIs is still
-    exercised everywhere by test_sessionize_fold_core_disorder below."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState driver worker needs protobuf (not in sandbox)",
-    )
-    from delta_lake_optimizations_spark.streaming.events_stream import (
-        sessionize_stream_v2,
-    )
-
-    run_stream_to_memory(
-        sessionize_stream(read_events_stream(spark, events_dir)),
-        "sessions_v1_cmp",
-        output_mode="append",
-        timeout_sec=180,
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        run_stream_to_memory(
-            sessionize_stream_v2(read_events_stream(spark, events_dir)),
-            "sessions_v2_cmp",
-            output_mode="append",
-            timeout_sec=180,
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    v1 = sorted(tuple(r) for r in spark.table("sessions_v1_cmp").collect())
-    v2 = sorted(tuple(r) for r in spark.table("sessions_v2_cmp").collect())
-    assert v1 == v2
-    assert len(v2) > 0
-
-
 def test_sessionize_fold_core_disorder():
-    """The fold core both stateful APIs share: gap-splitting, disorder
+    """The sessionizer's fold core: gap-splitting, disorder
     tolerance (late event before the open session becomes its own
     session), state carry-over across calls."""
     from delta_lake_optimizations_spark.streaming.events_stream import (
