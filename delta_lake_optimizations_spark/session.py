@@ -3,7 +3,10 @@
 Local testing runs on ``local[N]`` but every knob here is chosen to also be
 right on a large cluster: AQE for runtime re-planning (skew joins, partition
 coalescing), UTC session time zone (required for DuckDB-oracle comparison —
-DuckDB timestamps are UTC-naive), Arrow for the Python<->JVM boundary.
+DuckDB timestamps are UTC-naive), Arrow for the Python<->JVM boundary, and a
+generated-code cache that keeps repeated plans' compiled whole-stage-codegen
+classes (large enough to hold them, keyed without stage ids) instead of
+recompiling them.
 """
 
 from __future__ import annotations
@@ -74,6 +77,17 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")
+        # Spark's generated-class cache holds 100 classes by default; a warm
+        # llm_curation cycle compiles ~213 classes (~140 distinct sources)
+        # and a pass of the 50-query oracle window ~920 at sf0.001, so at
+        # 100 every warm pass recompiles (curation: ~0.8 s per cycle). 4096
+        # holds the largest measured working set about four times over.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # the cache is keyed by the generated source; with the stage id in
+        # the class name, one pipeline that AQE numbers differently from
+        # run to run (stage ids follow the order query stages get planned)
+        # is a new source each time and compiles again
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # push large IN lists to parquet as-is instead of collapsing them
         # to a min/max range: on tc-clustered index tables the per-row-group
         # dictionary/stats check prunes row groups a range filter cannot
@@ -91,3 +105,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, milliseconds spent compiling) by Janino in this
+    session's JVM since it started: ``CodegenMetrics``' compile count and
+    ``CodeGenerator.compileTime``. Both are driver-side counters, so
+    reading them runs no Spark job; diff two readings to cost a span."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6

@@ -283,8 +283,8 @@ def delete(
     rewrite into an O(deleted-rows) write; run OPTIMIZE later to fold
     DVs into clean files (any rewrite clears them naturally).
     """
-    _refuse_if_append_only(table.snapshot().properties, "DELETE")
     snap = table.snapshot()
+    _refuse_if_append_only(snap.properties, "DELETE")
     df = table._read_files(snap, snap.files, with_provenance=True)
     pred = F.expr(predicate)
 
@@ -403,8 +403,8 @@ def update(
     contain matching rows; each is rewritten with
     ``CASE WHEN p THEN expr ELSE c END`` per updated column. ``set`` maps
     column name -> SQL expression string or Column."""
-    _refuse_if_append_only(table.snapshot().properties, "UPDATE")
     snap = table.snapshot()
+    _refuse_if_append_only(snap.properties, "UPDATE")
     df = table._read_files(snap, snap.files, with_provenance=True)
     pred = F.expr(predicate) if predicate is not None else F.lit(True)
 

@@ -5,6 +5,8 @@ Runs each of the first ``DRIVER_WINDOW`` registry queries at the given SF
 using a pandas-based canonicalization deliberately shaped like the driver's
 (sort columns by name, ``sort_values`` over all columns, stringify, hash) —
 the exact path where round-1 HUGEINT/list dtype mismatches appeared.
+After the summary it prints the run's Janino compile count and compile
+milliseconds (codegen churn), read from driver-side counters.
 
 Usage: python scripts/driver_sim.py [--sf-dir /root/testdata/sf0.01] [--all]
 """
@@ -46,6 +48,7 @@ def main() -> int:
     import __spark_entry__ as mod
     from delta_lake_optimizations_spark import TABLES, get_spark
     from delta_lake_optimizations_spark.registry import DRIVER_WINDOW
+    from delta_lake_optimizations_spark.session import codegen_compiles
 
     spark = get_spark(app_name="driver-sim", shuffle_partitions=16)
     mod.entry(spark).collect()
@@ -100,6 +103,8 @@ def main() -> int:
         f"\n{n_green} green, {n_rows_only} rows-only, {len(failures)} failed "
         f"of {len(names)} checked at {args.sf_dir}"
     )
+    n_compiles, compile_ms = codegen_compiles(spark)
+    print(f"codegen: {n_compiles} classes compiled, {compile_ms:.0f} ms compiling")
     if failures:
         print("failures:", ", ".join(failures))
     return 1 if failures else 0

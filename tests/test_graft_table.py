@@ -954,27 +954,26 @@ def test_stale_delete_vs_append_conflicts_and_append_rebases(spark, sales):
     n_low0 = sales.load().filter(F.col("l_quantity") < 10).count()
     assert n_low0 > 0
 
-    real_snapshot = type(sales).snapshot
-    # delete() reads the snapshot twice: once inside the append-only
-    # guard, once for its own rewrite set — inject AFTER the second read,
-    # the one its add/remove lists are computed from
-    state = {"calls": 0}
+    real_read_files = type(sales)._read_files
+    # land the append on the first read delete() makes: the scan its
+    # add/remove lists are computed from, over a snapshot that now lags
+    state = {"injected": False}
 
-    def snapshot_then_append(self, *a, **kw):
-        snap = real_snapshot(self, *a, **kw)
-        if not a and not kw:
-            state["calls"] += 1
-            if state["calls"] == 2:
-                GraftTable(spark, self.path).write(batch, mode="append")
-        return snap
+    def read_then_append(self, *a, **kw):
+        if not state["injected"]:
+            state["injected"] = True
+            GraftTable(spark, self.path).write(batch, mode="append")
+        return real_read_files(self, *a, **kw)
 
-    with patch.object(type(sales), "snapshot", snapshot_then_append):
+    with patch.object(type(sales), "_read_files", read_then_append):
         with pytest.raises(ConcurrentCommitError):
             delete(sales, "l_quantity < 10")
+    assert state["injected"]
     assert sales.load().count() == n0 + 5, "append survived the aborted delete"
     delete(sales, "l_quantity < 10")  # retry on a fresh snapshot
     assert sales.load().filter(F.col("l_quantity") < 10).count() == 0
 
+    real_snapshot = type(sales).snapshot
     state2 = {"injected": False}
 
     def snapshot_then_delete(self, *a, **kw):
