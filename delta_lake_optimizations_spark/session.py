@@ -6,7 +6,9 @@ coalescing), UTC session time zone (required for DuckDB-oracle comparison —
 DuckDB timestamps are UTC-naive), Arrow for the Python<->JVM boundary, and a
 generated-code cache that keeps repeated plans' compiled whole-stage-codegen
 classes (large enough to hold them, keyed without stage ids) instead of
-recompiling them.
+recompiling them. PySpark's DataFrame debugging is off: building a
+Column no longer captures its Python call site, which cost ~10 extra py4j
+round trips per Column function or operator.
 """
 
 from __future__ import annotations
@@ -88,6 +90,14 @@ def get_spark(
         # run to run (stage ids follow the order query stages get planned)
         # is a new source each time and compiles again
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # with DataFrame debugging on, every Column function and operator
+        # captures a Python stack and sends ~10 more py4j round trips (active
+        # session, conf read, call-site set/clear): ``F.col("_h") * F.lit(3)``
+        # took 27 round trips (1.8 ms) instead of 7 (0.9 ms), and building
+        # the MinHash LSH pair plan 2.2x the commands. The cost: a runtime
+        # error's DataFrame context names the JVM function instead of the
+        # Python file:line that built the Column
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # push large IN lists to parquet as-is instead of collapsing them
         # to a min/max range: on tc-clustered index tables the per-row-group
         # dictionary/stats check prunes row groups a range filter cannot

@@ -6,7 +6,9 @@ using a pandas-based canonicalization deliberately shaped like the driver's
 (sort columns by name, ``sort_values`` over all columns, stringify, hash) —
 the exact path where round-1 HUGEINT/list dtype mismatches appeared.
 After the summary it prints the run's Janino compile count and compile
-milliseconds (codegen churn), read from driver-side counters.
+milliseconds (codegen churn), read from driver-side counters, and the py4j
+call and reflection commands the Python driver sent to the JVM (driver
+chatter), counted by wrapping py4j's ``send_command`` in this script.
 
 Usage: python scripts/driver_sim.py [--sf-dir /root/testdata/sf0.01] [--all]
 """
@@ -44,12 +46,25 @@ def main() -> int:
 
     import duckdb
     import pandas as pd
+    from py4j.clientserver import ClientServerConnection
 
     import __spark_entry__ as mod
     from delta_lake_optimizations_spark import TABLES, get_spark
     from delta_lake_optimizations_spark.registry import DRIVER_WINDOW
     from delta_lake_optimizations_spark.session import codegen_compiles
 
+    # py4j call ("c") and reflection ("r") commands, the round trips that
+    # building and running plans pay; GC ("m") commands are left out
+    py4j_commands = 0
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        nonlocal py4j_commands
+        if command[:1] in ("c", "r"):
+            py4j_commands += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting_send
     spark = get_spark(app_name="driver-sim", shuffle_partitions=16)
     mod.entry(spark).collect()
     print("smoke: entry() ok", flush=True)
@@ -105,6 +120,7 @@ def main() -> int:
     )
     n_compiles, compile_ms = codegen_compiles(spark)
     print(f"codegen: {n_compiles} classes compiled, {compile_ms:.0f} ms compiling")
+    print(f"py4j: {py4j_commands} commands")
     if failures:
         print("failures:", ", ".join(failures))
     return 1 if failures else 0

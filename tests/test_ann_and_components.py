@@ -12,7 +12,7 @@ from delta_lake_optimizations_spark.operators.components import (
     connected_components,
     dedup_assign_clusters,
 )
-from delta_lake_optimizations_spark.operators.dedup import minhash_lsh_pairs
+from delta_lake_optimizations_spark.operators.dedup import minhash_lsh_pairs, simhash, simhash_near_pairs
 from delta_lake_optimizations_spark.operators.ivf import ivf_build, ivf_search
 from delta_lake_optimizations_spark.operators.similarity import query_vector, topk_cosine
 
@@ -657,6 +657,28 @@ def test_minhash_lsh_pairs_pinned_rows_star_path(spark):
     for cap, pin in _PINNED_FLOOD_PAIRS.items():
         rows = _pair_rows(df, cap)
         assert (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()) == pin, cap
+
+
+# (row count, sha256 of the sorted row list's repr) on the fixture corpus:
+# simhash rows (doc_id, simhash) and simhash_near_pairs rows (doc_a, doc_b,
+# hamming) at max_hamming 8, recorded while both operators still built their
+# expressions as Column trees, before they became SQL expression strings.
+_PINNED_SIMHASH = {
+    "simhash": (500, "f5ee5f0d3bef2bf543d0f77843d7730adf36da25e4686b9dd89b7e81f67b88e0"),
+    "simhash_near_pairs": (401, "1d6f9fd0f86eed9f2a1bb00f0ae3f4efb84af39eaa062590cbdd9f6dcf4570c9"),
+}
+
+
+def test_simhash_pinned_rows(spark):
+    import hashlib
+
+    docs = load_table(spark, SF_DIR, "documents")
+    for name, df in (
+        ("simhash", simhash(docs, "doc_id", "text")),
+        ("simhash_near_pairs", simhash_near_pairs(docs, "doc_id", "text", max_hamming=8)),
+    ):
+        rows = sorted(tuple(r) for r in df.collect())
+        assert (len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()) == _PINNED_SIMHASH[name], name
 
 
 def test_connected_components_multi_round_path(spark):
